@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, LinkOption, NoSuchFileException, Paths}
+import java.nio.file.{DirectoryIteratorException, Files, NoSuchFileException}
 import java.nio.file.attribute.{PosixFileAttributes, PosixFilePermission}
 
 import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path, RawLocalFileSystem}
@@ -42,15 +42,14 @@ class FastRawLocalFileSystem extends RawLocalFileSystem {
     PosixFilePermission.OTHERS_WRITE -> 0x2,
     PosixFilePermission.OTHERS_EXECUTE -> 0x1)
 
+  private def notFound(f: Path) =
+    new java.io.FileNotFoundException(s"File $f does not exist")
+
   private def statusOf(f: Path): FileStatus = {
     val file = pathToFile(f)
     val attrs =
       try Files.readAttributes(file.toPath, classOf[PosixFileAttributes])
-      catch {
-        case _: NoSuchFileException =>
-          throw new java.io.FileNotFoundException(
-            s"File $f does not exist")
-      }
+      catch { case _: NoSuchFileException => throw notFound(f) }
     val perms = attrs.permissions()
     var bits = 0
     permBits.foreach { case (p, b) => if (perms.contains(p)) bits |= b }
@@ -63,28 +62,39 @@ class FastRawLocalFileSystem extends RawLocalFileSystem {
 
   override def getFileStatus(f: Path): FileStatus = statusOf(f)
 
-  override def listStatus(f: Path): Array[FileStatus] = {
-    val file = pathToFile(f)
-    val nio = file.toPath
-    val base =
-      try Files.readAttributes(nio, classOf[PosixFileAttributes])
-      catch {
-        case _: NoSuchFileException =>
-          throw new java.io.FileNotFoundException(
-            s"File $f does not exist")
-      }
-    if (!base.isDirectory) return Array(statusOf(f))
-    val out = Array.newBuilder[FileStatus]
-    val stream = Files.newDirectoryStream(nio)
+  /** Stock Hadoop's contract: a path that is gone — before the
+    * attribute read, between it and the listing, or mid-iteration
+    * (which java.nio wraps in a DirectoryIteratorException) — throws
+    * FileNotFoundException, the only exception Spark's
+    * InMemoryFileIndex handles as a listing race; a child that
+    * vanishes after the listing is skipped. */
+  override def listStatus(f: Path): Array[FileStatus] =
     try {
-      val it = stream.iterator()
-      while (it.hasNext) {
-        val child = it.next()
-        try out += statusOf(new Path(f, child.getFileName.toString))
-        catch { case _: java.io.FileNotFoundException => () } // raced away
+      val nio = pathToFile(f).toPath
+      if (!Files.readAttributes(nio, classOf[PosixFileAttributes]).isDirectory)
+        Array(statusOf(f))
+      else childNames(nio).flatMap { name =>
+        try Some(statusOf(new Path(f, name)))
+        catch { case _: java.io.FileNotFoundException => None } // raced away
       }
+    } catch {
+      case _: NoSuchFileException => throw notFound(f)
+      case e: DirectoryIteratorException => e.getCause match {
+        case _: NoSuchFileException => throw notFound(f)
+        case cause => throw cause
+      }
+    }
+
+  /** The entry names of directory `dir`, read through one stream —
+    * its own method so a test can make the directory vanish between
+    * the attribute read and the listing. */
+  private[graft] def childNames(dir: java.nio.file.Path): Array[String] = {
+    val stream = Files.newDirectoryStream(dir)
+    try {
+      val names = Array.newBuilder[String]
+      stream.forEach(child => names += child.getFileName.toString)
+      names.result()
     } finally stream.close()
-    out.result()
   }
 }
 

@@ -213,16 +213,20 @@ object Bm25 {
   }
 
   /** ONE-COMMIT NIGHTLY CYCLE — N disjoint-id appends plus an optional
-    * takedown applied as a SINGLE atomic generation. The staged segment
-    * set matches the sequential [[appendIndex]]×N + [[deleteDocs]]
-    * chain segment for segment: one postings segment and one positive
-    * df delta per increment, one negative df delta + tombstone delta
-    * for the takedown, the stats row re-merged once with the final
-    * value — identical rows and identical per-table segment counts
+    * takedown applied as a SINGLE atomic generation; the one delta path
+    * of the BM25 index ([[appendIndex]] is its one-increment cycle,
+    * [[deleteDocs]] its delete-only one). The staged segment set
+    * matches the sequential [[appendIndex]]×N + [[deleteDocs]] chain
+    * segment for segment: one postings segment and one positive df
+    * delta per increment, one negative df delta + tombstone delta for
+    * the takedown, the stats row re-merged once with the final value —
+    * identical rows and identical per-table segment counts
     * (health/fsck cards are unchanged), computed by the same exact
-    * integer algebra. What changes is the chain length (guide
-    * §1.2/§2.6): ONE claim + manifest flip + GC instead of N+1, every
-    * staged write overlapped, stamps hashed in flight, and the
+    * integer algebra. A table staging a single delta keeps the
+    * `<table>-g<gen>` name; the takedown's df delta takes `df-x-g<gen>`
+    * only beside increment df deltas. What changes is the chain length
+    * (guide §1.2/§2.6): ONE claim + manifest flip + GC instead of N+1,
+    * every staged write overlapped, stamps hashed in flight, and the
     * takedown's decrement recovery reads this cycle's increments from
     * the pinned tf blocks instead of re-reading their freshly written
     * parquet. */
@@ -254,10 +258,10 @@ object Bm25 {
         IndexCommit.requireDisjointFromTombstones(spark, dir, prev,
           bases.map(_.select(col("doc_id"))).reduce(_ unionByName _),
           "doc_id", "applyDeltas")
-      // takedown leg, pinned BEFORE the parallel stage ([[deleteDocs]]'
-      // shape): the decrements are recovered from the prior postings
-      // PLUS this cycle's increments — the same physical rows the
-      // sequential chain's delete read back from disk
+      // takedown leg, pinned BEFORE the parallel stage (both pins feed
+      // two parallel branches each): the decrements are recovered from
+      // the prior postings PLUS this cycle's increments — the same
+      // physical rows the sequential chain's delete read back from disk
       val delLeg = deleteIds.map { ids =>
         val newIds = ids.select(col(ids.columns.head).cast("long")
           .as("doc_id")).distinct()
@@ -300,6 +304,9 @@ object Bm25 {
               st.stampSegment(s"df$suffix-g$gen")
             })
         }
+      // the takedown's NEGATIVE df delta — delete-sized write volume
+      // no matter the vocabulary size ([[foldDf]] nets it out at read)
+      val dfX = if (tfIncs.isEmpty) "df" else "df-x"
       val delWrites: Seq[() => Unit] = delLeg.toSeq.flatMap {
         case (newIds, fresh, delRows) =>
           Seq[() => Unit](
@@ -309,8 +316,8 @@ object Bm25 {
                 .repartition(IndexCommit.deltaWidth(newIds), col("term"))
                 .sortWithinPartitions(col("term"))
                 .write.mode("overwrite")
-                .parquet(IndexCommit.segmentPath(dir, "df-x", gen))
-              st.stampSegment(s"df-x-g$gen")
+                .parquet(IndexCommit.segmentPath(dir, dfX, gen))
+              st.stampSegment(s"$dfX-g$gen")
             },
             () => {
               fresh.repartition(IndexCommit.deltaWidth(newIds))
@@ -320,17 +327,21 @@ object Bm25 {
             })
       }
       val statsWrite: () => Unit = () => {
-        val incStats = bases.map(_.agg(count(lit(1)).as("n_docs"),
-          sum(col("dl").cast("long")).as("sum_dl")))
-        val merged = (IndexCommit.readTable(spark, dir, "stats") +: incStats)
-          .reduce(_ unionByName _)
-          .agg(sum(col("n_docs")).as("n_docs"),
-            sum(col("sum_dl")).as("sum_dl"))
+        val prior = IndexCommit.readTable(spark, dir, "stats")
+        val merged =
+          if (bases.isEmpty) prior
+          else (prior +: bases.map(_.agg(count(lit(1)).as("n_docs"),
+              sum(col("dl").cast("long")).as("sum_dl"))))
+            .reduce(_ unionByName _)
+            .agg(sum(col("n_docs")).as("n_docs"),
+              sum(col("sum_dl")).as("sum_dl"))
         val finalStats = delLeg match {
           case Some((_, _, delRows)) =>
             val delStats = delRows.groupBy(col("doc_id"))
               .agg(first(col("dl")).as("dl"))
               .agg(count(lit(1)).as("dn"),
+                // sum over zero rows is NULL, not 0 — an empty delete
+                // set must leave the stats untouched, not null them
                 coalesce(sum(col("dl").cast("long")), lit(0L)).as("ddl"))
             PlanHints.withScalars(merged, delStats)
               .select((col("n_docs") - col("dn")).as("n_docs"),
@@ -345,7 +356,7 @@ object Bm25 {
       val sfx = (i: Int) => if (tfIncs.size == 1) "" else s"-d$i"
       val postSegs = tfIncs.indices.map(i => s"postings${sfx(i)}-g$gen")
       val dfSegs = tfIncs.indices.map(i => s"df${sfx(i)}-g$gen") ++
-        delLeg.map(_ => s"df-x-g$gen").toSeq
+        delLeg.map(_ => s"$dfX-g$gen").toSeq
       prev.tables ++ Map(
         "postings" -> (prev.tables("postings") ++ postSegs),
         "df" -> (prev.tables("df") ++ dfSegs),
@@ -382,62 +393,11 @@ object Bm25 {
     * [[IndexCommit.requireDisjointFromTombstones]]): re-ingesting a
     * deleted id requires a [[compactIndex]] first to physically drop
     * its pre-delete rows, or the unmasked old and new rows would both
-    * score. */
+    * score. The one-increment [[applyDeltas]] cycle. */
   def appendIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                   docs: DataFrame, idCol: String, textCol: String,
-                  retainGens: Int = 1): Unit = {
-    val base = corpusBase(docs, idCol, textCol)
-    val tfPlan = base.select(col("doc_id"), col("dl"),
-        explode(col("toks")).as("term"))
-      .groupBy(col("doc_id"), col("dl"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-    val dfWidth = IndexCommit.deltaWidth(tfPlan.groupBy(col("term"))
-      .agg(count(lit(1)).as("df")))
-    // EAGER pin: postings AND df branches read materialized blocks
-    val tfInc = tfPlan.localCheckpoint(eager = true)
-    val st = new IndexCommit.SegmentStamper(spark, dir)
-    IndexCommit.commit(spark, dir, () => st.stamps()) { (gen, cur) =>
-      val prev = cur.getOrElse(sys.error(
-        s"appendIndex: no committed index at $dir — writeIndex first"))
-      IndexCommit.requireDisjointFromTombstones(spark, dir, prev,
-        base.select(col("doc_id")), "doc_id", "appendIndex")
-      // three independent staged tables — overlap the writes; each
-      // branch stamps its own segment in flight
-      Par.all(Seq[() => Unit](
-        () => {
-          tfInc.select(col("term"), col("doc_id"), col("dl"), col("tf"))
-            .repartition(IndexCommit.writeWidth(docs), col("term"))
-            .sortWithinPartitions(col("term"))
-            .write.mode("overwrite")
-            .parquet(IndexCommit.segmentPath(dir, "postings", gen))
-          st.stampSegment(s"postings-g$gen")
-        },
-        () => {
-          tfInc.groupBy(col("term"))
-            .agg(countDistinct(col("doc_id")).as("df"))
-            .repartition(dfWidth, col("term"))
-            .sortWithinPartitions(col("term"))
-            .write.mode("overwrite")
-            .parquet(IndexCommit.segmentPath(dir, "df", gen))
-          st.stampSegment(s"df-g$gen")
-        },
-        () => {
-          IndexCommit.readTable(spark, dir, "stats")
-            .unionByName(base.agg(count(lit(1)).as("n_docs"),
-              sum(col("dl").cast("long")).as("sum_dl")))
-            .agg(sum(col("n_docs")).as("n_docs"),
-              sum(col("sum_dl")).as("sum_dl"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(IndexCommit.segmentPath(dir, "stats", gen))
-          st.stampSegment(s"stats-g$gen")
-        }))
-      prev.tables ++ Map(
-        "postings" -> (prev.tables("postings") :+ s"postings-g$gen"),
-        "df" -> (prev.tables("df") :+ s"df-g$gen"),
-        "stats" -> Seq(s"stats-g$gen"))
-    }
-    IndexCommit.gcUnreferenced(spark, dir, retainGens)
-  }
+                  retainGens: Int = 1): Unit =
+    applyDeltas(spark, dir, Seq(docs), idCol, textCol, None, retainGens)
 
   /** DELETE documents from a persisted index — the
     * takedown/opt-out/right-to-be-forgotten primitive a corpus index
@@ -454,72 +414,12 @@ object Bm25 {
     * postings minus tombstones, drops the table), reclaiming the
     * bytes. Idempotent: already-tombstoned ids are excluded before
     * the decrements, so a retried delete can't double-subtract. All
-    * four staged tables land in one manifest flip. */
+    * four staged tables land in one manifest flip — the delete-only
+    * [[applyDeltas]] cycle. */
   def deleteDocs(spark: org.apache.spark.sql.SparkSession, dir: String,
-                 ids: DataFrame, retainGens: Int = 1): Unit = {
-    val newIds = ids.select(col(ids.columns.head).cast("long")
-      .as("doc_id")).distinct()
-    val st = new IndexCommit.SegmentStamper(spark, dir)
-    IndexCommit.commit(spark, dir, () => st.stamps()) { (gen, cur) =>
-      val prev = cur.getOrElse(sys.error(
-        s"deleteDocs: no committed index at $dir — writeIndex first"))
-      val hasTombs = prev.tables.contains("tombstones")
-      val priorTombs =
-        if (hasTombs) IndexCommit.readTable(spark, dir, "tombstones")
-        else newIds.limit(0)
-      // EAGER pins: both feed two parallel branches each
-      val fresh = newIds.join(priorTombs, Seq("doc_id"), "left_anti")
-        .localCheckpoint(eager = true) // feeds decrements + tombstones
-      // the deleted docs' exact contributions, recovered from postings
-      val delRows = IndexCommit.readTable(spark, dir, "postings")
-        .join(fresh, Seq("doc_id"))
-        .localCheckpoint(eager = true) // feeds df AND stats decrements
-      // three independent staged tables — overlap the writes
-      Par.all(Seq[() => Unit](
-        // a NEGATIVE df delta — delete-sized write volume no matter
-        // the vocabulary size; [[foldDf]] nets it out at read,
-        // compaction materializes
-        () => {
-          delRows.groupBy(col("term"))
-            .agg((-countDistinct(col("doc_id"))).as("df"))
-            .repartition(IndexCommit.deltaWidth(newIds), col("term"))
-            .sortWithinPartitions(col("term"))
-            .write.mode("overwrite")
-            .parquet(IndexCommit.segmentPath(dir, "df", gen))
-          st.stampSegment(s"df-g$gen")
-        },
-        () => {
-          val delStats = delRows.groupBy(col("doc_id"))
-            .agg(first(col("dl")).as("dl"))
-            .agg(count(lit(1)).as("dn"),
-              // sum over zero rows is NULL, not 0 — an empty delete
-              // set must leave the stats untouched, not null them
-              coalesce(sum(col("dl").cast("long")), lit(0L)).as("ddl"))
-          PlanHints.withScalars(
-              IndexCommit.readTable(spark, dir, "stats"), delStats)
-            .select((col("n_docs") - col("dn")).as("n_docs"),
-              (col("sum_dl") - col("ddl")).as("sum_dl"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(IndexCommit.segmentPath(dir, "stats", gen))
-          st.stampSegment(s"stats-g$gen")
-        },
-        // the fresh ids alone, as a DELTA segment beside any prior
-        // ones (anti-join masking works on the un-folded union)
-        () => {
-          fresh
-            .repartition(IndexCommit.deltaWidth(newIds))
-            .write.mode("overwrite")
-            .parquet(IndexCommit.segmentPath(dir, "tombstones", gen))
-          st.stampSegment(s"tombstones-g$gen")
-        }))
-      prev.tables ++ Map(
-        "df" -> (prev.tables("df") :+ s"df-g$gen"),
-        "stats" -> Seq(s"stats-g$gen"),
-        "tombstones" ->
-          (prev.tables.getOrElse("tombstones", Nil) :+ s"tombstones-g$gen"))
-    }
-    IndexCommit.gcUnreferenced(spark, dir, retainGens)
-  }
+                 ids: DataFrame, retainGens: Int = 1): Unit =
+    // no increments, so the id/text column names are never read
+    applyDeltas(spark, dir, Nil, "doc_id", "text", Some(ids), retainGens)
 
   /** COMPACT the postings table back to ONE term-sorted segment — the
     * maintenance job nightly [[appendIndex]] runs accumulate toward:
@@ -758,11 +658,7 @@ object Bm25 {
     * (or a bug in a delta path) caught before it serves. */
   def fsck(spark: org.apache.spark.sql.SparkSession,
            dir: String, atGen: Option[Long] = None): DataFrame = {
-    val m = atGen match {
-      case Some(g) => IndexCommit.manifestAt(spark, dir, g)
-      case None => IndexCommit.currentManifest(spark, dir).getOrElse(
-        sys.error(s"fsck: no committed index at $dir"))
-    }
+    val m = IndexCommit.manifestFor(spark, dir, atGen, "fsck")
     def table(t: String) = IndexCommit.readTableAt(spark, dir, t, m.gen)
     // the postings union feeds the stats recount, the df recount AND
     // the orphan check, each its own scalar-subtree job — pin it once
@@ -800,24 +696,14 @@ object Bm25 {
             Seq("doc_id"), "left_anti")
           .agg(count(lit(1)).cast("long").as("orphaned"))
       else spark.range(1).select(col("id").cast("long").as("orphaned"))
-    val seed = spark.range(1).toDF("_one")
     val scalars = Seq(docAgg, stats, dfCmp, orphans)
-      .foldLeft(seed)(PlanHints.withScalars)
-    def check(name: String, expected: org.apache.spark.sql.Column,
-              actual: org.apache.spark.sql.Column): DataFrame =
-      scalars.select(lit(name).as("check"),
-        expected.cast("long").as("expected"),
-        actual.cast("long").as("actual"),
-        (expected === actual).as("ok"))
-    check("stats_n_docs", col("exp_n_docs"), col("act_n_docs"))
-      .unionByName(check("stats_sum_dl", col("exp_sum_dl"),
-        col("act_sum_dl")))
-      .unionByName(check("df_terms", col("exp_terms"),
-        col("act_terms")))
-      .unionByName(check("df_mismatch_terms", lit(0L),
-        col("mismatch_terms")))
-      .unionByName(check("tombstones_orphaned", lit(0L),
-        col("orphaned")))
+      .foldLeft(spark.range(1).toDF("_one"))(PlanHints.withScalars)
+    IndexCommit.checkRows(scalars, Seq(
+        ("stats_n_docs", col("exp_n_docs"), col("act_n_docs")),
+        ("stats_sum_dl", col("exp_sum_dl"), col("act_sum_dl")),
+        ("df_terms", col("exp_terms"), col("act_terms")),
+        ("df_mismatch_terms", lit(0L), col("mismatch_terms")),
+        ("tombstones_orphaned", lit(0L), col("orphaned"))))
       .unionByName(IndexCommit.checksumCard(spark, dir, m))
   }
 
@@ -841,11 +727,7 @@ object Bm25 {
                     queries: Seq[(String, Seq[String])],
                     atGen: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val m = atGen match {
-      case Some(g) => IndexCommit.manifestAt(spark, dir, g)
-      case None => IndexCommit.currentManifest(spark, dir)
-        .getOrElse(sys.error(s"serveCostCard: no committed index at $dir"))
-    }
+    val m = IndexCommit.manifestFor(spark, dir, atGen, "serveCostCard")
     val terms = queries.flatMap { case (qid, ts) =>
       ts.distinct.map(qid -> _)
     }.toDF("qid", "term")
@@ -870,11 +752,7 @@ object Bm25 {
             queries: Seq[(String, Seq[String])], k: Int = 10,
             k1: Double = 1.2, b: Double = 0.75,
             atGen: Option[Long] = None): DataFrame = {
-    val manifest = atGen match {
-      case Some(g) => IndexCommit.manifestAt(spark, dir, g)
-      case None => IndexCommit.currentManifest(spark, dir)
-        .getOrElse(sys.error(s"serve: no committed index at $dir"))
-    }
+    val manifest = IndexCommit.manifestFor(spark, dir, atGen, "serve")
     def table(t: String) =
       IndexCommit.readTableAt(spark, dir, t, manifest.gen)
     val terms = queries.flatMap(_._2).distinct

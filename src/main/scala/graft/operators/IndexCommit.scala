@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Atomic multi-table commits and size-derived write widths for the
   * persisted index families (BM25 postings, LSH buckets, IVF cells,
@@ -55,6 +55,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * it under a single lookup key) rebuilt as a table-format primitive:
   * the "single key" is the manifest file, and the thing it versions is
   * a multi-table columnar index.
+  *
+  * == Delta path ==
+  *
+  * Every append and every delete of a persisted index is a delta
+  * cycle through ONE body, [[commitDeltas]]: an append is the
+  * one-increment cycle, a delete ([[appendTombstones]]) the
+  * delete-only one, and the families' `xAppendIndex`/`xApplyDeltas`
+  * only supply their encode. BM25, whose df/stats aggregates are
+  * re-merged rather than appended, has the one cycle of its own
+  * (`Bm25.applyDeltas`, which its append and delete delegate to).
+  * Only builds, compaction, merge and clone call [[commit]] besides.
   *
   * == Write width ==
   *
@@ -160,6 +171,17 @@ object IndexCommit {
     parseManifest(fs, p, gen, dir)
   }
 
+  /** The manifest a read pinned at `atGen` resolves: that generation
+    * ([[manifestAt]]) when given, else the current one — a loud error
+    * naming `op` when the directory holds no committed index. */
+  private[operators] def manifestFor(spark: SparkSession, dir: String,
+      atGen: Option[Long], op: String): Manifest =
+    atGen match {
+      case Some(g) => manifestAt(spark, dir, g)
+      case None => currentManifest(spark, dir)
+        .getOrElse(sys.error(s"$op: no committed index at $dir"))
+    }
+
   /** [[readTable]] pinned to generation `gen` — the union of the
     * segments THAT manifest lists for `table`. */
   def readTableAt(spark: SparkSession, dir: String, table: String,
@@ -235,11 +257,12 @@ object IndexCommit {
           i > 0 && segSet.contains(rel.substring(0, i))
         }
       val provided = precomputedFiles()
+      // a segment the stage already stamped (a [[SegmentStamper]]
+      // listed and hashed it in flight) is not listed a second time
+      val stamped = provided.keySet.map(rel => rel.substring(0, rel.indexOf('/')))
       val toHash = timed(s"commit:list-toHash g$gen")(
-        (segSet -- prevSegs).toSeq.sorted
-          .flatMap(seg => listSegmentFiles(fs, p, seg))
-          .filterNot { case (_, rel, _) =>
-            provided.contains(rel) || carried.contains(rel) })
+        (segSet -- prevSegs -- stamped).toSeq.sorted
+          .flatMap(seg => listSegmentFiles(fs, p, seg)))
       val fileMap = carried ++ provided ++
         timed(s"commit:checksum g$gen")(checksumFiles(spark, toHash))
       val stampLines = fileMap.toSeq.sortBy(_._1).map {
@@ -293,33 +316,38 @@ object IndexCommit {
     }
   }
 
-  /** ONE-COMMIT DELTA CYCLE for the single-row-table index families —
-    * N appended segments plus an optional takedown, staged in parallel
-    * and flipped as ONE generation. The round-17 profile showed the
-    * composed lifecycle entries are chains of ~60-100 small SERIAL
-    * jobs, one commit (claim, staged write, checksum job, manifest
-    * flip, GC listing) per append/delete (guide §1.2/§2.6): a nightly
+  /** THE DELTA PATH: every append and every delete of the LSH, IVF,
+    * PQ, IVFPQ, MRL and dedup indexes goes through this one body — N
+    * appended segments plus an optional takedown, staged in parallel
+    * and flipped as ONE generation. An append is the one-increment
+    * cycle, a delete ([[appendTombstones]]) the delete-only one. The
+    * round-17 profile showed the composed lifecycle entries are chains
+    * of ~60-100 small SERIAL jobs, one commit (claim, staged write,
+    * checksum job, manifest flip, GC listing) per append/delete (guide
+    * §1.2/§2.6): a nightly
     * cycle of two appends and a takedown paid that chain three times.
     * Here it is paid once, every staged write overlaps ([[Par]]), and
     * stamps are hashed in flight ([[SegmentStamper]]).
     *
     * RESULT-PRESERVING by construction: the staged segment SET is the
     * sequential chain's, segment for segment — one `<table>-d<i>-g<gen>`
-    * per increment (same per-table segment counts, so health cards'
-    * segment-debt numbers are unchanged) with identical rows, and the
-    * takedown's tombstone delta is exactly [[appendTombstones]]'s.
-    * Only the number of manifest generations differs; no declared
-    * query reads generation numbers (entries resolve pins from the
-    * manifests they commit).
+    * per increment, or `<table>-g<gen>` when the cycle stages a single
+    * delta of that table (same per-table segment counts, so health
+    * cards' segment-debt numbers are unchanged), and the takedown's
+    * tombstone delta is `tombstones-g<gen>`. Only the number of
+    * manifest generations differs; no declared query reads generation
+    * numbers (entries resolve pins from the manifests they commit).
     *
-    * `segments` carries (table, write(destPath)) per staged increment
-    * segment — increments of one table keep their sequence order.
-    * The takedown is ordered AFTER the appends, like the sequential
-    * chain: `deleteIds` are anti-joined against PRIOR tombstones only
-    * (idempotent re-delete), and the disjointness gate checks the
-    * increments against those same prior tombstones. */
+    * `increments` are the appended frames (their `keyCol` column is
+    * gated against the prior tombstones — the re-ingest contract,
+    * [[requireDisjointFromTombstones]]); `segments` carries (table,
+    * write(destPath)) per staged increment segment — increments of one
+    * table keep their sequence order. The takedown is ordered AFTER
+    * the appends, like the sequential chain: `deleteIds` (first
+    * column, cast to long) are anti-joined against PRIOR tombstones
+    * only (idempotent re-delete). */
   def commitDeltas(spark: SparkSession, dir: String, op: String,
-                   keyCol: String, incrementIds: Option[DataFrame],
+                   keyCol: String, increments: Seq[DataFrame],
                    segments: Seq[(String, String => Unit)],
                    deleteIds: Option[DataFrame],
                    retainGens: Int = 1): Unit = {
@@ -329,8 +357,10 @@ object IndexCommit {
     commit(spark, dir, () => st.stamps()) { (gen, cur) =>
       val prev = cur.getOrElse(sys.error(
         s"$op: no committed index at $dir — build it first"))
-      incrementIds.foreach(ids =>
-        requireDisjointFromTombstones(spark, dir, prev, ids, keyCol, op))
+      if (increments.nonEmpty)
+        requireDisjointFromTombstones(spark, dir, prev,
+          increments.map(_.select(keyCol)).reduce(_ unionByName _),
+          keyCol, op)
       val delLeg = deleteIds.map { ids =>
         val newIds = ids.select(ids.col(ids.columns.head).cast("long")
           .as(keyCol)).distinct()
@@ -427,11 +457,7 @@ object IndexCommit {
     * cluster-wide parallel I/O, not a driver bottleneck. */
   def cloneSnapshot(spark: SparkSession, src: String, dest: String,
                     atGen: Option[Long] = None): Unit = {
-    val m = atGen match {
-      case Some(g) => manifestAt(spark, src, g)
-      case None => currentManifest(spark, src)
-        .getOrElse(sys.error(s"cloneSnapshot: no committed index at $src"))
-    }
+    val m = manifestFor(spark, src, atGen, "cloneSnapshot")
     val (sfs, sp) = fsOf(spark, src)
     var copied: Map[String, (Long, Long)] = Map.empty
     commit(spark, dest, () => copied) { (gen, cur) =>
@@ -629,22 +655,25 @@ object IndexCommit {
             coalesce(sum(col("l")), lit(0L)).cast("long").as("len_mm"),
             coalesce(sum(col("c")), lit(0L)).cast("long").as("crc_mm"))
       }
-    val seed = spark.range(1).toDF("_one")
-    val scalars = PlanHints.withScalars(seed, mismAgg)
-    def check(name: String,
-              actual: org.apache.spark.sql.Column): DataFrame =
+    checkRows(PlanHints.withScalars(spark.range(1).toDF("_one"), mismAgg),
+      Seq(("segment_checksum_mismatches", lit(0L), col("crc_mm")),
+        ("segment_files_missing", lit(0L), col("miss_n")),
+        ("segment_files_unstamped", lit(0L), lit(unstamped)),
+        ("segment_length_mismatches", lit(0L), col("len_mm"))))
+  }
+
+  /** The fsck cards' (check, expected, actual, ok) rows over the one
+    * row of `scalars`: one row per (name, expected, actual) check, in
+    * the order given. */
+  private[operators] def checkRows(scalars: DataFrame,
+      checks: Seq[(String, Column, Column)]): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    checks.map { case (name, expected, actual) =>
       scalars.select(lit(name).as("check"),
-        lit(0L).cast("long").as("expected"),
+        expected.cast("long").as("expected"),
         actual.cast("long").as("actual"),
-        (lit(0L) === actual).as("ok"))
-    check("segment_checksum_mismatches", col("crc_mm"))
-      .unionByName(check("segment_files_missing", col("miss_n")))
-      .unionByName(scalars.select(
-        lit("segment_files_unstamped").as("check"),
-        lit(0L).cast("long").as("expected"),
-        lit(unstamped).cast("long").as("actual"),
-        lit(unstamped == 0L).as("ok")))
-      .unionByName(check("segment_length_mismatches", col("len_mm")))
+        (expected === actual).as("ok"))
+    }.reduce(_ unionByName _)
   }
 
   /** Payload target per clone-copy task — one task per ~this many
@@ -839,34 +868,19 @@ object IndexCommit {
   }
 
   /** Merge `ids` into the index's `tombstones` table in one commit —
-    * the generic deletion primitive every family's delete wraps. The
-    * not-already-tombstoned ids (so re-deletes are idempotent) land as
-    * a NEW DELTA SEGMENT and the manifest flips once — a delete writes
-    * delete-sized volume no matter how large the accumulated tombstone
-    * set is (the logical table is the union of its delta segments;
-    * anti-join masking needs no fold). The caller's serve path masks
-    * with [[maskTombstones]]; a later compaction materializes the mask
-    * and drops the table. */
+    * the generic deletion primitive every family's delete wraps, the
+    * delete-only [[commitDeltas]] cycle. The not-already-tombstoned
+    * ids (so re-deletes are idempotent) land as a NEW DELTA SEGMENT
+    * and the manifest flips once — a delete writes delete-sized
+    * volume no matter how large the accumulated tombstone set is (the
+    * logical table is the union of its delta segments; anti-join
+    * masking needs no fold). The caller's serve path masks with
+    * [[maskTombstones]]; a later compaction materializes the mask and
+    * drops the table. */
   def appendTombstones(spark: SparkSession, dir: String, ids: DataFrame,
-                       keyCol: String, retainGens: Int = 1): Unit = {
-    val newIds = ids.select(ids.col(ids.columns.head).cast("long")
-      .as(keyCol)).distinct()
-    commit(spark, dir) { (gen, cur) =>
-      val prev = cur.getOrElse(sys.error(
-        s"appendTombstones: no committed index at $dir"))
-      val fresh =
-        if (prev.tables.contains("tombstones"))
-          newIds.join(readTable(spark, dir, "tombstones"), Seq(keyCol),
-            "left_anti")
-        else newIds
-      fresh.repartition(deltaWidth(newIds))
-        .write.mode("overwrite")
-        .parquet(segmentPath(dir, "tombstones", gen))
-      prev.tables.updated("tombstones",
-        prev.tables.getOrElse("tombstones", Nil) :+ s"tombstones-g$gen")
-    }
-    gcUnreferenced(spark, dir, retainGens)
-  }
+                       keyCol: String, retainGens: Int = 1): Unit =
+    commitDeltas(spark, dir, "appendTombstones", keyCol, Nil, Nil,
+      Some(ids), retainGens)
 
   /** Enforce, inside an APPEND commit, that the increment's ids are
     * disjoint from the index's tombstones — the re-ingest contract.

@@ -345,34 +345,13 @@ object TextDedup {
     * is bit-identical to a full rebuild on base ∪ increment — the
     * entry shares the roundtrip oracle outright. Increment-sized
     * delta segments; disjoint-ids and re-ingest contracts enforced
-    * like every other family. */
+    * like every other family. The one-increment [[dedupApplyDeltas]]
+    * cycle. */
   def appendDedupIndex(spark: org.apache.spark.sql.SparkSession,
                        dir: String, increment: DataFrame, idCol: String,
-                       textCol: String, retainGens: Int = 1): Unit = {
-    import spark.implicits._
-    val (n, k, bands) = dedupIndexGeometry(spark, dir)
-    val named = increment.select(col(idCol).as("doc_id"),
-      col(textCol).as("text"))
-    IndexCommit.commit(spark, dir) { (gen, cur) =>
-      val prev = cur.getOrElse(sys.error(
-        s"appendDedupIndex: no committed index at $dir — " +
-          "writeDedupIndex first"))
-      IndexCommit.requireDisjointFromTombstones(spark, dir, prev,
-        named.select(col("doc_id")), "doc_id", "appendDedupIndex")
-      bandKeysKernel(named, n, k, bands)
-        .repartition(IndexCommit.deltaWidth(increment), col("key"))
-        .write.mode("overwrite")
-        .parquet(IndexCommit.segmentPath(dir, "bands", gen))
-      shingleHashSets(named, n)
-        .repartition(IndexCommit.deltaWidth(increment), col("doc_id"))
-        .write.mode("overwrite")
-        .parquet(IndexCommit.segmentPath(dir, "shingles", gen))
-      prev.tables ++ Map(
-        "bands" -> (prev.tables("bands") :+ s"bands-g$gen"),
-        "shingles" -> (prev.tables("shingles") :+ s"shingles-g$gen"))
-    }
-    IndexCommit.gcUnreferenced(spark, dir, retainGens)
-  }
+                       textCol: String, retainGens: Int = 1): Unit =
+    dedupApplyDeltas(spark, dir, Seq(increment), idCol, textCol, None,
+      retainGens)
 
   /** ONE-COMMIT append(+takedown) cycle for the dedup index (the
     * sequential [[appendDedupIndex]]+[[deleteFromDedupIndex]] chain
@@ -388,9 +367,7 @@ object TextDedup {
     val named = increments.map(inc => inc.select(col(idCol).as("doc_id"),
       col(textCol).as("text")))
     IndexCommit.commitDeltas(spark, dir, "dedupApplyDeltas", "doc_id",
-      if (named.isEmpty) None
-      else Some(named.map(_.select(col("doc_id"))).reduce(_ unionByName _)),
-      named.flatMap { inc => Seq(
+      named, named.flatMap { inc => Seq(
         "bands" -> ((dest: String) =>
           bandKeysKernel(inc, n, k, bands)
             .repartition(IndexCommit.deltaWidth(inc), col("key"))
@@ -439,11 +416,7 @@ object TextDedup {
   def dedupFsck(spark: org.apache.spark.sql.SparkSession, dir: String,
                 atGen: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val m = atGen match {
-      case Some(g) => IndexCommit.manifestAt(spark, dir, g)
-      case None => IndexCommit.currentManifest(spark, dir).getOrElse(
-        sys.error(s"dedupFsck: no committed index at $dir"))
-    }
+    val m = IndexCommit.manifestFor(spark, dir, atGen, "dedupFsck")
     def table(t: String) = IndexCommit.readTableAt(spark, dir, t, m.gen)
     val meta = table("meta").head()
     val (k, bands) =
@@ -492,26 +465,16 @@ object TextDedup {
     val trioAgg = IndexCommit.tombstoneAuditAgg(spark,
       bandsT.select(col("doc_id")),
       if (hasTomb) Some(table("tombstones")) else None, "doc_id")
-    val seed = spark.range(1).toDF("_one")
     val scalars = Seq(cmpAgg, perDocAgg, dupShAgg, trioAgg)
-      .foldLeft(seed)(PlanHints.withScalars)
-    def check(name: String, expected: Column,
-              actual: Column): DataFrame =
-      scalars.select(lit(name).as("check"),
-        expected.cast("long").as("expected"),
-        actual.cast("long").as("actual"),
-        (expected === actual).as("ok"))
-    check("band_count_violations", lit(0L), col("band_count_bad"))
-      .unionByName(check("band_key_mismatches", lit(0L), col("key_mm")))
-      .unionByName(check("band_shingle_unmatched", lit(0L),
-        col("unmatched")))
-      .unionByName(check("duplicate_shingle_rows", lit(0L),
-        col("dup_sh")))
-      .unionByName(check("live_docs", col("phys_docs") - col("masked"),
-        col("live_re")))
-      .unionByName(check("n_sh_mismatches", lit(0L), col("nsh_mm")))
-      .unionByName(check("tombstones_orphaned", lit(0L),
-        col("orphaned")))
+      .foldLeft(spark.range(1).toDF("_one"))(PlanHints.withScalars)
+    IndexCommit.checkRows(scalars, Seq(
+        ("band_count_violations", lit(0L), col("band_count_bad")),
+        ("band_key_mismatches", lit(0L), col("key_mm")),
+        ("band_shingle_unmatched", lit(0L), col("unmatched")),
+        ("duplicate_shingle_rows", lit(0L), col("dup_sh")),
+        ("live_docs", col("phys_docs") - col("masked"), col("live_re")),
+        ("n_sh_mismatches", lit(0L), col("nsh_mm")),
+        ("tombstones_orphaned", lit(0L), col("orphaned"))))
       .unionByName(IndexCommit.checksumCard(spark, dir, m))
   }
 

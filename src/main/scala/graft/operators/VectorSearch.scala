@@ -440,13 +440,8 @@ object VectorSearch {
       // The two staged tables overlap, and each branch stamps its own
       // files in flight — no standalone checksum job trails the commit.
       Par.both({
-        IndexCommit.timed(s"lsh:bucket-write g$gen")(
-          IndexCommit.clusterForPartitionedWrite(
-              lshVectorBuckets(vectors, bits, dim),
-              IndexCommit.partitionedWriteWidth(vectors), "bkt",
-              1L << bits, "vec_id")
-            .write.mode("overwrite").partitionBy("bkt")
-            .parquet(IndexCommit.segmentPath(dir, "buckets", gen)))
+        IndexCommit.timed(s"lsh:bucket-write g$gen")(lshWriteBuckets(
+          vectors, bits, dim, IndexCommit.segmentPath(dir, "buckets", gen)))
         st.stampSegment(s"buckets-g$gen")
       }, {
         Seq((bits, dim)).toDF("bits", "dim")
@@ -458,6 +453,18 @@ object VectorSearch {
     }
     IndexCommit.gcUnreferenced(spark, dir, retainGens)
   }
+
+  /** The LSH bucket-table write of the build and the delta path:
+    * `vectors` hash-clustered by bucket (one parallel file per bucket,
+    * size-derived width) into the partitioned segment at `dest`. */
+  private def lshWriteBuckets(vectors: DataFrame, bits: Int, dim: Int,
+                              dest: String): Unit =
+    IndexCommit.clusterForPartitionedWrite(
+        lshVectorBuckets(vectors, bits, dim),
+        IndexCommit.partitionedWriteWidth(vectors), "bkt",
+        1L << bits, "vec_id")
+      .write.mode("overwrite").partitionBy("bkt")
+      .parquet(dest)
 
   /** ONE-COMMIT append(+takedown) cycle for the LSH family — the
     * sequential [[lshAppendIndex]]+[[deleteVectors]] chain's segments
@@ -471,16 +478,8 @@ object VectorSearch {
     val meta = IndexCommit.readTable(spark, dir, "meta").head()
     val (bits, dim) = (meta.getInt(0), meta.getInt(1))
     IndexCommit.commitDeltas(spark, dir, "lshApplyDeltas", "vec_id",
-      if (increments.isEmpty) None
-      else Some(increments.map(_.select(col("vec_id")))
-        .reduce(_ unionByName _)),
-      increments.map(inc => "buckets" -> ((dest: String) =>
-        IndexCommit.clusterForPartitionedWrite(
-            lshVectorBuckets(inc, bits, dim),
-            IndexCommit.partitionedWriteWidth(inc), "bkt",
-            1L << bits, "vec_id")
-          .write.mode("overwrite").partitionBy("bkt")
-          .parquet(dest))),
+      increments, increments.map(inc => "buckets" ->
+        ((dest: String) => lshWriteBuckets(inc, bits, dim, dest))),
       deleteIds, retainGens)
   }
 
@@ -512,27 +511,11 @@ object VectorSearch {
     * SEGMENT holds only the increment's rows (committed by one
     * manifest flip — a crashed append is invisible, a retry replaces
     * its orphan), hash-clustered so each bucket's
-    * new file is written in parallel. */
+    * new file is written in parallel. The one-increment
+    * [[lshApplyDeltas]] cycle. */
   def lshAppendIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                     increment: DataFrame, retainGens: Int = 1): Unit = {
-    val meta = IndexCommit.readTable(spark, dir, "meta").head()
-    val (bits, dim) = (meta.getInt(0), meta.getInt(1))
-    IndexCommit.commit(spark, dir) { (gen, cur) =>
-      val prev = cur.getOrElse(sys.error(
-        s"lshAppendIndex: no committed index at $dir — lshWriteIndex first"))
-      IndexCommit.requireDisjointFromTombstones(spark, dir, prev,
-        increment.select("vec_id"), "vec_id", "lshAppendIndex")
-      IndexCommit.clusterForPartitionedWrite(
-          lshVectorBuckets(increment, bits, dim),
-          IndexCommit.partitionedWriteWidth(increment), "bkt",
-          1L << bits, "vec_id")
-        .write.mode("overwrite").partitionBy("bkt")
-        .parquet(IndexCommit.segmentPath(dir, "buckets", gen))
-      prev.tables.updated("buckets",
-        prev.tables("buckets") :+ s"buckets-g$gen")
-    }
-    IndexCommit.gcUnreferenced(spark, dir, retainGens)
-  }
+                     increment: DataFrame, retainGens: Int = 1): Unit =
+    lshApplyDeltas(spark, dir, Seq(increment), None, retainGens)
 
   /** The IVF index: cell-assigned vectors plus their trained centroids
     * — shared by [[ivfTopK]] and [[ivfKnnJoin]] so the two operators
@@ -577,26 +560,39 @@ object VectorSearch {
     while (r < refine) {
       val bcC = spark.sparkContext.broadcast(centroids)
       assigned = assigned.mapPartitions { it =>
-        val cents = bcC.value.map { case (cell, c) => (cell, c, normKD(c, dim)) }
-          .filter(_._3 > 0) // all-zero centroid: similarity undefined
+        val nearest = ivfNearest(bcC.value, dim)
         it.map { case (prev, vid, e) =>
           val ne = normK(e, dim)
           if (ne == 0.0) (prev, vid, e) // cosine undefined: keep prior cell
-          else {                        // (NaN sims would phantom-assign)
-            var bestSim = Double.NegativeInfinity
-            var bestCell = Int.MaxValue
-            cents.foreach { case (cell, c, nc) =>
-              val sim = round6(dotKD(e, c, dim) / (ne * nc))
-              if (sim > bestSim) { bestSim = sim; bestCell = cell }
-            }
-            (bestCell, vid, e)
-          }
+          else (nearest(e, ne), vid, e) // (NaN sims would phantom-assign)
         }
       }.localCheckpoint(eager = false) // feeds retrain AND the scan below
       centroids = train(assigned)
       r += 1
     }
     (assigned, centroids)
+  }
+
+  /** IVF's assignment rule, the one kernel behind the refine sweep,
+    * the frozen-centroid delta path ([[ivfApplyDeltas]]) and
+    * [[ivfFsck]]'s recount. The returned function maps a vector and
+    * its non-zero norm to the nearest of `centroids` (ascending cell
+    * order; all-zero centroids are skipped, similarity undefined) by
+    * 6dp-rounded cosine, lowest cell on ties. Build it once per
+    * partition. */
+  private def ivfNearest(centroids: Array[(Int, Array[Double])],
+                         dim: Int): (Array[Float], Double) => Int = {
+    val cents = centroids.map { case (cell, c) => (cell, c, normKD(c, dim)) }
+      .filter(_._3 > 0)
+    (e, ne) => {
+      var bestSim = Double.NegativeInfinity
+      var bestCell = Int.MaxValue
+      cents.foreach { case (cell, c, nc) =>
+        val sim = round6(dotKD(e, c, dim) / (ne * nc))
+        if (sim > bestSim) { bestSim = sim; bestCell = cell }
+      }
+      bestCell
+    }
   }
 
   /** Distributed probe selection — top-nProbe centroid cells per query
@@ -1126,29 +1122,16 @@ object VectorSearch {
         .filter(col("embedding").isNotNull)
         .as[(Long, Array[Float])]
         .mapPartitions { it =>
-          val cents = bcC.value
-            .map { case (cell, c) => (cell, c, normKD(c, dim)) }
-            .filter(_._3 > 0)
+          val nearest = ivfNearest(bcC.value, dim)
           it.flatMap { case (vid, e) =>
             val ne = normK(e, dim)
             if (ne == 0.0) Iterator.empty // cosine undefined: unservable
-            else {
-              var bestSim = Double.NegativeInfinity
-              var bestCell = Int.MaxValue
-              cents.foreach { case (cell, c, nc) =>
-                val sim = round6(dotKD(e, c, dim) / (ne * nc))
-                if (sim > bestSim) { bestSim = sim; bestCell = cell }
-              }
-              Iterator.single((bestCell, vid, e))
-            }
+            else Iterator.single((nearest(e, ne), vid, e))
           }
         }
         .toDF("cell", "vec_id", "embedding")
     IndexCommit.commitDeltas(spark, dir, "ivfApplyDeltas", "vec_id",
-      if (increments.isEmpty) None
-      else Some(increments.map(_.select(col("vec_id")))
-        .reduce(_ unionByName _)),
-      increments.map(inc => "cells" -> ((dest: String) =>
+      increments, increments.map(inc => "cells" -> ((dest: String) =>
         IndexCommit.clusterForPartitionedWrite(assign(inc),
             IndexCommit.partitionedWriteWidth(inc), "cell",
             centroids.length.toLong, "vec_id")
@@ -1171,50 +1154,12 @@ object VectorSearch {
     * whatever the increment cadence. Scale shape: the centroid
     * artifact is the only collect (cell-count-bounded); assignment is
     * one compiled map over the increment; the append writes only the
-    * increment's rows, clustered one file per cell.
+    * increment's rows, clustered one file per cell. The one-increment
+    * [[ivfApplyDeltas]] cycle.
     */
   def ivfAppendIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                     increment: DataFrame, dim: Int = 64, retainGens: Int = 1): Unit = {
-    import spark.implicits._
-    val centroids = IndexCommit.readTable(spark, dir, "centroids")
-      .as[(Int, Array[Double])].collect().sortBy(_._1)
-    val bcC = spark.sparkContext.broadcast(centroids)
-    val assignedInc = increment.select(col("vec_id"), col("embedding"))
-      .filter(col("embedding").isNotNull)
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val cents = bcC.value
-          .map { case (cell, c) => (cell, c, normKD(c, dim)) }
-          .filter(_._3 > 0)
-        it.flatMap { case (vid, e) =>
-          val ne = normK(e, dim)
-          if (ne == 0.0) Iterator.empty // cosine undefined: unservable
-          else {
-            var bestSim = Double.NegativeInfinity
-            var bestCell = Int.MaxValue
-            cents.foreach { case (cell, c, nc) =>
-              val sim = round6(dotKD(e, c, dim) / (ne * nc))
-              if (sim > bestSim) { bestSim = sim; bestCell = cell }
-            }
-            Iterator.single((bestCell, vid, e))
-          }
-        }
-      }
-      .toDF("cell", "vec_id", "embedding")
-    IndexCommit.commit(spark, dir) { (gen, cur) =>
-      val prev = cur.getOrElse(sys.error(
-        s"ivfAppendIndex: no committed index at $dir — ivfWriteIndex first"))
-      IndexCommit.requireDisjointFromTombstones(spark, dir, prev,
-        increment.select("vec_id"), "vec_id", "ivfAppendIndex")
-      IndexCommit.clusterForPartitionedWrite(assignedInc,
-          IndexCommit.partitionedWriteWidth(increment), "cell",
-          centroids.length.toLong, "vec_id")
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(IndexCommit.segmentPath(dir, "cells", gen))
-      prev.tables.updated("cells", prev.tables("cells") :+ s"cells-g$gen")
-    }
-    IndexCommit.gcUnreferenced(spark, dir, retainGens)
-  }
+                     increment: DataFrame, dim: Int = 64, retainGens: Int = 1): Unit =
+    ivfApplyDeltas(spark, dir, Seq(increment), None, dim, retainGens)
 
   /** DELETE vectors from ANY persisted vector index (LSH buckets, IVF
     * cells, PQ/IVFPQ codes, MRL prefixes — all keyed by vec_id) — the
@@ -1229,7 +1174,8 @@ object VectorSearch {
     * the served result is exactly "the same index minus those
     * candidates" — which is what the SQL oracles replay. Idempotent
     * by construction. [[compactIndexTable]] later materializes the
-    * mask and drops the table. */
+    * mask and drops the table. The delete-only
+    * [[IndexCommit.commitDeltas]] cycle. */
   def deleteVectors(spark: org.apache.spark.sql.SparkSession,
                     dir: String, ids: DataFrame,
                     retainGens: Int = 1): Unit =
@@ -1443,11 +1389,7 @@ object VectorSearch {
     // every commit is immutable, so any retained generation — cells,
     // its centroids, AND its tombstone mask — serves bit-identically
     // to when it was current
-    val m = atGen match {
-      case Some(g) => IndexCommit.manifestAt(spark, dir, g)
-      case None => IndexCommit.currentManifest(spark, dir)
-        .getOrElse(sys.error(s"ivfServe: no committed index at $dir"))
-    }
+    val m = IndexCommit.manifestFor(spark, dir, atGen, "ivfServe")
     def table(t: String) =
       IndexCommit.readTableAt(spark, dir, t, m.gen)
     val centroids = table("centroids")
@@ -1480,11 +1422,7 @@ object VectorSearch {
                        dim: Int = 64,
                        atGen: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val m = atGen match {
-      case Some(g) => IndexCommit.manifestAt(spark, dir, g)
-      case None => IndexCommit.currentManifest(spark, dir).getOrElse(
-        sys.error(s"ivfServeCostCard: no committed index at $dir"))
-    }
+    val m = IndexCommit.manifestFor(spark, dir, atGen, "ivfServeCostCard")
     def table(t: String) =
       IndexCommit.readTableAt(spark, dir, t, m.gen)
     val centroids = table("centroids")
@@ -1585,107 +1523,113 @@ object VectorSearch {
   def ivfFsck(spark: org.apache.spark.sql.SparkSession, dir: String,
               dim: Int = 64, atGen: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val m = atGen match {
-      case Some(g) => IndexCommit.manifestAt(spark, dir, g)
-      case None => IndexCommit.currentManifest(spark, dir).getOrElse(
-        sys.error(s"ivfFsck: no committed index at $dir"))
-    }
-    def table(t: String) = IndexCommit.readTableAt(spark, dir, t, m.gen)
-    // the cells union feeds FIVE of the invariant aggregates below,
-    // each its own scalar-subtree job — pin it once (lazy
-    // localCheckpoint) so the audit reads the many-small-file segment
-    // union from disk ONCE instead of once per invariant (guide §2.4/
-    // §5: at index scale that is five redundant full-table scans)
-    val cells = table("cells").select(col("cell").cast("int").as("cell"),
-      col("vec_id"), col("embedding"))
-      .localCheckpoint(eager = true)
-    val centroids = table("centroids")
-      .select(col("cell").cast("int").as("cell"), col("centroid"))
-    val hasTomb = m.tables.contains("tombstones")
-    // ONE kernel pass fuses the zero-norm recount with the row/id
-    // counts — formerly two full scans of the cells union (guide
-    // §1.2); the mask trio is one more fused job (tombstoneAuditAgg)
-    val rowAgg = cells.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .mapPartitions(_.map { case (vid, e) =>
-        (vid, if (e == null || normK(e, dim) == 0.0) 1L else 0L)
-      })
-      .toDF("vec_id", "z")
-      .agg(
-        count(lit(1)).cast("long").as("phys_rows"),
-        countDistinct(col("vec_id")).cast("long").as("phys_ids"),
-        coalesce(sum(col("z")), lit(0L)).cast("long").as("zero_norm"))
-    val trioAgg = IndexCommit.tombstoneAuditAgg(spark,
-      cells.select(col("vec_id")),
-      if (hasTomb) Some(table("tombstones")) else None, "vec_id")
-    val centAgg = centroids.agg(
-      count(lit(1)).cast("long").as("cent_rows"),
-      countDistinct(col("cell")).cast("long").as("cent_cells"))
-    val noCentAgg = cells.select(col("cell")).distinct()
-      .join(centroids.select(col("cell")), Seq("cell"), "left_anti")
-      .agg(count(lit(1)).cast("long").as("cells_wo_centroid"))
-    val appendSegs = m.tables("cells").drop(1)
-    val mismAgg =
-      if (appendSegs.isEmpty)
-        spark.range(1).select(col("id").as("mismatches"))
-      else {
-        val centArr = centroids.as[(Int, Array[Double])]
-          .collect().sortBy(_._1)
-        val bcC = spark.sparkContext.broadcast(centArr)
-        appendSegs
-          .map(s => spark.read.option("basePath", s"$dir/$s")
-            .parquet(s"$dir/$s"))
-          .reduce(_ unionByName _)
-          .select(col("cell").cast("int").as("cell"), col("vec_id"),
-            col("embedding"))
-          .as[(Int, Long, Array[Float])]
-          .mapPartitions { it =>
-            val cents = bcC.value
-              .map { case (c, v) => (c, v, normKD(v, dim)) }
-              .filter(_._3 > 0)
-            it.map { case (cell, _, e) =>
+    vectorFsck(spark, dir, atGen, "ivfFsck", "cells",
+        Seq(col("cell").cast("int").as("cell"), col("vec_id"),
+          col("embedding"))) { (m, table, cells) =>
+      val centroids = table("centroids")
+        .select(col("cell").cast("int").as("cell"), col("centroid"))
+      // ONE kernel pass fuses the zero-norm recount with the row/id
+      // counts — formerly two full scans of the cells union (guide §1.2)
+      val zeroFlags = cells.select(col("vec_id"), col("embedding"))
+        .as[(Long, Array[Float])]
+        .mapPartitions(_.map { case (vid, e) =>
+          (vid, if (e == null || normK(e, dim) == 0.0) 1L else 0L)
+        })
+        .toDF("vec_id", "z")
+      val centAgg = centroids.agg(
+        count(lit(1)).cast("long").as("cent_rows"),
+        countDistinct(col("cell")).cast("long").as("cent_cells"))
+      val noCentAgg = cells.select(col("cell")).distinct()
+        .join(centroids.select(col("cell")), Seq("cell"), "left_anti")
+        .agg(count(lit(1)).cast("long").as("cells_wo_centroid"))
+      val appendSegs = m.tables("cells").drop(1)
+      val mismAgg =
+        if (appendSegs.isEmpty)
+          spark.range(1).select(col("id").as("mismatches"))
+        else {
+          val bcC = spark.sparkContext.broadcast(
+            centroids.as[(Int, Array[Double])].collect().sortBy(_._1))
+          appendSegs
+            .map(s => spark.read.option("basePath", s"$dir/$s")
+              .parquet(s"$dir/$s"))
+            .reduce(_ unionByName _)
+            .select(col("cell").cast("int").as("cell"), col("vec_id"),
+              col("embedding"))
+            .as[(Int, Long, Array[Float])]
+            .mapPartitions { it =>
+              val nearest = ivfNearest(bcC.value, dim)
               // appends never write null or zero-norm rows: either is
               // drift — report it as a mismatch rather than crashing
               // the audit on the very corruption it exists to find
               // (matches lshFsck's null posture)
-              val ne = if (e == null) 0.0 else normK(e, dim)
-              if (ne == 0.0) 1L
-              else {
-                var bestSim = Double.NegativeInfinity
-                var bestCell = Int.MaxValue
-                cents.foreach { case (c, v, nc) =>
-                  val sim = round6(dotKD(e, v, dim) / (ne * nc))
-                  if (sim > bestSim) { bestSim = sim; bestCell = c }
-                }
-                if (bestCell == cell) 0L else 1L
+              it.map { case (cell, _, e) =>
+                val ne = if (e == null) 0.0 else normK(e, dim)
+                if (ne == 0.0 || nearest(e, ne) != cell) 1L else 0L
               }
             }
-          }
-          .toDF("mm")
-          .agg(coalesce(sum(col("mm")), lit(0L)).cast("long")
-            .as("mismatches"))
-      }
-    val seed = spark.range(1).toDF("_one")
-    val scalars = Seq(rowAgg, trioAgg, centAgg,
-      noCentAgg, mismAgg).foldLeft(seed)(PlanHints.withScalars)
-    def check(name: String, expected: Column,
-              actual: Column): DataFrame =
-      scalars.select(lit(name).as("check"),
-        expected.cast("long").as("expected"),
-        actual.cast("long").as("actual"),
-        (expected === actual).as("ok"))
-    check("append_assignment_mismatches", lit(0L), col("mismatches"))
-      .unionByName(check("cells_without_centroid", lit(0L),
-        col("cells_wo_centroid")))
-      .unionByName(check("centroid_duplicate_cells", lit(0L),
-        col("cent_rows") - col("cent_cells")))
-      .unionByName(check("duplicate_vec_rows", lit(0L),
-        col("phys_rows") - col("phys_ids")))
-      .unionByName(check("live_vecs", col("phys_rows") - col("masked"),
-        col("live_re")))
-      .unionByName(check("tombstones_orphaned", lit(0L),
-        col("orphaned")))
-      .unionByName(check("zero_norm_rows", lit(0L), col("zero_norm")))
+            .toDF("mm")
+            .agg(coalesce(sum(col("mm")), lit(0L)).cast("long")
+              .as("mismatches"))
+        }
+      (zeroFlags,
+        Seq(coalesce(sum(col("z")), lit(0L)).cast("long").as("zero_norm")),
+        Seq(centAgg, noCentAgg, mismAgg),
+        Seq(("append_assignment_mismatches", lit(0L), col("mismatches")),
+          ("cells_without_centroid", lit(0L), col("cells_wo_centroid")),
+          ("centroid_duplicate_cells", lit(0L),
+            col("cent_rows") - col("cent_cells")),
+          ("zero_norm_rows", lit(0L), col("zero_norm"))))
+    }
+  }
+
+  /** The skeleton every vector-family fsck shares. It resolves the
+    * manifest, pins the family's row table (`rowCols` of `rowsTable`)
+    * once — the union feeds every invariant aggregate, each its own
+    * scalar-subtree job, so the many-small-file segment union is read
+    * from disk ONCE instead of once per invariant (guide §2.4/§5) —
+    * and adds the invariants all four families share:
+    *
+    *  - `duplicate_vec_rows`: physical rows − distinct vec_ids
+    *    (expected 0: one row per vector);
+    *  - `live_vecs`: physical rows − tombstones (the health card's
+    *    maintained algebra) vs the tombstone-masked distinct-id
+    *    recount;
+    *  - `tombstones_orphaned`: tombstoned ids with no physical row
+    *    (expected 0 — a tombstone masks something until compaction).
+    *
+    * `family(manifest, table, rows)` gives the family's part: the
+    * per-row frame its row aggregate runs over (a recount kernel's
+    * `vec_id` plus flag columns, or the pinned rows themselves — fused
+    * with the row/id counts into ONE pass), that aggregate's extra
+    * columns, its other scalar aggregates and its (name, expected,
+    * actual) checks.
+    * Every aggregate composes into ONE lazy plan via the constant-key
+    * scalar join (the mask trio is one fused job,
+    * [[IndexCommit.tombstoneAuditAgg]]); the rows come sorted by check
+    * name, then the shared [[IndexCommit.checksumCard]] rows. */
+  private def vectorFsck(spark: org.apache.spark.sql.SparkSession,
+      dir: String, atGen: Option[Long], op: String, rowsTable: String,
+      rowCols: Seq[Column])(
+      family: (IndexCommit.Manifest, String => DataFrame, DataFrame) =>
+        (DataFrame, Seq[Column], Seq[DataFrame],
+          Seq[(String, Column, Column)])): DataFrame = {
+    val m = IndexCommit.manifestFor(spark, dir, atGen, op)
+    def table(t: String) = IndexCommit.readTableAt(spark, dir, t, m.gen)
+    val rows = table(rowsTable).select(rowCols: _*)
+      .localCheckpoint(eager = true)
+    val (perRow, rowAggs, aggs, checks) = family(m, table, rows)
+    val rowAgg = perRow.agg(count(lit(1)).cast("long").as("phys_rows"),
+      countDistinct(col("vec_id")).cast("long").as("phys_ids") +: rowAggs: _*)
+    val trioAgg = IndexCommit.tombstoneAuditAgg(spark,
+      rows.select(col("vec_id")),
+      if (m.tables.contains("tombstones")) Some(table("tombstones"))
+      else None, "vec_id")
+    val scalars = (rowAgg +: trioAgg +: aggs)
+      .foldLeft(spark.range(1).toDF("_one"))(PlanHints.withScalars)
+    IndexCommit.checkRows(scalars, (checks ++ Seq(
+        ("duplicate_vec_rows", lit(0L), col("phys_rows") - col("phys_ids")),
+        ("live_vecs", col("phys_rows") - col("masked"), col("live_re")),
+        ("tombstones_orphaned", lit(0L), col("orphaned")))).sortBy(_._1))
       .unionByName(IndexCommit.checksumCard(spark, dir, m))
   }
 
@@ -1714,68 +1658,36 @@ object VectorSearch {
     * All distributed aggregates under the constant-key scalar join;
     * the only driver read is the one-row meta. */
   def ivfPqFsck(spark: org.apache.spark.sql.SparkSession, dir: String,
-                atGen: Option[Long] = None): DataFrame = {
-    val m = atGen match {
-      case Some(g) => IndexCommit.manifestAt(spark, dir, g)
-      case None => IndexCommit.currentManifest(spark, dir).getOrElse(
-        sys.error(s"ivfPqFsck: no committed index at $dir"))
+                atGen: Option[Long] = None): DataFrame =
+    vectorFsck(spark, dir, atGen, "ivfPqFsck", "codes",
+        Seq(col("cell").cast("int").as("cell"), col("vec_id"),
+          col("codes"))) { (_, table, codes) =>
+      val meta = table("meta").head()
+      val (mm, nCells) = (meta.getInt(0), meta.getInt(1))
+      val noCentAgg = codes.select(col("cell")).distinct()
+        .join(table("centroids")
+          .select(col("cell").cast("int").as("cell")), Seq("cell"),
+          "left_anti")
+        .agg(count(lit(1)).cast("long").as("cells_wo_centroid"))
+      val cbAgg = table("codebooks").agg(
+        count(lit(1)).cast("long").as("cb_rows"),
+        countDistinct(col("subspace"), col("cell")).cast("long")
+          .as("cb_keys"),
+        countDistinct(col("subspace")).cast("long").as("cb_subspaces"))
+      (codes,
+        Seq(coalesce(sum(when(size(col("codes")) =!= mm, 1L).otherwise(0L)),
+            lit(0L)).cast("long").as("width_bad"),
+          coalesce(sum(when(exists(col("codes"),
+              c => c < 0 || c >= nCells), 1L).otherwise(0L)),
+            lit(0L)).cast("long").as("range_bad")),
+        Seq(noCentAgg, cbAgg),
+        Seq(("cells_without_centroid", lit(0L), col("cells_wo_centroid")),
+          ("code_range_violations", lit(0L), col("range_bad")),
+          ("code_width_violations", lit(0L), col("width_bad")),
+          ("codebook_duplicate_entries", lit(0L),
+            col("cb_rows") - col("cb_keys")),
+          ("codebook_subspaces", lit(mm.toLong), col("cb_subspaces"))))
     }
-    def table(t: String) = IndexCommit.readTableAt(spark, dir, t, m.gen)
-    val meta = table("meta").head()
-    val (mm, nCells) = (meta.getInt(0), meta.getInt(1))
-    // pinned once for the four code-table invariants (see ivfFsck)
-    val codes = table("codes").select(col("cell").cast("int").as("cell"),
-      col("vec_id"), col("codes"))
-      .localCheckpoint(eager = true)
-    val hasTomb = m.tables.contains("tombstones")
-    val rowAgg = codes.agg(
-      count(lit(1)).cast("long").as("phys_rows"),
-      countDistinct(col("vec_id")).cast("long").as("phys_ids"),
-      coalesce(sum(when(size(col("codes")) =!= mm, 1L).otherwise(0L)),
-        lit(0L)).cast("long").as("width_bad"),
-      coalesce(sum(when(exists(col("codes"),
-          c => c < 0 || c >= nCells), 1L).otherwise(0L)),
-        lit(0L)).cast("long").as("range_bad"))
-    // the mask trio in ONE fused job (see tombstoneAuditAgg)
-    val trioAgg = IndexCommit.tombstoneAuditAgg(spark,
-      codes.select(col("vec_id")),
-      if (hasTomb) Some(table("tombstones")) else None, "vec_id")
-    val noCentAgg = codes.select(col("cell")).distinct()
-      .join(table("centroids")
-        .select(col("cell").cast("int").as("cell")), Seq("cell"),
-        "left_anti")
-      .agg(count(lit(1)).cast("long").as("cells_wo_centroid"))
-    val cbAgg = table("codebooks").agg(
-      count(lit(1)).cast("long").as("cb_rows"),
-      countDistinct(col("subspace"), col("cell")).cast("long")
-        .as("cb_keys"),
-      countDistinct(col("subspace")).cast("long").as("cb_subspaces"))
-    val seed = spark.range(1).toDF("_one")
-    val scalars = Seq(rowAgg, trioAgg, noCentAgg,
-      cbAgg).foldLeft(seed)(PlanHints.withScalars)
-    def check(name: String, expected: Column,
-              actual: Column): DataFrame =
-      scalars.select(lit(name).as("check"),
-        expected.cast("long").as("expected"),
-        actual.cast("long").as("actual"),
-        (expected === actual).as("ok"))
-    check("cells_without_centroid", lit(0L), col("cells_wo_centroid"))
-      .unionByName(check("code_range_violations", lit(0L),
-        col("range_bad")))
-      .unionByName(check("code_width_violations", lit(0L),
-        col("width_bad")))
-      .unionByName(check("codebook_duplicate_entries", lit(0L),
-        col("cb_rows") - col("cb_keys")))
-      .unionByName(check("codebook_subspaces", lit(mm.toLong),
-        col("cb_subspaces")))
-      .unionByName(check("duplicate_vec_rows", lit(0L),
-        col("phys_rows") - col("phys_ids")))
-      .unionByName(check("live_vecs", col("phys_rows") - col("masked"),
-        col("live_re")))
-      .unionByName(check("tombstones_orphaned", lit(0L),
-        col("orphaned")))
-      .unionByName(IndexCommit.checksumCard(spark, dir, m))
-  }
 
   /** FSCK for the LSH family — the STRONGEST recount of the vector
     * fscks, because the quantizer is stateless: hyperplanes derive
@@ -1788,69 +1700,40 @@ object VectorSearch {
   def lshFsck(spark: org.apache.spark.sql.SparkSession, dir: String,
               atGen: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val m = atGen match {
-      case Some(g) => IndexCommit.manifestAt(spark, dir, g)
-      case None => IndexCommit.currentManifest(spark, dir).getOrElse(
-        sys.error(s"lshFsck: no committed index at $dir"))
-    }
-    def table(t: String) = IndexCommit.readTableAt(spark, dir, t, m.gen)
-    val meta = table("meta").head()
-    val (bits, dim) = (meta.getInt(0), meta.getInt(1))
-    val planes = hyperplanes(bits, dim).map(_.toArray).toArray
-    val bcP = spark.sparkContext.broadcast(planes)
-    // pinned once for the four bucket-table invariants (see ivfFsck)
-    val buckets = table("buckets").select(
-      col("bkt").cast("int").as("bkt"), col("vec_id"), col("embedding"),
-      col("nv"))
-      .localCheckpoint(eager = true)
-    val hasTomb = m.tables.contains("tombstones")
-    // ONE kernel pass fuses the recount flags (bucket/norm/zero) with
-    // the row/id counts — formerly two full scans, now one (guide
-    // §1.2); the mask trio is one more fused job (tombstoneAuditAgg)
-    val recAgg = buckets
-      .as[(Int, Long, Array[Float], Double)]
-      .mapPartitions { it =>
-        val ps = bcP.value
-        it.map { case (bkt, vid, e, nv) =>
-          if (e == null) (vid, 1L, 1L, 1L)
-          else {
-            val rn = normK(e, dim)
-            (vid,
-             (if (bucketK(e, ps, dim) != bkt) 1L else 0L),
-             (if (rn != nv) 1L else 0L),
-             (if (rn == 0.0) 1L else 0L))
+    vectorFsck(spark, dir, atGen, "lshFsck", "buckets",
+        Seq(col("bkt").cast("int").as("bkt"), col("vec_id"),
+          col("embedding"), col("nv"))) { (_, table, buckets) =>
+      val meta = table("meta").head()
+      val (bits, dim) = (meta.getInt(0), meta.getInt(1))
+      val bcP = spark.sparkContext.broadcast(
+        hyperplanes(bits, dim).map(_.toArray).toArray)
+      // ONE kernel pass recounts the bucket/norm/zero flags, fused with
+      // the row/id counts — formerly two full scans (guide §1.2)
+      val flags = buckets
+        .as[(Int, Long, Array[Float], Double)]
+        .mapPartitions { it =>
+          val ps = bcP.value
+          it.map { case (bkt, vid, e, nv) =>
+            if (e == null) (vid, 1L, 1L, 1L)
+            else {
+              val rn = normK(e, dim)
+              (vid,
+               (if (bucketK(e, ps, dim) != bkt) 1L else 0L),
+               (if (rn != nv) 1L else 0L),
+               (if (rn == 0.0) 1L else 0L))
+            }
           }
         }
-      }
-      .toDF("vec_id", "bm", "nm", "zn")
-      .agg(coalesce(sum(col("bm")), lit(0L)).cast("long")
-          .as("bucket_mm"),
-        coalesce(sum(col("nm")), lit(0L)).cast("long").as("norm_mm"),
-        coalesce(sum(col("zn")), lit(0L)).cast("long").as("zero_norm"),
-        count(lit(1)).cast("long").as("phys_rows"),
-        countDistinct(col("vec_id")).cast("long").as("phys_ids"))
-    val trioAgg = IndexCommit.tombstoneAuditAgg(spark,
-      buckets.select(col("vec_id")),
-      if (hasTomb) Some(table("tombstones")) else None, "vec_id")
-    val seed = spark.range(1).toDF("_one")
-    val scalars = Seq(recAgg, trioAgg)
-      .foldLeft(seed)(PlanHints.withScalars)
-    def check(name: String, expected: Column,
-              actual: Column): DataFrame =
-      scalars.select(lit(name).as("check"),
-        expected.cast("long").as("expected"),
-        actual.cast("long").as("actual"),
-        (expected === actual).as("ok"))
-    check("bucket_mismatches", lit(0L), col("bucket_mm"))
-      .unionByName(check("duplicate_vec_rows", lit(0L),
-        col("phys_rows") - col("phys_ids")))
-      .unionByName(check("live_vecs", col("phys_rows") - col("masked"),
-        col("live_re")))
-      .unionByName(check("norm_mismatches", lit(0L), col("norm_mm")))
-      .unionByName(check("tombstones_orphaned", lit(0L),
-        col("orphaned")))
-      .unionByName(check("zero_norm_rows", lit(0L), col("zero_norm")))
-      .unionByName(IndexCommit.checksumCard(spark, dir, m))
+        .toDF("vec_id", "bm", "nm", "zn")
+      (flags,
+        Seq(coalesce(sum(col("bm")), lit(0L)).cast("long").as("bucket_mm"),
+          coalesce(sum(col("nm")), lit(0L)).cast("long").as("norm_mm"),
+          coalesce(sum(col("zn")), lit(0L)).cast("long").as("zero_norm")),
+        Nil,
+        Seq(("bucket_mismatches", lit(0L), col("bucket_mm")),
+          ("norm_mismatches", lit(0L), col("norm_mm")),
+          ("zero_norm_rows", lit(0L), col("zero_norm"))))
+    }
   }
 
   /** FSCK for the MRL prefix family — the prefix table stores
@@ -1858,46 +1741,16 @@ object VectorSearch {
     * geometry contract (every prefix exactly meta's prefix_dim wide)
     * plus the shared duplicate/orphan/mask algebra. */
   def mrlFsck(spark: org.apache.spark.sql.SparkSession, dir: String,
-              atGen: Option[Long] = None): DataFrame = {
-    val m = atGen match {
-      case Some(g) => IndexCommit.manifestAt(spark, dir, g)
-      case None => IndexCommit.currentManifest(spark, dir).getOrElse(
-        sys.error(s"mrlFsck: no committed index at $dir"))
+              atGen: Option[Long] = None): DataFrame =
+    vectorFsck(spark, dir, atGen, "mrlFsck", "prefix",
+        Seq(col("vec_id"), col("prefix"))) { (_, table, prefix) =>
+      val prefixDim = table("meta").head().getInt(0)
+      (prefix,
+        Seq(coalesce(sum(when(size(col("prefix")) =!= prefixDim, 1L)
+          .otherwise(0L)), lit(0L)).cast("long").as("width_bad")),
+        Nil,
+        Seq(("prefix_width_violations", lit(0L), col("width_bad"))))
     }
-    def table(t: String) = IndexCommit.readTableAt(spark, dir, t, m.gen)
-    val prefixDim = table("meta").head().getInt(0)
-    // pinned once for the three prefix-table invariants (see ivfFsck)
-    val prefix = table("prefix").select(col("vec_id"), col("prefix"))
-      .localCheckpoint(eager = true)
-    val hasTomb = m.tables.contains("tombstones")
-    val rowAgg = prefix.agg(
-      count(lit(1)).cast("long").as("phys_rows"),
-      countDistinct(col("vec_id")).cast("long").as("phys_ids"),
-      coalesce(sum(when(size(col("prefix")) =!= prefixDim, 1L)
-        .otherwise(0L)), lit(0L)).cast("long").as("width_bad"))
-    // the mask trio in ONE fused job (see tombstoneAuditAgg)
-    val trioAgg = IndexCommit.tombstoneAuditAgg(spark,
-      prefix.select(col("vec_id")),
-      if (hasTomb) Some(table("tombstones")) else None, "vec_id")
-    val seed = spark.range(1).toDF("_one")
-    val scalars = Seq(rowAgg, trioAgg)
-      .foldLeft(seed)(PlanHints.withScalars)
-    def check(name: String, expected: Column,
-              actual: Column): DataFrame =
-      scalars.select(lit(name).as("check"),
-        expected.cast("long").as("expected"),
-        actual.cast("long").as("actual"),
-        (expected === actual).as("ok"))
-    check("duplicate_vec_rows", lit(0L),
-        col("phys_rows") - col("phys_ids"))
-      .unionByName(check("live_vecs", col("phys_rows") - col("masked"),
-        col("live_re")))
-      .unionByName(check("prefix_width_violations", lit(0L),
-        col("width_bad")))
-      .unionByName(check("tombstones_orphaned", lit(0L),
-        col("orphaned")))
-      .unionByName(IndexCommit.checksumCard(spark, dir, m))
-  }
 
   /** [[ivfServe]] at a probe budget DERIVED from a recall floor — the
     * [[ivfAdaptiveTopK]] contract moved to the PERSISTED index: the
@@ -1930,11 +1783,7 @@ object VectorSearch {
                      dim: Int = 64, recallFloor: Double = 0.9,
                      atGen: Option[Long] = None): Int = {
     import spark.implicits._
-    val m = atGen match {
-      case Some(g) => IndexCommit.manifestAt(spark, dir, g)
-      case None => IndexCommit.currentManifest(spark, dir)
-        .getOrElse(sys.error(s"ivfChosenProbe: no committed index at $dir"))
-    }
+    val m = IndexCommit.manifestFor(spark, dir, atGen, "ivfChosenProbe")
     def table(t: String) =
       IndexCommit.readTableAt(spark, dir, t, m.gen)
     val centroids = table("centroids")
@@ -2546,12 +2395,7 @@ object VectorSearch {
     val cb = pqTrainCodebook(vs, m, nCells, sub)
     val bc = spark.sparkContext.broadcast(cb)
     IndexCommit.commit(spark, dir) { (gen, _) =>
-      vs.mapPartitions(_.flatMap { case (vid, e) =>
-          if (normK(e, dim) == 0) None // cosine undefined: not served
-          else Some((vid, pqAssignK(bc.value, e, m, nCells, sub)))
-        })
-        .toDF("vec_id", "codes")
-        .write.mode("overwrite")
+      pqEncode(vectors, bc, m, nCells, dim).write.mode("overwrite")
         .parquet(IndexCommit.segmentPath(dir, "codes", gen))
       val rows = for {
         j <- 0 until m; c <- 0 until nCells; if cb(j)(c) != null
@@ -2613,33 +2457,36 @@ object VectorSearch {
     * increment cadence. Scale shape: driver reads are the one-row
     * meta and the m·nCells codebook; encoding is one compiled map
     * over the increment; the append writes only the increment's code
-    * rows. */
+    * rows — a one-increment [[IndexCommit.commitDeltas]] cycle. */
   def pqAppendIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                     increment: DataFrame, retainGens: Int = 1): Unit = {
-    import spark.implicits._
     val meta = IndexCommit.readTable(spark, dir, "meta").head()
     val (m, nCells, dim) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-    val sub = dim / m
     val bc = spark.sparkContext.broadcast(
       readPqCodebooks(spark, dir, m, nCells))
-    IndexCommit.commit(spark, dir) { (gen, cur) =>
-      val prev = cur.getOrElse(sys.error(
-        s"pqAppendIndex: no committed index at $dir — pqWriteIndex first"))
-      IndexCommit.requireDisjointFromTombstones(spark, dir, prev,
-        increment.select("vec_id"), "vec_id", "pqAppendIndex")
-      increment.select(col("vec_id"), col("embedding"))
-        .filter(col("embedding").isNotNull)
-        .as[(Long, Array[Float])]
-        .mapPartitions(_.flatMap { case (vid, e) =>
-          if (normK(e, dim) == 0) None // cosine undefined: not served
-          else Some((vid, pqAssignK(bc.value, e, m, nCells, sub)))
-        })
-        .toDF("vec_id", "codes")
-        .write.mode("overwrite")
-        .parquet(IndexCommit.segmentPath(dir, "codes", gen))
-      prev.tables.updated("codes", prev.tables("codes") :+ s"codes-g$gen")
-    }
-    IndexCommit.gcUnreferenced(spark, dir, retainGens)
+    IndexCommit.commitDeltas(spark, dir, "pqAppendIndex", "vec_id",
+      Seq(increment), Seq("codes" -> ((dest: String) =>
+        pqEncode(increment, bc, m, nCells, dim).write.mode("overwrite")
+          .parquet(dest))),
+      None, retainGens)
+  }
+
+  /** The PQ code rows (vec_id, codes) of `vectors` under the codebook
+    * `bc` — the one encode of the build and the append: the
+    * deterministic [[pqAssignK]] per non-null vector, zero-norm ones
+    * excluded (cosine undefined: not served). */
+  private def pqEncode(vectors: DataFrame,
+      bc: org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]],
+      m: Int, nCells: Int, dim: Int): DataFrame = {
+    import vectors.sparkSession.implicits._
+    vectors.select(col("vec_id"), col("embedding"))
+      .filter(col("embedding").isNotNull)
+      .as[(Long, Array[Float])]
+      .mapPartitions(_.flatMap { case (vid, e) =>
+        if (normK(e, dim) == 0) None
+        else Some((vid, pqAssignK(bc.value, e, m, nCells, dim / m)))
+      })
+      .toDF("vec_id", "codes")
   }
 
   /** Chunk-blocked scan over PQ CODES — [[scanChunks]] with the m-byte
@@ -3027,14 +2874,7 @@ object VectorSearch {
     val spark = vectors.sparkSession
     import spark.implicits._
     IndexCommit.commit(spark, dir) { (gen, _) =>
-      vectors.select(col("vec_id"), col("embedding"))
-        .filter(col("embedding").isNotNull)
-        .as[(Long, Array[Float])]
-        .mapPartitions(_.map { case (vid, e) =>
-          (vid, java.util.Arrays.copyOf(e, prefixDim))
-        })
-        .toDF("vec_id", "prefix")
-        .write.mode("overwrite")
+      mrlPrefixes(vectors, prefixDim).write.mode("overwrite")
         .parquet(IndexCommit.segmentPath(dir, "prefix", gen))
       Seq((prefixDim, dim)).toDF("prefix_dim", "dim")
         .coalesce(1).write.mode("overwrite")
@@ -3051,31 +2891,11 @@ object VectorSearch {
     * base+append is BIT-IDENTICAL to a full rebuild and serving
     * shares [[mrlTopK]]'s oracle outright. The increment lands as a
     * new manifest segment in one flip — a crashed append is
-    * invisible, a retry replaces its orphan. */
+    * invisible, a retry replaces its orphan. The one-increment
+    * [[mrlApplyDeltas]] cycle. */
   def mrlAppendIndex(spark: org.apache.spark.sql.SparkSession,
-                     dir: String, increment: DataFrame, retainGens: Int = 1): Unit = {
-    import spark.implicits._
-    val meta = IndexCommit.readTable(spark, dir, "meta").head()
-    val prefixDim = meta.getInt(0)
-    IndexCommit.commit(spark, dir) { (gen, cur) =>
-      val prev = cur.getOrElse(sys.error(
-        s"mrlAppendIndex: no committed index at $dir — mrlWriteIndex first"))
-      IndexCommit.requireDisjointFromTombstones(spark, dir, prev,
-        increment.select("vec_id"), "vec_id", "mrlAppendIndex")
-      increment.select(col("vec_id"), col("embedding"))
-        .filter(col("embedding").isNotNull)
-        .as[(Long, Array[Float])]
-        .mapPartitions(_.map { case (vid, e) =>
-          (vid, java.util.Arrays.copyOf(e, prefixDim))
-        })
-        .toDF("vec_id", "prefix")
-        .write.mode("overwrite")
-        .parquet(IndexCommit.segmentPath(dir, "prefix", gen))
-      prev.tables.updated("prefix",
-        prev.tables("prefix") :+ s"prefix-g$gen")
-    }
-    IndexCommit.gcUnreferenced(spark, dir, retainGens)
-  }
+                     dir: String, increment: DataFrame, retainGens: Int = 1): Unit =
+    mrlApplyDeltas(spark, dir, Seq(increment), None, retainGens)
 
   /** ONE-COMMIT append(+takedown) cycle for the MRL prefix family
     * (the sequential [[mrlAppendIndex]]+[[deleteVectors]] chain under
@@ -3084,24 +2904,25 @@ object VectorSearch {
                      dir: String, increments: Seq[DataFrame],
                      deleteIds: Option[DataFrame] = None,
                      retainGens: Int = 1): Unit = {
-    import spark.implicits._
-    val meta = IndexCommit.readTable(spark, dir, "meta").head()
-    val prefixDim = meta.getInt(0)
+    val prefixDim = IndexCommit.readTable(spark, dir, "meta").head().getInt(0)
     IndexCommit.commitDeltas(spark, dir, "mrlApplyDeltas", "vec_id",
-      if (increments.isEmpty) None
-      else Some(increments.map(_.select(col("vec_id")))
-        .reduce(_ unionByName _)),
-      increments.map(inc => "prefix" -> ((dest: String) =>
-        inc.select(col("vec_id"), col("embedding"))
-          .filter(col("embedding").isNotNull)
-          .as[(Long, Array[Float])]
-          .mapPartitions(_.map { case (vid, e) =>
-            (vid, java.util.Arrays.copyOf(e, prefixDim))
-          })
-          .toDF("vec_id", "prefix")
-          .write.mode("overwrite")
-          .parquet(dest))),
+      increments, increments.map(inc => "prefix" -> ((dest: String) =>
+        mrlPrefixes(inc, prefixDim).write.mode("overwrite").parquet(dest))),
       deleteIds, retainGens)
+  }
+
+  /** The (vec_id, prefix) rows of `vectors` — the stateless MRL
+    * "quantizer" of the build and the delta path: the first
+    * `prefixDim` floats of every non-null embedding. */
+  private def mrlPrefixes(vectors: DataFrame, prefixDim: Int): DataFrame = {
+    import vectors.sparkSession.implicits._
+    vectors.select(col("vec_id"), col("embedding"))
+      .filter(col("embedding").isNotNull)
+      .as[(Long, Array[Float])]
+      .mapPartitions(_.map { case (vid, e) =>
+        (vid, java.util.Arrays.copyOf(e, prefixDim))
+      })
+      .toDF("vec_id", "prefix")
   }
 
   /** Serve Matryoshka two-stage top-k from a persisted prefix table
@@ -3133,58 +2954,20 @@ object VectorSearch {
     * the write's served-set rule; rows whose cell has no persisted
     * centroid are skipped (a probe can only reach persisted cells, so
     * they are unservable until the next rebuild). Completes the
-    * nightly-ingest lifecycle across all four index families. */
+    * nightly-ingest lifecycle across all four index families. The
+    * one-increment [[ivfPqApplyDeltas]] cycle. */
   def ivfPqAppendIndex(spark: org.apache.spark.sql.SparkSession,
                        dir: String, increment: DataFrame,
-                       cellCol: String = "label", retainGens: Int = 1): Unit = {
-    import spark.implicits._
-    val meta = IndexCommit.readTable(spark, dir, "meta").head()
-    val (m, nCells, dim) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-    val sub = dim / m
-    val bcCent = spark.sparkContext.broadcast(
-      IndexCommit.readTable(spark, dir, "centroids")
-        .as[(Int, Array[Double])].collect().toMap)
-    val bcCb = spark.sparkContext.broadcast(
-      readPqCodebooks(spark, dir, m, nCells))
-    val codesInc = increment
-      .select(col(cellCol).cast("int").as("cell"), col("vec_id"),
-        col("embedding"))
-      .filter(col("embedding").isNotNull)
-      .as[(Int, Long, Array[Float])]
-      .mapPartitions { it =>
-        val cents = bcCent.value
-        val cbv = bcCb.value
-        it.flatMap { case (cell, vid, e) =>
-          if (normK(e, dim) == 0) None // excluded from the served set
-          else cents.get(cell).map { c =>
-            val r = new Array[Double](dim)
-            var i = 0
-            while (i < dim) { r(i) = e(i).toDouble - c(i); i += 1 }
-            (cell, vid, pqAssignKD(cbv, r, m, nCells, sub))
-          }
-        }
-      }
-      .toDF("cell", "vec_id", "codes")
-    IndexCommit.commit(spark, dir) { (gen, cur) =>
-      val prev = cur.getOrElse(sys.error(
-        s"ivfPqAppendIndex: no committed index at $dir — " +
-          "ivfPqWriteIndex first"))
-      IndexCommit.requireDisjointFromTombstones(spark, dir, prev,
-        increment.select("vec_id"), "vec_id", "ivfPqAppendIndex")
-      IndexCommit.clusterForPartitionedWrite(codesInc,
-          IndexCommit.partitionedWriteWidth(increment), "cell",
-          nCells.toLong, "vec_id")
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(IndexCommit.segmentPath(dir, "codes", gen))
-      prev.tables.updated("codes", prev.tables("codes") :+ s"codes-g$gen")
-    }
-    IndexCommit.gcUnreferenced(spark, dir, retainGens)
-  }
+                       cellCol: String = "label", retainGens: Int = 1): Unit =
+    ivfPqApplyDeltas(spark, dir, Seq(increment), None, cellCol, retainGens)
 
   /** ONE-COMMIT append(+takedown) cycle for the IVFPQ family (the
     * sequential [[ivfPqAppendIndex]]+[[deleteVectors]] chain under a
     * single manifest flip; see [[IndexCommit.commitDeltas]] — the
-    * frozen centroid/codebook artifacts are collected once). */
+    * frozen centroid/codebook artifacts are collected once). The
+    * partition column is the COARSE cell, so the writer sub-split
+    * ([[IndexCommit.clusterForPartitionedWrite]]) counts the persisted
+    * centroids, not the codebook size. */
   def ivfPqApplyDeltas(spark: org.apache.spark.sql.SparkSession,
                        dir: String, increments: Seq[DataFrame],
                        deleteIds: Option[DataFrame] = None,
@@ -3194,9 +2977,9 @@ object VectorSearch {
     val meta = IndexCommit.readTable(spark, dir, "meta").head()
     val (m, nCells, dim) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
     val sub = dim / m
-    val bcCent = spark.sparkContext.broadcast(
-      IndexCommit.readTable(spark, dir, "centroids")
-        .as[(Int, Array[Double])].collect().toMap)
+    val centroids = IndexCommit.readTable(spark, dir, "centroids")
+      .as[(Int, Array[Double])].collect().toMap
+    val bcCent = spark.sparkContext.broadcast(centroids)
     val bcCb = spark.sparkContext.broadcast(
       readPqCodebooks(spark, dir, m, nCells))
     def encode(increment: DataFrame): DataFrame = increment
@@ -3219,13 +3002,10 @@ object VectorSearch {
       }
       .toDF("cell", "vec_id", "codes")
     IndexCommit.commitDeltas(spark, dir, "ivfPqApplyDeltas", "vec_id",
-      if (increments.isEmpty) None
-      else Some(increments.map(_.select(col("vec_id")))
-        .reduce(_ unionByName _)),
-      increments.map(inc => "codes" -> ((dest: String) =>
+      increments, increments.map(inc => "codes" -> ((dest: String) =>
         IndexCommit.clusterForPartitionedWrite(encode(inc),
             IndexCommit.partitionedWriteWidth(inc), "cell",
-            nCells.toLong, "vec_id")
+            centroids.size.toLong, "vec_id")
           .write.mode("overwrite").partitionBy("cell")
           .parquet(dest))),
       deleteIds, retainGens)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.functions.col
 
 /** Round-18 optimization equivalences, pinned:
   *
@@ -8,13 +9,17 @@ import graft.SparkSpec
   *    `applyDeltas`) produces THE SAME index as the sequential
   *    append×N + delete chain — same per-table segment counts (the
   *    health cards' segment-debt numbers), same table contents, same
-  *    fsck verdicts — in one manifest generation instead of N+1;
+  *    fsck verdicts — in one manifest generation instead of N+1, for
+  *    BM25, the LSH/IVF/IVFPQ/MRL vector families and the dedup index,
+  *    with single-operation cycles keeping the sequential segment
+  *    names;
   *  - the salted writer sub-split
   *    ([[IndexCommit.clusterForPartitionedWrite]]) never changes the
   *    partition-directory layout or the rows, only the file count
   *    within a partition value once the width exceeds the value count;
   *  - [[graft.FastRawLocalFileSystem]] reports the same file statuses
-  *    as stock Hadoop, minus the per-file shell exec. */
+  *    — and the same FileNotFoundException for a path that vanishes
+  *    mid-listing — as stock Hadoop, minus the per-file shell exec. */
 class DeltaCycleSpec extends SparkSpec {
   import spark.implicits._
   import org.apache.spark.sql.DataFrame
@@ -74,39 +79,142 @@ class DeltaCycleSpec extends SparkSpec {
       // ... in ONE generation instead of three
       assert(IndexCommit.currentManifest(spark, batDir).get.gen == 2L)
       assert(IndexCommit.currentManifest(spark, seqDir).get.gen == 4L)
+      // a delete-only cycle keeps the sequential `df-g<gen>` name; the
+      // `df-x` infix marks a takedown beside increment df deltas only
+      val seqT = IndexCommit.currentManifest(spark, seqDir).get.tables
+      assert(seqT("df").last == "df-g4")
+      assert(seqT("postings").last == "postings-g3")
+      assert(seqT("tombstones") == Seq("tombstones-g4"))
+      assert(IndexCommit.currentManifest(spark, batDir).get
+        .tables("df").last == "df-x-g2")
     } finally { rmRf(seqDir); rmRf(batDir) }
   }
 
   private val vecs = (1L to 40L).map { i =>
-    (i, Array.tabulate(64)(d => ((i * 31 + d * 7) % 13 - 6).toFloat))
-  }.toDF("vec_id", "embedding")
+    (i, i % 3, Array.tabulate(64)(d => ((i * 31 + d * 7) % 13 - 6).toFloat))
+  }.toDF("vec_id", "label", "embedding")
 
-  test("lshApplyDeltas == lshAppendIndex + deleteVectors") {
-    val seqDir = tmpDir("graft_dc_lseq")
-    val batDir = tmpDir("graft_dc_lbat")
+  /** One persisted-index family's lifecycle surface, for the table-
+    * driven "one delta cycle == the sequential chain" check. */
+  private case class Family(name: String, rowsTable: String,
+                            keyCol: String, data: DataFrame,
+                            build: (DataFrame, String) => Unit,
+                            append: (String, DataFrame) => Unit,
+                            delete: (String, DataFrame) => Unit,
+                            applyDeltas: (String, Seq[DataFrame],
+                              Option[DataFrame]) => Unit,
+                            fsck: String => DataFrame)
+
+  private val vectorFamilies = Seq(
+    Family("lsh", "buckets", "vec_id", vecs,
+      VectorSearch.lshWriteIndex(_, _),
+      VectorSearch.lshAppendIndex(spark, _, _),
+      VectorSearch.deleteVectors(spark, _, _),
+      VectorSearch.lshApplyDeltas(spark, _, _, _),
+      VectorSearch.lshFsck(spark, _)),
+    Family("ivf", "cells", "vec_id", vecs,
+      VectorSearch.ivfWriteIndex(_, _),
+      VectorSearch.ivfAppendIndex(spark, _, _),
+      VectorSearch.deleteVectors(spark, _, _),
+      VectorSearch.ivfApplyDeltas(spark, _, _, _),
+      VectorSearch.ivfFsck(spark, _)),
+    Family("ivfPq", "codes", "vec_id", vecs,
+      VectorSearch.ivfPqWriteIndex(_, _),
+      VectorSearch.ivfPqAppendIndex(spark, _, _),
+      VectorSearch.deleteVectors(spark, _, _),
+      VectorSearch.ivfPqApplyDeltas(spark, _, _, _),
+      VectorSearch.ivfPqFsck(spark, _)),
+    Family("mrl", "prefix", "vec_id", vecs,
+      VectorSearch.mrlWriteIndex(_, _),
+      VectorSearch.mrlAppendIndex(spark, _, _),
+      VectorSearch.deleteVectors(spark, _, _),
+      VectorSearch.mrlApplyDeltas(spark, _, _, _),
+      VectorSearch.mrlFsck(spark, _)))
+
+  private val dedupFamily =
+    Family("dedup", "bands", "doc_id", docs,
+      TextDedup.writeDedupIndex(_, "doc_id", "text", _),
+      TextDedup.appendDedupIndex(spark, _, _, "doc_id", "text"),
+      TextDedup.deleteFromDedupIndex(spark, _, _),
+      TextDedup.dedupApplyDeltas(spark, _, _, "doc_id", "text", _),
+      TextDedup.dedupFsck(spark, _))
+
+  (vectorFamilies.map(f => (f,
+      s"${f.name}ApplyDeltas == ${f.name}AppendIndex + deleteVectors")) :+
+    ((dedupFamily,
+      "dedupApplyDeltas == appendDedupIndex + deleteFromDedupIndex")))
+    .foreach { case (f, title) =>
+    test(title) {
+      val seqDir = tmpDir(s"graft_dc_${f.name}_seq")
+      val batDir = tmpDir(s"graft_dc_${f.name}_bat")
+      try {
+        val key = col(f.keyCol)
+        val base = f.data.filter(key % 2 === 0)
+        val inc = f.data.filter(key % 2 === 1)
+        val del = f.data.filter(key % 5 === 2).select(key)
+        Seq(seqDir, batDir).foreach(d => f.build(base, d))
+        f.append(seqDir, inc)
+        f.delete(seqDir, del)
+        f.applyDeltas(batDir, Seq(inc), Some(del))
+        assert(segCounts(batDir) == segCounts(seqDir))
+        val tables = IndexCommit.currentManifest(spark, seqDir).get.tables
+        tables.keys.foreach { t =>
+          assert(rowsOf(IndexCommit.readTable(spark, batDir, t)) ==
+            rowsOf(IndexCommit.readTable(spark, seqDir, t)), s"table $t")
+        }
+        // single-operation cycles keep the sequential segment names: a
+        // one-increment append stages `<t>-g<gen>`, a delete
+        // `tombstones-g<gen>`
+        assert(tables(f.rowsTable).last == s"${f.rowsTable}-g2")
+        assert(tables("tombstones") == Seq("tombstones-g3"))
+        val bat = IndexCommit.currentManifest(spark, batDir).get
+        assert(bat.tables(f.rowsTable).last == s"${f.rowsTable}-g2")
+        assert(bat.tables("tombstones") == Seq("tombstones-g2"))
+        val fs = rowsOf(f.fsck(seqDir)
+          .select($"check", $"expected", $"actual", $"ok"))
+        assert(rowsOf(f.fsck(batDir)
+          .select($"check", $"expected", $"actual", $"ok")) == fs)
+        assert(fs.forall(_.endsWith(",true]")), fs)
+        assert(bat.gen == 2L)
+        assert(IndexCommit.currentManifest(spark, seqDir).get.gen == 3L)
+      } finally { rmRf(seqDir); rmRf(batDir) }
+    }
+  }
+
+  test("ivfPq delta path sub-splits hot coarse cells (coarse cells < nCells)") {
+    // `vecs` has 3 coarse cells (label = vec_id % 3) under the default
+    // 16-entry codebook: the local[4] write width 4 exceeds the cell
+    // count, so each cell writes through ceil(4 / 3) = 2 salted tasks —
+    // sized by the centroid count, the partition column's real
+    // cardinality, not by nCells (which gives k = 1)
+    val dir = tmpDir("graft_dc_pqsplit")
+    val flat = tmpDir("graft_dc_pqflat")
     try {
-      val base = vecs.filter($"vec_id" % 2 === 0)
-      val inc = vecs.filter($"vec_id" % 2 === 1)
-      val del = vecs.filter($"vec_id" % 5 === 2).select($"vec_id")
-      Seq(seqDir, batDir).foreach(d => VectorSearch.lshWriteIndex(base, d))
-      VectorSearch.lshAppendIndex(spark, seqDir, inc)
-      VectorSearch.deleteVectors(spark, seqDir, del)
-      VectorSearch.lshApplyDeltas(spark, batDir, Seq(inc), Some(del))
-      assert(segCounts(batDir) == segCounts(seqDir))
-      Seq("buckets", "tombstones").foreach { t =>
-        assert(rowsOf(IndexCommit.readTable(spark, batDir, t)
-            .select($"vec_id")) ==
-          rowsOf(IndexCommit.readTable(spark, seqDir, t)
-            .select($"vec_id")), s"table $t")
-      }
-      val fs = rowsOf(VectorSearch.lshFsck(spark, seqDir)
-        .select($"check", $"ok"))
-      assert(rowsOf(VectorSearch.lshFsck(spark, batDir)
-        .select($"check", $"ok")) == fs)
-      assert(fs.forall(_.contains("true")))
-      assert(IndexCommit.currentManifest(spark, batDir).get.gen == 2L)
-      assert(IndexCommit.currentManifest(spark, seqDir).get.gen == 3L)
-    } finally { rmRf(seqDir); rmRf(batDir) }
+      VectorSearch.ivfPqWriteIndex(vecs.filter($"vec_id" <= 20), dir)
+      VectorSearch.ivfPqAppendIndex(spark, dir, vecs.filter($"vec_id" > 20))
+      def cellFiles(segDir: String): Seq[Int] =
+        new java.io.File(segDir).listFiles().filter(_.isDirectory).toSeq
+          .map(_.listFiles().count(_.getName.endsWith(".parquet")))
+      val seg = IndexCommit.currentManifest(spark, dir).get.tables("codes").last
+      assert(cellFiles(s"$dir/$seg").exists(_ > 1),
+        s"expected a sub-split hot cell: ${cellFiles(s"$dir/$seg")}")
+      // the split changes the file layout only: the same index with
+      // its appended segment rewritten one file per cell serves the
+      // same rows
+      IndexCommit.cloneSnapshot(spark, dir, flat)
+      val flatSeg = IndexCommit.currentManifest(spark, flat).get
+        .tables("codes").last
+      val rows = spark.read.parquet(s"$flat/$flatSeg").collect()
+      val schema = spark.read.parquet(s"$flat/$flatSeg").schema
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+        .repartition(1).write.mode("overwrite").partitionBy("cell")
+        .parquet(s"$flat/$flatSeg")
+      assert(cellFiles(s"$flat/$flatSeg").forall(_ == 1))
+      val qs = vecs.filter($"vec_id" % 7 === 0)
+        .select($"vec_id".as("qid"), $"embedding".as("qe"))
+      assert(rowsOf(VectorSearch.ivfPqServe(spark, flat, vecs, qs, 5)) ==
+        rowsOf(VectorSearch.ivfPqServe(spark, dir, vecs, qs, 5)))
+    } finally { rmRf(dir); rmRf(flat) }
   }
 
   test("clusterForPartitionedWrite: identity at k=1; layout-preserving sub-split at k>1") {
@@ -167,6 +275,30 @@ class DeltaCycleSpec extends SparkSpec {
       // file listStatus: single-entry array, like stock
       assert(fast.listStatus(new org.apache.hadoop.fs.Path(dir, "a.txt"))
         .length == 1)
+      // a directory that vanishes between the attribute read and the
+      // listing, or whose iteration fails on a vanished path, reports
+      // FileNotFoundException like stock Hadoop's missing-path case —
+      // the exception Spark's listing-race handling catches
+      val racy = new graft.FastRawLocalFileSystem {
+        override private[graft] def childNames(
+            d: java.nio.file.Path): Array[String] = {
+          rmRf(d.toString)
+          super.childNames(d)
+        }
+      }
+      racy.initialize(new java.net.URI("file:///"), conf)
+      intercept[java.io.FileNotFoundException](racy.listStatus(
+        new org.apache.hadoop.fs.Path(sub.getPath)))
+      intercept[java.io.FileNotFoundException](stock.listStatus(
+        new org.apache.hadoop.fs.Path(sub.getPath)))
+      val torn = new graft.FastRawLocalFileSystem {
+        override private[graft] def childNames(
+            d: java.nio.file.Path): Array[String] =
+          throw new java.nio.file.DirectoryIteratorException(
+            new java.nio.file.NoSuchFileException(d.toString))
+      }
+      torn.initialize(new java.net.URI("file:///"), conf)
+      intercept[java.io.FileNotFoundException](torn.listStatus(p))
     } finally rmRf(dir)
   }
 }
