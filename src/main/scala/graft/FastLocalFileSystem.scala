@@ -21,11 +21,16 @@ import org.apache.hadoop.fs.permission.FsPermission
   * families (the Spark jobs inside the same entries sum to a third of
   * their wall time).
   *
-  * Semantics are identical to stock Hadoop: length, directory flag,
-  * mtime/atime, owner, group and permission bits come from the same
-  * inodes via PosixFileAttributes (symlinks followed, like the shell
-  * path); the checksum wrapper below keeps LocalFileSystem's CRC
-  * sidecar behavior byte-for-byte. On a real cluster with native IO
+  * Semantics match stock Hadoop: length, directory flag,
+  * mtime/atime, owner, group and the nine rwx permission bits come
+  * from the same inodes via PosixFileAttributes (symlinks followed,
+  * like the shell path); the checksum wrapper below keeps
+  * LocalFileSystem's CRC sidecar behavior byte-for-byte. One
+  * difference: the setuid, setgid and sticky bits are dropped —
+  * java.nio's PosixFilePermission has no constants for them, so every
+  * status carries them as 0, where stock Hadoop's `ls`-parsed status
+  * reports them. Nothing in graft reads them (index files and segment
+  * dirs are written without them). On a real cluster with native IO
   * the stock path is already fast — this class restores the intended
   * local performance, it does not change what is computed. Registered
   * through `fs.file.impl` in [[Tuning]]. */

@@ -22,6 +22,16 @@ import org.apache.spark.sql.SparkSession
   *    `mode("overwrite")` replaces. The known v2 caveat (concurrent
   *    task-commit visibility on non-atomic-rename stores) is exactly
   *    the window the manifest protocol already tolerates.
+  *    The setting is session-wide, so it also covers the writes that
+  *    do NOT go through IndexCommit staging: Verify's result dumps,
+  *    streaming sinks and the dev tools' outputs. For those, v2 gives
+  *    up job-commit atomicity — a job that fails after some tasks
+  *    committed leaves those tasks' files visible in the output dir,
+  *    and a reader listing the dir mid-job sees a partial result. The
+  *    writes affected here are scratch or `mode("overwrite")` outputs
+  *    that a rerun replaces and that nothing reads before the job
+  *    returns; a write whose readers need all-or-nothing visibility
+  *    must stage through IndexCommit (or a v1 session).
   *
   *  - parallel partition discovery threshold 1024 (default 32): below
   *    the threshold the driver lists partition dirs with its own

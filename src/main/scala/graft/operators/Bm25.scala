@@ -267,11 +267,11 @@ object Bm25 {
           .as("doc_id")).distinct()
         val priorTombs =
           if (prev.tables.contains("tombstones"))
-            IndexCommit.readTable(spark, dir, "tombstones")
+            IndexCommit.readTableOf(spark, dir, prev, "tombstones")
           else newIds.limit(0)
         val fresh = newIds.join(priorTombs, Seq("doc_id"), "left_anti")
           .localCheckpoint(eager = true)
-        val post = (IndexCommit.readTable(spark, dir, "postings") +:
+        val post = (IndexCommit.readTableOf(spark, dir, prev, "postings") +:
           tfIncs.map(_.select(col("term"), col("doc_id"), col("dl"),
             col("tf")))).reduce(_ unionByName _)
         val delRows = post.join(fresh, Seq("doc_id"))
@@ -327,7 +327,7 @@ object Bm25 {
             })
       }
       val statsWrite: () => Unit = () => {
-        val prior = IndexCommit.readTable(spark, dir, "stats")
+        val prior = IndexCommit.readTableOf(spark, dir, prev, "stats")
         val merged =
           if (bases.isEmpty) prior
           else (prior +: bases.map(_.agg(count(lit(1)).as("n_docs"),
@@ -446,10 +446,7 @@ object Bm25 {
       // materialize pending deletes: the rewrite drops tombstoned rows
       // and the tombstones table itself — the mask becomes physical
       val live =
-        if (prev.tables.contains("tombstones"))
-          postings.join(IndexCommit.readTable(spark, dir, "tombstones"),
-            Seq("doc_id"), "left_anti")
-        else postings
+        IndexCommit.maskTombstonesOf(spark, dir, prev, postings, "doc_id")
       // two independent staged tables — overlap the rewrites
       Par.all(Seq[() => Unit](
         () => {
@@ -574,14 +571,14 @@ object Bm25 {
     val maxSeg = m.tables.values.map(_.size).max
     val masked =
       if (m.tables.contains("tombstones"))
-        IndexCommit.readTable(spark, dir, "tombstones")
+        IndexCommit.readTableOf(spark, dir, m, "tombstones")
           .agg(count(lit(1)).cast("long").as("masked_docs"))
       else
         // range(1)'s id IS the zero — a lit(0L) column would be
         // foldable and collapse withScalars' constant-key join back
         // into the nested-loop cross join it exists to avoid
         spark.range(1).select(col("id").as("masked_docs"))
-    val live = IndexCommit.readTable(spark, dir, "stats")
+    val live = IndexCommit.readTableOf(spark, dir, m, "stats")
       .select(col("n_docs").cast("long").as("live_docs"))
     val perTable = IndexCommit.segmentDebt(spark, dir, m)
     PlanHints.withScalars(PlanHints.withScalars(perTable, masked), live)
@@ -615,13 +612,9 @@ object Bm25 {
                 genA: Long, genB: Long): DataFrame = {
     def presentAt(gen: Long): DataFrame = {
       val m = IndexCommit.manifestAt(spark, dir, gen)
-      val docs = IndexCommit.readTableAt(spark, dir, "postings", gen)
+      val docs = IndexCommit.readTableOf(spark, dir, m, "postings")
         .select(col("doc_id")).distinct()
-      val present =
-        if (m.tables.contains("tombstones"))
-          docs.join(IndexCommit.readTableAt(spark, dir, "tombstones", gen),
-            Seq("doc_id"), "left_anti")
-        else docs
+      val present = IndexCommit.maskTombstonesOf(spark, dir, m, docs, "doc_id")
       // each generation's present-set anchors BOTH anti-joins below —
       // pin it so each gen's postings union is scanned once, not twice
       present.localCheckpoint(eager = true)
@@ -659,7 +652,7 @@ object Bm25 {
   def fsck(spark: org.apache.spark.sql.SparkSession,
            dir: String, atGen: Option[Long] = None): DataFrame = {
     val m = IndexCommit.manifestFor(spark, dir, atGen, "fsck")
-    def table(t: String) = IndexCommit.readTableAt(spark, dir, t, m.gen)
+    def table(t: String) = IndexCommit.readTableOf(spark, dir, m, t)
     // the postings union feeds the stats recount, the df recount AND
     // the orphan check, each its own scalar-subtree job — pin it once
     // (lazy localCheckpoint) so the audit reads the multi-segment
@@ -733,7 +726,7 @@ object Bm25 {
     }.toDF("qid", "term")
     val allTerms = queries.flatMap(_._2).distinct
     // the term filter pushes into every df delta segment's scan
-    val dfSegs = IndexCommit.readTableAt(spark, dir, "df", m.gen)
+    val dfSegs = IndexCommit.readTableOf(spark, dir, m, "df")
       .filter(col("term").isin(allTerms: _*))
     val perTerm = dfSegs.groupBy(col("term")).agg(
       sum(col("df")).as("live"),
@@ -753,8 +746,7 @@ object Bm25 {
             k1: Double = 1.2, b: Double = 0.75,
             atGen: Option[Long] = None): DataFrame = {
     val manifest = IndexCommit.manifestFor(spark, dir, atGen, "serve")
-    def table(t: String) =
-      IndexCommit.readTableAt(spark, dir, t, manifest.gen)
+    def table(t: String) = IndexCommit.readTableOf(spark, dir, manifest, t)
     val terms = queries.flatMap(_._2).distinct
     val raw = table("postings")
       .filter(col("term").isin(terms: _*))
@@ -762,10 +754,7 @@ object Bm25 {
     // tombstoned docs ([[deleteDocs]]) are masked here; df/stats were
     // decremented exactly at delete time, so the serve is
     // bit-identical to a from-scratch build on the surviving corpus
-    val tf =
-      if (manifest.tables.contains("tombstones"))
-        raw.join(table("tombstones"), Seq("doc_id"), "left_anti")
-      else raw
+    val tf = IndexCommit.maskTombstonesOf(spark, dir, manifest, raw, "doc_id")
     // the term filter pushes into EVERY df delta segment's scan; the
     // fold then nets base + append/delete deltas over only the
     // matching terms

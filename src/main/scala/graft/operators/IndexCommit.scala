@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Atomic multi-table commits and size-derived write widths for the
   * persisted index families (BM25 postings, LSH buckets, IVF cells,
@@ -185,14 +186,81 @@ object IndexCommit {
   /** [[readTable]] pinned to generation `gen` — the union of the
     * segments THAT manifest lists for `table`. */
   def readTableAt(spark: SparkSession, dir: String, table: String,
-                  gen: Long): DataFrame = {
-    val m = manifestAt(spark, dir, gen)
-    m.tables.getOrElse(table,
-        sys.error(s"index at $dir g$gen has no table '$table' " +
+                  gen: Long): DataFrame =
+    readTableOf(spark, dir, manifestAt(spark, dir, gen), table)
+
+  /** `table` as the already-resolved manifest `m` lists it. A reader
+    * that resolves its manifest once and reads every table through it
+    * sees one generation throughout — a commit+GC landing mid-read
+    * cannot pair one generation's codes with another's centroids —
+    * and parses the manifest once. */
+  private[operators] def readTableOf(spark: SparkSession, dir: String,
+                                     m: Manifest, table: String): DataFrame =
+    readSegments(spark, m.tables.getOrElse(table,
+        sys.error(s"index at $dir g${m.gen} has no table '$table' " +
           s"(manifest carries ${m.tables.keys.toSeq.sorted})"))
-      .map(s => spark.read.option("basePath", s"$dir/$s")
-        .parquet(s"$dir/$s"))
-      .reduce(_ unionByName _)
+      .map(s => s"$dir/$s"))
+
+  /** The union of the segment dirs at `paths`, each opened by
+    * [[openSegment]]. */
+  private[operators] def readSegments(spark: SparkSession,
+                                      paths: Seq[String]): DataFrame =
+    paths.map(openSegment(spark, _)).reduce(_ unionByName _)
+
+  /** The key under which Spark stores a written frame's schema in
+    * every parquet footer. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Open ONE committed segment dir against its own `basePath` (see
+    * [[readTable]]) — the only place an index segment is read.
+    *
+    * The data schema comes from the footer of the segment's first
+    * visible data file, read on the driver, instead of from Spark's
+    * schema inference, which runs a one-task Spark job per open to
+    * read that same footer. A segment is written by one Spark write,
+    * so every part file in it carries the same schema. Partition
+    * columns are still discovered from the directory names. A segment
+    * with no data file, or whose footer holds no Spark schema, falls
+    * through to the inferred read, so its behaviour (Spark's error
+    * included) is unchanged. */
+  private def openSegment(spark: SparkSession, root: String): DataFrame = {
+    val reader = spark.read.option("basePath", root)
+    footerSchema(spark, root).fold(reader)(reader.schema).parquet(root)
+  }
+
+  /** The Spark schema in the footer of the first visible data file
+    * under `root` (depth-first in name order, skipping Spark's hidden
+    * `_*` and `.*` names); None when there is no such file, the footer
+    * holds no Spark schema, or listing or reading fails — the caller
+    * then leaves the read to Spark's inference. */
+  private def footerSchema(spark: SparkSession,
+                           root: String): Option[StructType] = {
+    import org.apache.parquet.HadoopReadOptions
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(root)
+    val fs = p.getFileSystem(conf)
+    def firstFile(dir: Path): Option[FileStatus] =
+      fs.listStatus(dir)
+        .filterNot { st =>
+          val n = st.getPath.getName
+          n.startsWith("_") || n.startsWith(".")
+        }
+        .sortBy(_.getPath.getName).iterator
+        .flatMap(st => if (st.isDirectory) firstFile(st.getPath) else Some(st))
+        .nextOption()
+    try firstFile(p).flatMap { st =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
+        HadoopReadOptions.builder(conf, st.getPath)
+          .withMetadataFilter(SKIP_ROW_GROUPS).build())
+      val json =
+        try reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get(SparkSchemaKey)
+        finally reader.close()
+      Option(json).map(DataType.fromJson).collect { case s: StructType => s }
+    } catch { case scala.util.control.NonFatal(_) => None }
   }
 
   /** Run one atomic commit against `dir`: `stage(gen, current)` writes
@@ -366,8 +434,8 @@ object IndexCommit {
           .as(keyCol)).distinct()
         val fresh =
           if (prev.tables.contains("tombstones"))
-            newIds.join(readTable(spark, dir, "tombstones"), Seq(keyCol),
-              "left_anti")
+            newIds.join(readTableOf(spark, dir, prev, "tombstones"),
+              Seq(keyCol), "left_anti")
           else newIds
         (newIds, fresh)
       }
@@ -422,11 +490,11 @@ object IndexCommit {
     * multi-path partition discovery rejects sibling partitioned roots
     * as conflicting structures), so `cell=…`/`bkt=…` dirs under every
     * segment resolve to the same column and partition pruning applies
-    * per scan under the union. */
+    * per scan under the union. Each segment is opened with the schema
+    * in its own parquet footer, read on the driver ([[openSegment]]),
+    * so building the frame starts no Spark job. */
   def readTable(spark: SparkSession, dir: String, table: String): DataFrame =
-    tablePaths(spark, dir, table)
-      .map(p => spark.read.option("basePath", p).parquet(p))
-      .reduce(_ unionByName _)
+    readSegments(spark, tablePaths(spark, dir, table))
 
   /** CLONE one committed snapshot into a fresh index directory — the
     * promotion/backup primitive (validate an index in staging, then
@@ -760,10 +828,7 @@ object IndexCommit {
       // which resolves the CURRENT manifest) so segment counts and row
       // counts derive from the same snapshot — a time-travel manifest
       // reports its own rows, never a mix of old layout and new data
-      m.tables(t)
-        .map(s => spark.read.option("basePath", s"$dir/$s")
-          .parquet(s"$dir/$s"))
-        .reduce(_ unionByName _)
+      readTableOf(spark, dir, m, t)
         .agg(count(lit(1)).cast("long").as("n_rows"))
         .select(lit(t).as("tbl"),
           lit(m.tables(t).size).as("segments"), col("n_rows"))
@@ -898,7 +963,7 @@ object IndexCommit {
                                     prev: Manifest, ids: DataFrame,
                                     keyCol: String, op: String): Unit =
     if (prev.tables.contains("tombstones")) {
-      val overlap = readTable(spark, dir, "tombstones")
+      val overlap = readTableOf(spark, dir, prev, "tombstones")
         .join(ids.select(ids.col(ids.columns.head).cast("long")
           .as(keyCol)).distinct(), Seq(keyCol), "left_semi")
         .count()
@@ -913,8 +978,15 @@ object IndexCommit {
     * this so tombstoned rows never become candidates. */
   def maskTombstones(spark: SparkSession, dir: String, df: DataFrame,
                      keyCol: String): DataFrame =
-    if (currentManifest(spark, dir).exists(_.tables.contains("tombstones")))
-      df.join(readTable(spark, dir, "tombstones"), Seq(keyCol),
+    currentManifest(spark, dir).fold(df)(
+      maskTombstonesOf(spark, dir, _, df, keyCol))
+
+  /** [[maskTombstones]] against the already-resolved manifest `m` —
+    * the mask a reader pinned to one generation applies. */
+  private[operators] def maskTombstonesOf(spark: SparkSession, dir: String,
+      m: Manifest, df: DataFrame, keyCol: String): DataFrame =
+    if (m.tables.contains("tombstones"))
+      df.join(readTableOf(spark, dir, m, "tombstones"), Seq(keyCol),
         "left_anti")
     else df
 

@@ -494,8 +494,9 @@ object TextDedup {
     val bandI = bandKeysKernel(named, n, k, bands)
       .localCheckpoint(eager = false)
     val shI = shingleHashSets(named, n).localCheckpoint(eager = false)
-    def served(t: String) = IndexCommit.maskTombstones(spark, dir,
-      IndexCommit.readTable(spark, dir, t), "doc_id")
+    val man = IndexCommit.manifestFor(spark, dir, None, "nearDupAgainstIndex")
+    def served(t: String) = IndexCommit.maskTombstonesOf(spark, dir, man,
+      IndexCommit.readTableOf(spark, dir, man, t), "doc_id")
     val cands = bandI.as("a")
       .join(served("bands").as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&

@@ -490,10 +490,12 @@ object VectorSearch {
   def lshServe(spark: org.apache.spark.sql.SparkSession, dir: String,
                queries: DataFrame, k: Int,
                probeHamming: Int = 2): DataFrame = {
-    val meta = IndexCommit.readTable(spark, dir, "meta").head()
+    val man = IndexCommit.manifestFor(spark, dir, None, "lshServe")
+    def table(t: String) = IndexCommit.readTableOf(spark, dir, man, t)
+    val meta = table("meta").head()
     val (bits, dim) = (meta.getInt(0), meta.getInt(1))
-    val vbkt = IndexCommit.maskTombstones(spark, dir,
-      IndexCommit.readTable(spark, dir, "buckets")
+    val vbkt = IndexCommit.maskTombstonesOf(spark, dir, man,
+      table("buckets")
         .select(col("bkt").cast("int").as("bkt"), col("vec_id"),
           col("embedding"), col("nv")), "vec_id")
     lshScore(vbkt, lshQueryProbes(queries, bits, dim, probeHamming), dim, k)
@@ -1390,8 +1392,7 @@ object VectorSearch {
     // its centroids, AND its tombstone mask — serves bit-identically
     // to when it was current
     val m = IndexCommit.manifestFor(spark, dir, atGen, "ivfServe")
-    def table(t: String) =
-      IndexCommit.readTableAt(spark, dir, t, m.gen)
+    def table(t: String) = IndexCommit.readTableOf(spark, dir, m, t)
     val centroids = table("centroids")
       .as[(Int, Array[Double])].collect().sortBy(_._1)
     val raw = table("cells")
@@ -1399,10 +1400,7 @@ object VectorSearch {
               col("embedding"))
     // tombstoned vectors ([[deleteVectors]]) never become candidates;
     // centroids stay frozen, matching the append path
-    val assigned =
-      if (m.tables.contains("tombstones"))
-        raw.join(table("tombstones"), Seq("vec_id"), "left_anti")
-      else raw
+    val assigned = IndexCommit.maskTombstonesOf(spark, dir, m, raw, "vec_id")
     ivfScore(assigned, centroids, queries, k, nProbe, dim)
   }
 
@@ -1423,8 +1421,7 @@ object VectorSearch {
                        atGen: Option[Long] = None): DataFrame = {
     import spark.implicits._
     val m = IndexCommit.manifestFor(spark, dir, atGen, "ivfServeCostCard")
-    def table(t: String) =
-      IndexCommit.readTableAt(spark, dir, t, m.gen)
+    def table(t: String) = IndexCommit.readTableOf(spark, dir, m, t)
     val centroids = table("centroids")
       .as[(Int, Array[Double])].collect().sortBy(_._1)
     val raw = table("cells")
@@ -1433,10 +1430,7 @@ object VectorSearch {
       .agg(count(lit(1)).as("phys"))
     // mask with the PINNED generation's tombstones (maskTombstones
     // resolves the current manifest — wrong under atGen time travel)
-    val masked =
-      if (m.tables.contains("tombstones"))
-        raw.join(table("tombstones"), Seq("vec_id"), "left_anti")
-      else raw
+    val masked = IndexCommit.maskTombstonesOf(spark, dir, m, raw, "vec_id")
     val live = masked.groupBy(col("cell")).agg(count(lit(1)).as("live"))
     val probes = ivfProbes(queries, centroids, nProbe, dim)
       .select(col("qid"), col("cell"))
@@ -1463,13 +1457,9 @@ object VectorSearch {
     import org.apache.spark.sql.functions.lit
     def presentAt(gen: Long): DataFrame = {
       val m = IndexCommit.manifestAt(spark, dir, gen)
-      val ids = IndexCommit.readTableAt(spark, dir, rowsTable, gen)
+      val ids = IndexCommit.readTableOf(spark, dir, m, rowsTable)
         .select(col("vec_id")).distinct()
-      val present =
-        if (m.tables.contains("tombstones"))
-          ids.join(IndexCommit.readTableAt(spark, dir, "tombstones", gen),
-            Seq("vec_id"), "left_anti")
-        else ids
+      val present = IndexCommit.maskTombstonesOf(spark, dir, m, ids, "vec_id")
       // each generation's present-set anchors BOTH anti-joins below —
       // pin it so each gen's segment union is scanned once, not twice
       present.localCheckpoint(eager = true)
@@ -1549,10 +1539,7 @@ object VectorSearch {
         else {
           val bcC = spark.sparkContext.broadcast(
             centroids.as[(Int, Array[Double])].collect().sortBy(_._1))
-          appendSegs
-            .map(s => spark.read.option("basePath", s"$dir/$s")
-              .parquet(s"$dir/$s"))
-            .reduce(_ unionByName _)
+          IndexCommit.readSegments(spark, appendSegs.map(s => s"$dir/$s"))
             .select(col("cell").cast("int").as("cell"), col("vec_id"),
               col("embedding"))
             .as[(Int, Long, Array[Float])]
@@ -1614,7 +1601,7 @@ object VectorSearch {
         (DataFrame, Seq[Column], Seq[DataFrame],
           Seq[(String, Column, Column)])): DataFrame = {
     val m = IndexCommit.manifestFor(spark, dir, atGen, op)
-    def table(t: String) = IndexCommit.readTableAt(spark, dir, t, m.gen)
+    def table(t: String) = IndexCommit.readTableOf(spark, dir, m, t)
     val rows = table(rowsTable).select(rowCols: _*)
       .localCheckpoint(eager = true)
     val (perRow, rowAggs, aggs, checks) = family(m, table, rows)
@@ -1784,8 +1771,7 @@ object VectorSearch {
                      atGen: Option[Long] = None): Int = {
     import spark.implicits._
     val m = IndexCommit.manifestFor(spark, dir, atGen, "ivfChosenProbe")
-    def table(t: String) =
-      IndexCommit.readTableAt(spark, dir, t, m.gen)
+    def table(t: String) = IndexCommit.readTableOf(spark, dir, m, t)
     val centroids = table("centroids")
       .as[(Int, Array[Double])].collect().sortBy(_._1)
     val raw = table("cells")
@@ -2420,27 +2406,28 @@ object VectorSearch {
   def pqServe(spark: org.apache.spark.sql.SparkSession, dir: String,
               vectors: DataFrame, queries: DataFrame, k: Int,
               candMult: Int = 4): DataFrame = {
-    val meta = IndexCommit.readTable(spark, dir, "meta").head()
+    val man = IndexCommit.manifestFor(spark, dir, None, "pqServe")
+    def table(t: String) = IndexCommit.readTableOf(spark, dir, man, t)
+    val meta = table("meta").head()
     val (m, nCells, dim) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-    val cb = readPqCodebooks(spark, dir, m, nCells)
+    val cb = readPqCodebooks(table("codebooks"), m, nCells)
     val bc = spark.sparkContext.broadcast(cb)
     val candCut = math.min(k.toLong * candMult, Int.MaxValue).toInt
-    val codes = IndexCommit.maskTombstones(spark, dir,
-      IndexCommit.readTable(spark, dir, "codes"), "vec_id")
+    val codes =
+      IndexCommit.maskTombstonesOf(spark, dir, man, table("codes"), "vec_id")
     val approx = scanPqCodes(codes, queries, bc, m, dim / m, dim, candCut)
     pqFinish(approx, vectors, queries, dim, k, candCut)
   }
 
-  /** The persisted m·nCells codebook as the in-memory array the
-    * kernels index — cells never trained stay null (skipped by
-    * [[pqAssignKD]]). Shared by [[pqServe]] and [[pqAppendIndex]];
-    * bounded by construction (m·nCells rows). */
-  private def readPqCodebooks(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, m: Int, nCells: Int)
+  /** The persisted m·nCells `codebooks` table as the in-memory array
+    * the kernels index — cells never trained stay null (skipped by
+    * [[pqAssignKD]]). Shared by the PQ and IVFPQ serves and delta
+    * paths; bounded by construction (m·nCells rows). */
+  private def readPqCodebooks(codebooks: DataFrame, m: Int, nCells: Int)
       : Array[Array[Array[Double]]] = {
-    import spark.implicits._
+    import codebooks.sparkSession.implicits._
     val out = Array.fill[Array[Double]](m, nCells)(null)
-    IndexCommit.readTable(spark, dir, "codebooks")
+    codebooks
       .as[(Int, Int, Array[Double])].collect()
       .foreach { case (j, c, cent) => out(j)(c) = cent }
     out
@@ -2462,8 +2449,8 @@ object VectorSearch {
                     increment: DataFrame, retainGens: Int = 1): Unit = {
     val meta = IndexCommit.readTable(spark, dir, "meta").head()
     val (m, nCells, dim) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-    val bc = spark.sparkContext.broadcast(
-      readPqCodebooks(spark, dir, m, nCells))
+    val bc = spark.sparkContext.broadcast(readPqCodebooks(
+      IndexCommit.readTable(spark, dir, "codebooks"), m, nCells))
     IndexCommit.commitDeltas(spark, dir, "pqAppendIndex", "vec_id",
       Seq(increment), Seq("codes" -> ((dest: String) =>
         pqEncode(increment, bc, m, nCells, dim).write.mode("overwrite")
@@ -2834,17 +2821,19 @@ object VectorSearch {
                  vectors: DataFrame, queries: DataFrame, k: Int,
                  nProbe: Int = 3, candMult: Int = 4): DataFrame = {
     import spark.implicits._
-    val meta = IndexCommit.readTable(spark, dir, "meta").head()
+    val man = IndexCommit.manifestFor(spark, dir, None, "ivfPqServe")
+    def table(t: String) = IndexCommit.readTableOf(spark, dir, man, t)
+    val meta = table("meta").head()
     val (m, nCells, dim) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
     val sub = dim / m
     val candCut = math.min(k.toLong * candMult, Int.MaxValue).toInt
-    val centroids = IndexCommit.readTable(spark, dir, "centroids")
+    val centroids = table("centroids")
       .as[(Int, Array[Double])].collect().sortBy(_._1)
     val bcCent = spark.sparkContext.broadcast(centroids.toMap)
     val bcCb = spark.sparkContext.broadcast(
-      readPqCodebooks(spark, dir, m, nCells))
-    val recon = IndexCommit.maskTombstones(spark, dir,
-        IndexCommit.readTable(spark, dir, "codes"), "vec_id")
+      readPqCodebooks(table("codebooks"), m, nCells))
+    val recon = IndexCommit.maskTombstonesOf(spark, dir, man,
+        table("codes"), "vec_id")
       .select(col("cell").cast("int").as("cell"), col("vec_id"),
               col("codes"))
       .as[(Int, Long, Array[Int])]
@@ -2933,11 +2922,13 @@ object VectorSearch {
   def mrlServe(spark: org.apache.spark.sql.SparkSession, dir: String,
                vectors: DataFrame, queries: DataFrame, k: Int,
                candMult: Int = 4): DataFrame = {
-    val meta = IndexCommit.readTable(spark, dir, "meta").head()
+    val man = IndexCommit.manifestFor(spark, dir, None, "mrlServe")
+    def table(t: String) = IndexCommit.readTableOf(spark, dir, man, t)
+    val meta = table("meta").head()
     val (prefixDim, dim) = (meta.getInt(0), meta.getInt(1))
     val candCut = math.min(k.toLong * candMult, Int.MaxValue).toInt
-    val prefix = IndexCommit.maskTombstones(spark, dir,
-        IndexCommit.readTable(spark, dir, "prefix"), "vec_id")
+    val prefix = IndexCommit.maskTombstonesOf(spark, dir, man,
+        table("prefix"), "vec_id")
       .select(col("vec_id"), col("prefix").as("embedding"))
     val coarse = mrlCoarse(prefix, queries, prefixDim, candCut)
     pqFinish(coarse, vectors, queries, dim, k, candCut,
@@ -2980,8 +2971,8 @@ object VectorSearch {
     val centroids = IndexCommit.readTable(spark, dir, "centroids")
       .as[(Int, Array[Double])].collect().toMap
     val bcCent = spark.sparkContext.broadcast(centroids)
-    val bcCb = spark.sparkContext.broadcast(
-      readPqCodebooks(spark, dir, m, nCells))
+    val bcCb = spark.sparkContext.broadcast(readPqCodebooks(
+      IndexCommit.readTable(spark, dir, "codebooks"), m, nCells))
     def encode(increment: DataFrame): DataFrame = increment
       .select(col(cellCol).cast("int").as("cell"), col("vec_id"),
         col("embedding"))

@@ -33,7 +33,7 @@ object StreamQueries {
     val spark = env.spark
     import spark.implicits._
     import org.apache.spark.sql.functions.{explode, lit, max, max_by, sequence, when}
-    val stage = s"$scratchBase/t3_attempts"
+    val stage = freshScratch("t3_attempts")
     env.customer
       .select($"c_custkey".cast("long").as("id"),
               ($"c_custkey" % 3 === 0).as("allFail"),

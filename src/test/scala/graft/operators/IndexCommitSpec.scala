@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 
 /** Crash-consistency of the manifest commit protocol: every index
   * mutation stages segments first and flips one marker last, so a
@@ -841,4 +842,169 @@ class IndexCommitSpec extends SparkSpec {
       assert(healed.values.forall(_._3), s"post-compact all-ok: $healed")
     } finally rmRf(dir)
   }
+
+  /** Spark jobs that `body` starts from this thread, counted by a
+    * listener on the job group `body` runs under. Listener events are
+    * delivered in order, so once a sentinel job started afterwards in
+    * a second group arrives, every job of `body` has been counted. */
+  private def jobsStartedBy[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("frame-construction") => jobs.incrementAndGet(): Unit
+          case Some("listener-sentinel") => sentinel.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("frame-construction", "frame construction")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup("listener-sentinel", "listener sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the sentinel job never reached the listener")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The read every segment open made before footer schemas: Spark's
+    * own schema inference, one segment root at a time. */
+  private def inferredUnion(paths: Seq[String]) =
+    paths.map(p => spark.read.option("basePath", p).parquet(p))
+      .reduce(_ unionByName _)
+
+  private val vecs = (1L to 40L).map { i =>
+    (i, i % 3, Array.tabulate(64)(d => ((i * 31 + d * 7) % 13 - 6).toFloat))
+  }.toDF("vec_id", "label", "embedding")
+
+  test("segment opens read the footer schema: no Spark job, the " +
+       "schema Spark infers (BM25 deltas, IVFPQ cells, debt card, " +
+       "bare layout)") {
+    val bm25Dir = tmpDir("graft_open_bm25")
+    val ivfPqDir = tmpDir("graft_open_ivfpq")
+    val bareDir = tmpDir("graft_open_bare")
+    try {
+      Bm25.writeIndex(docs.filter($"doc_id" =!= 4L), "doc_id", "text",
+        bm25Dir)
+      Bm25.appendIndex(spark, bm25Dir, docs.filter($"doc_id" === 4L),
+        "doc_id", "text")
+      Bm25.deleteDocs(spark, bm25Dir, Seq(2L).toDF("doc_id"))
+      VectorSearch.ivfPqWriteIndex(vecs, ivfPqDir)
+      // pre-manifest layout: a bare partitioned table dir
+      Seq((1, "a"), (2, "b")).toDF("k", "v").write.partitionBy("k")
+        .parquet(s"$bareDir/t")
+      val bm25 = IndexCommit.currentManifest(spark, bm25Dir).get
+      assert(Seq("postings", "df").forall(bm25.tables(_).size > 1),
+        s"the BM25 case must cover multi-segment tables: ${bm25.tables}")
+      assert(IndexCommit.currentManifest(spark, bareDir).isEmpty)
+      val cases = Seq(
+        bm25Dir -> Seq("postings", "df", "stats", "tombstones"),
+        ivfPqDir -> Seq("codes", "centroids", "codebooks", "meta"),
+        bareDir -> Seq("t"))
+      for ((dir, tables) <- cases; t <- tables) {
+        val (df, jobs) = jobsStartedBy(IndexCommit.readTable(spark, dir, t))
+        assert(jobs == 0, s"opening $dir/$t started $jobs Spark job(s)")
+        val expected = inferredUnion(IndexCommit.tablePaths(spark, dir, t))
+        assert(df.schema == expected.schema, s"$dir/$t")
+        assert(df.collect().map(_.toString).sorted.toSeq ==
+          expected.collect().map(_.toString).sorted.toSeq, s"$dir/$t")
+      }
+      // the cell-partitioned codes: `cell` is discovered from the dirs
+      assert(IndexCommit.readTable(spark, ivfPqDir, "codes").columns
+        .last == "cell")
+      assert(IndexCommit.readTable(spark, bareDir, "t").columns.last == "k")
+      // the pinned read and the debt card open segments the same way
+      val (at, atJobs) = jobsStartedBy(
+        IndexCommit.readTableAt(spark, bm25Dir, "df", bm25.gen))
+      assert(atJobs == 0)
+      assert(at.schema ==
+        inferredUnion(IndexCommit.tablePaths(spark, bm25Dir, "df")).schema)
+      val (card, cardJobs) = jobsStartedBy(
+        IndexCommit.segmentDebt(spark, bm25Dir, bm25))
+      assert(cardJobs == 0, s"segmentDebt started $cardJobs Spark job(s)")
+      val rows = card.collect().map(r =>
+        r.getString(0) -> (r.getInt(1), r.getLong(2))).toMap
+      bm25.tables.foreach { case (t, segs) =>
+        assert(rows(t) == (segs.size,
+          inferredUnion(segs.map(s => s"$bm25Dir/$s")).count()), t)
+      }
+      // a segment with no data file falls through to Spark's inference,
+      // error included
+      new java.io.File(s"$bareDir/empty").mkdirs()
+      val ours = intercept[Exception](
+        IndexCommit.readTable(spark, bareDir, "empty"))
+      val spark0 = intercept[Exception](inferredUnion(Seq(s"$bareDir/empty")))
+      assert(ours.getClass == spark0.getClass &&
+        ours.getMessage == spark0.getMessage, ours.getMessage)
+    } finally { rmRf(bm25Dir); rmRf(ivfPqDir); rmRf(bareDir) }
+  }
+
+  /** The names of the `_manifest_g*` files opened while `body` runs,
+    * recorded by [[ManifestOpenRecorder]] installed as this session's
+    * `file://` filesystem. */
+  private def manifestOpensDuring(body: => Unit): Seq[String] = {
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("fs.file.impl", classOf[ManifestOpenRecorder].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    ManifestOpenRecorder.opened.clear()
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    ManifestOpenRecorder.opened.toArray(Array.empty[String]).toSeq
+  }
+
+  test("a vector serve reads every table at ONE manifest generation") {
+    val queries = vecs.filter($"vec_id" <= 3L)
+      .select($"vec_id".as("qid"), $"embedding".as("qe"))
+    val serves: Seq[(String, String => Unit, String => DataFrame)] = Seq(
+      ("lsh", VectorSearch.lshWriteIndex(vecs, _),
+        VectorSearch.lshServe(spark, _, queries, 3)),
+      ("pq", VectorSearch.pqWriteIndex(vecs, _),
+        VectorSearch.pqServe(spark, _, vecs, queries, 3)),
+      ("ivfPq", VectorSearch.ivfPqWriteIndex(vecs, _),
+        VectorSearch.ivfPqServe(spark, _, vecs, queries, 3)),
+      ("mrl", VectorSearch.mrlWriteIndex(vecs, _),
+        VectorSearch.mrlServe(spark, _, vecs, queries, 3)),
+      ("ivf", VectorSearch.ivfWriteIndex(vecs, _),
+        VectorSearch.ivfServe(spark, _, queries, 3)))
+    for ((name, build, serve) <- serves) {
+      val dir = tmpDir(s"graft_pin_$name")
+      try {
+        build(dir)
+        // a tombstone table makes the serve read its mask too
+        VectorSearch.deleteVectors(spark, dir, Seq(5L).toDF("vec_id"))
+        val gen = IndexCommit.currentManifest(spark, dir).get.gen
+        var served = Seq.empty[Long]
+        val opened = manifestOpensDuring {
+          served = serve(dir).select($"vec_id").as[Long].collect().toSeq
+        }
+        assert(opened == Seq(f"_manifest_g$gen%012d"),
+          s"$name serve opened $opened")
+        assert(served.nonEmpty && !served.contains(5L), s"$name: $served")
+      } finally rmRf(dir)
+    }
+  }
+}
+
+/** `file://` filesystem that records the name of every `_manifest_g*`
+  * file it opens. */
+class ManifestOpenRecorder extends org.apache.hadoop.fs.LocalFileSystem {
+  override def open(f: org.apache.hadoop.fs.Path,
+                    bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    if (f.getName.startsWith("_manifest_g"))
+      ManifestOpenRecorder.opened.add(f.getName): Unit
+    super.open(f, bufferSize)
+  }
+}
+
+object ManifestOpenRecorder {
+  val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
