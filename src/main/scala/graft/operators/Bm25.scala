@@ -173,40 +173,29 @@ object Bm25 {
     // EAGER: both parallel branches below read the materialized blocks
     // instead of racing to compute a lazy checkpoint twice
     val tfAll = tfPlan.localCheckpoint(eager = true)
-    val st = new IndexCommit.SegmentStamper(spark, dir)
-    IndexCommit.commit(spark, dir, () => st.stamps()) { (gen, _) =>
+    IndexCommit.commit(spark, dir) { (gen, _) =>
       // the three staged tables are independent targets — overlap
       // their writes (guide §2.6); the corpus term extraction already
-      // ran once into tfAll above. Each branch stamps its own segment
-      // in flight, so no standalone checksum job trails the commit.
+      // ran once into tfAll above
       Par.all(Seq[() => Unit](
-        () => {
-          tfAll.select(col("term"), col("doc_id"), col("dl"), col("tf"))
-            .repartition(IndexCommit.writeWidth(docs), col("term"))
-            .sortWithinPartitions(col("term"))
-            .write.mode("overwrite")
-            .parquet(IndexCommit.segmentPath(dir, "postings", gen))
-          st.stampSegment(s"postings-g$gen")
-        },
+        () => tfAll.select(col("term"), col("doc_id"), col("dl"), col("tf"))
+          .repartition(IndexCommit.writeWidth(docs), col("term"))
+          .sortWithinPartitions(col("term"))
+          .write.mode("overwrite")
+          .parquet(IndexCommit.segmentPath(dir, "postings", gen)),
         // df is vocab-sized, not corpus-sized, but a web corpus's vocab
         // is 10⁸–10⁹ terms — size-derived width and a term sort (row-
         // group pruning for the serve-time term filter), never one file
-        () => {
-          tfAll.groupBy(col("term"))
-            .agg(countDistinct(col("doc_id")).as("df"))
-            .repartition(dfWidth, col("term"))
-            .sortWithinPartitions(col("term"))
-            .write.mode("overwrite")
-            .parquet(IndexCommit.segmentPath(dir, "df", gen))
-          st.stampSegment(s"df-g$gen")
-        },
-        () => {
-          base.agg(count(lit(1)).as("n_docs"),
-              sum(col("dl").cast("long")).as("sum_dl"))
-            .coalesce(1).write.mode("overwrite") // genuinely one row
-            .parquet(IndexCommit.segmentPath(dir, "stats", gen))
-          st.stampSegment(s"stats-g$gen")
-        }))
+        () => tfAll.groupBy(col("term"))
+          .agg(countDistinct(col("doc_id")).as("df"))
+          .repartition(dfWidth, col("term"))
+          .sortWithinPartitions(col("term"))
+          .write.mode("overwrite")
+          .parquet(IndexCommit.segmentPath(dir, "df", gen)),
+        () => base.agg(count(lit(1)).as("n_docs"),
+            sum(col("dl").cast("long")).as("sum_dl"))
+          .coalesce(1).write.mode("overwrite") // genuinely one row
+          .parquet(IndexCommit.segmentPath(dir, "stats", gen))))
       Seq("postings", "df", "stats").map(t => t -> Seq(s"$t-g$gen")).toMap
     }
     IndexCommit.gcUnreferenced(spark, dir)
@@ -222,11 +211,12 @@ object Bm25 {
     * the takedown, the stats row re-merged once with the final value —
     * identical rows and identical per-table segment counts
     * (health/fsck cards are unchanged), computed by the same exact
-    * integer algebra. A table staging a single delta keeps the
-    * `<table>-g<gen>` name; the takedown's df delta takes `df-x-g<gen>`
-    * only beside increment df deltas. What changes is the chain length
-    * (guide §1.2/§2.6): ONE claim + manifest flip + GC instead of N+1,
-    * every staged write overlapped, stamps hashed in flight, and the
+    * integer algebra. Increment segments are named by
+    * [[IndexCommit.deltaSegments]] (a table staging a single delta
+    * keeps the `<table>-g<gen>` name); the takedown's df delta takes
+    * `df-x-g<gen>` only beside increment df deltas. What changes is the
+    * chain length (guide §1.2/§2.6): ONE claim + manifest flip + stamp
+    * job + GC instead of N+1, every staged write overlapped, and the
     * takedown's decrement recovery reads this cycle's increments from
     * the pinned tf blocks instead of re-reading their freshly written
     * parquet. */
@@ -250,8 +240,7 @@ object Bm25 {
     // takedown rides the same cycle) the decrement recovery join
     val tfIncs = Par.all(tfPlans.map(p =>
       () => p.localCheckpoint(eager = true)))
-    val st = new IndexCommit.SegmentStamper(spark, dir)
-    IndexCommit.commit(spark, dir, () => st.stamps()) { (gen, cur) =>
+    IndexCommit.commit(spark, dir) { (gen, cur) =>
       val prev = cur.getOrElse(sys.error(
         s"applyDeltas: no committed index at $dir — writeIndex first"))
       if (increments.nonEmpty)
@@ -265,11 +254,8 @@ object Bm25 {
       val delLeg = deleteIds.map { ids =>
         val newIds = ids.select(col(ids.columns.head).cast("long")
           .as("doc_id")).distinct()
-        val priorTombs =
-          if (prev.tables.contains("tombstones"))
-            IndexCommit.readTableOf(spark, dir, prev, "tombstones")
-          else newIds.limit(0)
-        val fresh = newIds.join(priorTombs, Seq("doc_id"), "left_anti")
+        val fresh = IndexCommit.maskTombstonesOf(spark, dir, prev, newIds,
+            "doc_id")
           .localCheckpoint(eager = true)
         val post = (IndexCommit.readTableOf(spark, dir, prev, "postings") +:
           tfIncs.map(_.select(col("term"), col("doc_id"), col("dl"),
@@ -278,31 +264,23 @@ object Bm25 {
           .localCheckpoint(eager = true)
         (newIds, fresh, delRows)
       }
+      val postSegs = IndexCommit.deltaSegments("postings", tfIncs.size, gen)
+      val incDfSegs = IndexCommit.deltaSegments("df", tfIncs.size, gen)
       val incWrites: Seq[() => Unit] =
         tfIncs.zipWithIndex.flatMap { case (tfInc, i) =>
-          // single-delta commits keep the sequential `-g<gen>` names;
-          // multi-delta ones disambiguate with the `-d<i>` infix
-          val suffix = if (tfIncs.size == 1) "" else s"-d$i"
           Seq[() => Unit](
-            () => {
-              tfInc.select(col("term"), col("doc_id"), col("dl"),
-                  col("tf"))
-                .repartition(postWidths(i), col("term"))
-                .sortWithinPartitions(col("term"))
-                .write.mode("overwrite")
-                .parquet(IndexCommit.segmentPath(dir, s"postings$suffix",
-                  gen))
-              st.stampSegment(s"postings$suffix-g$gen")
-            },
-            () => {
-              tfInc.groupBy(col("term"))
-                .agg(countDistinct(col("doc_id")).as("df"))
-                .repartition(dfWidths(i), col("term"))
-                .sortWithinPartitions(col("term"))
-                .write.mode("overwrite")
-                .parquet(IndexCommit.segmentPath(dir, s"df$suffix", gen))
-              st.stampSegment(s"df$suffix-g$gen")
-            })
+            () => tfInc.select(col("term"), col("doc_id"), col("dl"),
+                col("tf"))
+              .repartition(postWidths(i), col("term"))
+              .sortWithinPartitions(col("term"))
+              .write.mode("overwrite")
+              .parquet(s"$dir/${postSegs(i)}"),
+            () => tfInc.groupBy(col("term"))
+              .agg(countDistinct(col("doc_id")).as("df"))
+              .repartition(dfWidths(i), col("term"))
+              .sortWithinPartitions(col("term"))
+              .write.mode("overwrite")
+              .parquet(s"$dir/${incDfSegs(i)}"))
         }
       // the takedown's NEGATIVE df delta — delete-sized write volume
       // no matter the vocabulary size ([[foldDf]] nets it out at read)
@@ -310,21 +288,15 @@ object Bm25 {
       val delWrites: Seq[() => Unit] = delLeg.toSeq.flatMap {
         case (newIds, fresh, delRows) =>
           Seq[() => Unit](
-            () => {
-              delRows.groupBy(col("term"))
-                .agg((-countDistinct(col("doc_id"))).as("df"))
-                .repartition(IndexCommit.deltaWidth(newIds), col("term"))
-                .sortWithinPartitions(col("term"))
-                .write.mode("overwrite")
-                .parquet(IndexCommit.segmentPath(dir, dfX, gen))
-              st.stampSegment(s"$dfX-g$gen")
-            },
-            () => {
-              fresh.repartition(IndexCommit.deltaWidth(newIds))
-                .write.mode("overwrite")
-                .parquet(IndexCommit.segmentPath(dir, "tombstones", gen))
-              st.stampSegment(s"tombstones-g$gen")
-            })
+            () => delRows.groupBy(col("term"))
+              .agg((-countDistinct(col("doc_id"))).as("df"))
+              .repartition(IndexCommit.deltaWidth(newIds), col("term"))
+              .sortWithinPartitions(col("term"))
+              .write.mode("overwrite")
+              .parquet(IndexCommit.segmentPath(dir, dfX, gen)),
+            () => fresh.repartition(IndexCommit.deltaWidth(newIds))
+              .write.mode("overwrite")
+              .parquet(IndexCommit.segmentPath(dir, "tombstones", gen)))
       }
       val statsWrite: () => Unit = () => {
         val prior = IndexCommit.readTableOf(spark, dir, prev, "stats")
@@ -350,13 +322,9 @@ object Bm25 {
         }
         finalStats.coalesce(1).write.mode("overwrite")
           .parquet(IndexCommit.segmentPath(dir, "stats", gen))
-        st.stampSegment(s"stats-g$gen")
       }
       Par.all(incWrites ++ delWrites :+ statsWrite)
-      val sfx = (i: Int) => if (tfIncs.size == 1) "" else s"-d$i"
-      val postSegs = tfIncs.indices.map(i => s"postings${sfx(i)}-g$gen")
-      val dfSegs = tfIncs.indices.map(i => s"df${sfx(i)}-g$gen") ++
-        delLeg.map(_ => s"$dfX-g$gen").toSeq
+      val dfSegs = incDfSegs ++ delLeg.map(_ => s"$dfX-g$gen").toSeq
       prev.tables ++ Map(
         "postings" -> (prev.tables("postings") ++ postSegs),
         "df" -> (prev.tables("df") ++ dfSegs),
@@ -437,34 +405,27 @@ object Bm25 {
     * compaction, matching the append/delete paths. */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
                    dir: String, retainGens: Int = 1): Unit = {
-    val postings = IndexCommit.readTable(spark, dir, "postings")
-    val dfRaw = IndexCommit.readTable(spark, dir, "df")
-    val st = new IndexCommit.SegmentStamper(spark, dir)
-    IndexCommit.commit(spark, dir, () => st.stamps()) { (gen, cur) =>
+    IndexCommit.commit(spark, dir) { (gen, cur) =>
       val prev = cur.getOrElse(sys.error(
         s"compactIndex: no committed index at $dir"))
+      val postings = IndexCommit.readTableOf(spark, dir, prev, "postings")
+      val dfRaw = IndexCommit.readTableOf(spark, dir, prev, "df")
       // materialize pending deletes: the rewrite drops tombstoned rows
       // and the tombstones table itself — the mask becomes physical
       val live =
         IndexCommit.maskTombstonesOf(spark, dir, prev, postings, "doc_id")
       // two independent staged tables — overlap the rewrites
       Par.all(Seq[() => Unit](
-        () => {
-          live
-            .repartition(IndexCommit.writeWidth(postings), col("term"))
-            .sortWithinPartitions(col("term"))
-            .write.mode("overwrite")
-            .parquet(IndexCommit.segmentPath(dir, "postings", gen))
-          st.stampSegment(s"postings-g$gen")
-        },
-        () => {
-          foldDf(dfRaw)
-            .repartition(IndexCommit.writeWidth(dfRaw), col("term"))
-            .sortWithinPartitions(col("term"))
-            .write.mode("overwrite")
-            .parquet(IndexCommit.segmentPath(dir, "df", gen))
-          st.stampSegment(s"df-g$gen")
-        }))
+        () => live
+          .repartition(IndexCommit.writeWidth(postings), col("term"))
+          .sortWithinPartitions(col("term"))
+          .write.mode("overwrite")
+          .parquet(IndexCommit.segmentPath(dir, "postings", gen)),
+        () => foldDf(dfRaw)
+          .repartition(IndexCommit.writeWidth(dfRaw), col("term"))
+          .sortWithinPartitions(col("term"))
+          .write.mode("overwrite")
+          .parquet(IndexCommit.segmentPath(dir, "df", gen))))
       (prev.tables - "tombstones")
         .updated("postings", Seq(s"postings-g$gen"))
         .updated("df", Seq(s"df-g$gen"))
@@ -490,50 +451,36 @@ object Bm25 {
                    dest: String, sources: Seq[String],
                    retainGens: Int = 1): Unit = {
     require(sources.nonEmpty, "mergeIndexes: no source shards")
-    val shardPostings = sources.map { src =>
-      val m = IndexCommit.currentManifest(spark, src).getOrElse(
-        sys.error(s"mergeIndexes: no committed index at $src"))
-      val raw = IndexCommit.readTable(spark, src, "postings")
-      if (m.tables.contains("tombstones"))
-        raw.join(IndexCommit.readTable(spark, src, "tombstones"),
-          Seq("doc_id"), "left_anti")
-      else raw
-    }
-    val postings = shardPostings.reduce(_ unionByName _)
+    val shards = sources.map(src =>
+      src -> IndexCommit.manifestFor(spark, src, None, "mergeIndexes"))
+    val postings = shards.map { case (src, m) =>
+      IndexCommit.maskTombstonesOf(spark, src, m,
+        IndexCommit.readTableOf(spark, src, m, "postings"), "doc_id")
+    }.reduce(_ unionByName _)
     // shard df segments (base + any append/delete deltas) fold across
     // shards exactly like within one: sum per term
-    val dfAll = sources.map(IndexCommit.readTable(spark, _, "df"))
-      .reduce(_ unionByName _)
-    val stats = sources.map(IndexCommit.readTable(spark, _, "stats"))
+    val dfAll = shards.map { case (src, m) =>
+      IndexCommit.readTableOf(spark, src, m, "df") }.reduce(_ unionByName _)
+    val stats = shards.map { case (src, m) =>
+        IndexCommit.readTableOf(spark, src, m, "stats") }
       .reduce(_ unionByName _)
       .agg(sum(col("n_docs")).as("n_docs"),
         sum(col("sum_dl")).as("sum_dl"))
-    val st = new IndexCommit.SegmentStamper(spark, dest)
-    IndexCommit.commit(spark, dest, () => st.stamps()) { (gen, _) =>
-      // three independent staged tables — overlap the writes; stamps
-      // hashed in flight per branch
+    IndexCommit.commit(spark, dest) { (gen, _) =>
+      // three independent staged tables — overlap the writes
       Par.all(Seq[() => Unit](
-        () => {
-          postings
-            .repartition(IndexCommit.writeWidth(postings), col("term"))
-            .sortWithinPartitions(col("term"))
-            .write.mode("overwrite")
-            .parquet(IndexCommit.segmentPath(dest, "postings", gen))
-          st.stampSegment(s"postings-g$gen")
-        },
-        () => {
-          foldDf(dfAll)
-            .repartition(IndexCommit.writeWidth(dfAll), col("term"))
-            .sortWithinPartitions(col("term"))
-            .write.mode("overwrite")
-            .parquet(IndexCommit.segmentPath(dest, "df", gen))
-          st.stampSegment(s"df-g$gen")
-        },
-        () => {
-          stats.coalesce(1).write.mode("overwrite")
-            .parquet(IndexCommit.segmentPath(dest, "stats", gen))
-          st.stampSegment(s"stats-g$gen")
-        }))
+        () => postings
+          .repartition(IndexCommit.writeWidth(postings), col("term"))
+          .sortWithinPartitions(col("term"))
+          .write.mode("overwrite")
+          .parquet(IndexCommit.segmentPath(dest, "postings", gen)),
+        () => foldDf(dfAll)
+          .repartition(IndexCommit.writeWidth(dfAll), col("term"))
+          .sortWithinPartitions(col("term"))
+          .write.mode("overwrite")
+          .parquet(IndexCommit.segmentPath(dest, "df", gen)),
+        () => stats.coalesce(1).write.mode("overwrite")
+          .parquet(IndexCommit.segmentPath(dest, "stats", gen))))
       Seq("postings", "df", "stats").map(t => t -> Seq(s"$t-g$gen")).toMap
     }
     IndexCommit.gcUnreferenced(spark, dest, retainGens)

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Cross-index atomic snapshots — the consistency layer ABOVE
@@ -28,7 +27,11 @@ import org.apache.spark.sql.SparkSession
   * [[commit]] claims its generation (atomic create-fails-if-exists,
   * same single-writer enforcement as the member layer), runs `stage`
   * — which performs the member commits, each itself atomic — and only
-  * then flips the collection manifest via temp-file + rename.
+  * then flips the collection manifest via temp-file + rename. The
+  * claim, the flip, the retained-generation rule of [[gc]] and its
+  * aged-claim sweep are the core both layers share ([[ManifestLog]]),
+  * not a copy of the member layer's; this layer adds only its manifest
+  * body, its member-resolution checks and its member-dir GC.
   * Consequences, which CollectionCommitSpec pins:
   *
   *  - a crash AFTER some member flips but BEFORE the collection flip
@@ -58,50 +61,17 @@ object CollectionCommit {
     * pinned [[IndexCommit]] generation. */
   final case class Manifest(gen: Long, members: Map[String, Long])
 
-  private val ManifestRe = "_collection_g(\\d+)".r
-  private val ClaimRe = "_colclaim_g(\\d+)".r
   private val Header = "graft-collection-manifest-v1"
 
-  private def fsOf(spark: SparkSession, dir: String): (FileSystem, Path) = {
-    val p = new Path(dir)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
+  private val log = new ManifestLog("_collection_g", "_colclaim_g",
+    Set(Header), "collection ", "gc the collection")(parse)
 
-  private def manifestName(gen: Long): String = f"_collection_g$gen%012d"
-  private def claimName(gen: Long): String = f"_colclaim_g$gen%012d"
-
-  private def listGens(fs: FileSystem, p: Path): Array[Long] =
-    fs.listStatus(p).map(_.getPath.getName)
-      .collect { case ManifestRe(g) => g.toLong }
-
-  private def clearAgedClaims(fs: FileSystem, p: Path,
-                              graceMs: Long): Unit = {
-    val cutoff = System.currentTimeMillis() - graceMs
-    fs.listStatus(p).foreach { st =>
-      st.getPath.getName match {
-        case ClaimRe(_) if st.getModificationTime < cutoff =>
-          fs.delete(st.getPath, false): Unit
-        case _ =>
-      }
-    }
-  }
-
-  private def parse(fs: FileSystem, p: Path, gen: Long,
-                    dir: String): Manifest = {
-    val in = fs.open(new Path(p, manifestName(gen)))
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.linesIterator.toSeq
-    require(lines.headOption.contains(Header),
-      s"unrecognized collection manifest header in $dir: ${lines.headOption}")
-    val members = lines.drop(1).filter(_.nonEmpty).map { line =>
+  private def parse(gen: Long, lines: Seq[String], dir: String): Manifest =
+    Manifest(gen, lines.map { line =>
       val i = line.indexOf('=')
       require(i > 0, s"malformed collection manifest line in $dir: $line")
       line.substring(0, i) -> line.substring(i + 1).toLong
-    }.toMap
-    Manifest(gen, members)
-  }
+    }.toMap)
 
   /** The member index's own directory under the collection root. */
   def memberDir(colDir: String, member: String): String =
@@ -109,23 +79,16 @@ object CollectionCommit {
 
   /** Highest-generation collection manifest, or None before the first
     * commit. */
-  def currentManifest(spark: SparkSession, colDir: String): Option[Manifest] = {
-    val (fs, p) = fsOf(spark, colDir)
-    if (!fs.exists(p)) return None
-    val gens = listGens(fs, p)
-    if (gens.isEmpty) None else Some(parse(fs, p, gens.max, colDir))
-  }
+  def currentManifest(spark: SparkSession, colDir: String): Option[Manifest] =
+    log.current(spark, colDir)
 
   /** The collection manifest at a SPECIFIC generation — collection
     * TIME TRAVEL: every leg of a prior snapshot serves bit-identically
     * as long as [[gc]] retention covers it. */
-  def manifestAt(spark: SparkSession, colDir: String, gen: Long): Manifest = {
-    val (fs, p) = fsOf(spark, colDir)
-    require(fs.exists(new Path(p, manifestName(gen))),
+  def manifestAt(spark: SparkSession, colDir: String, gen: Long): Manifest =
+    log.at(spark, colDir, gen,
       s"collection at $colDir has no manifest g$gen (never committed, " +
         "or GC'd past retention — raise keepGens on gc)")
-    parse(fs, p, gen, colDir)
-  }
 
   /** Run one atomic collection commit: `stage(gen, current)` performs
     * the member index commits (each atomic at its own layer) and
@@ -138,25 +101,7 @@ object CollectionCommit {
       stage: (Long, Option[Manifest]) => Map[String, Long]): Unit = {
     val cur = currentManifest(spark, colDir)
     val gen = cur.map(_.gen).getOrElse(0L) + 1
-    val (fs, p) = fsOf(spark, colDir)
-    if (!fs.exists(p)) fs.mkdirs(p): Unit
-    val claim = new Path(p, claimName(gen))
-    val claimed =
-      try { fs.create(claim, false).close(); true }
-      catch { case _: java.io.IOException => false }
-    if (!claimed) {
-      if (fs.exists(new Path(p, manifestName(gen)))) sys.error(
-        s"collection commit to $colDir lost the race: generation $gen " +
-          "was committed by a concurrent writer (single-writer " +
-          "contract violated)")
-      else sys.error(
-        s"collection commit to $colDir: ${claimName(gen)} is already " +
-          "held — a concurrent committer is mid-flight (single-writer " +
-          "contract violated) or a prior attempt was killed before its " +
-          "flip; a sole writer recovering from a kill should gc the " +
-          "collection to clear stranded claims, then retry")
-    }
-    try {
+    log.commit(spark, colDir, gen) { (_, _) =>
       val members = stage(gen, cur)
       require(members.nonEmpty, s"collection commit to $colDir pinned " +
         "no members")
@@ -190,20 +135,9 @@ object CollectionCommit {
             "CollectionCommit.gc")
         }
       })
-      val body = (Header +: members.toSeq.sortBy(_._1)
+      (Header +: members.toSeq.sortBy(_._1)
         .map { case (m, g) => s"$m=$g" }).mkString("", "\n", "\n")
-      val tmp = new Path(p, s"._collection_g$gen.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-      val fin = new Path(p, manifestName(gen))
-      require(!fs.exists(fin),
-        s"collection commit to $colDir lost the race: generation $gen " +
-          "was committed by a concurrent writer (single-writer contract " +
-          "violated)")
-      require(fs.rename(tmp, fin),
-        s"collection manifest flip failed: $tmp -> $fin (concurrent " +
-          "writer?)")
-    } finally fs.delete(claim, false): Unit
+    }
   }
 
   /** CLONE one committed collection snapshot into a fresh collection
@@ -244,8 +178,7 @@ object CollectionCommit {
         // a crashed prior attempt may have left a committed member
         // clone; the destination collection never flipped, so nothing
         // references it — wipe and re-copy (idempotent retry)
-        val dmp = new Path(dm)
-        val dfs = dmp.getFileSystem(spark.sessionState.newHadoopConf())
+        val (dfs, dmp) = ManifestLog.fsOf(spark, dm)
         if (dfs.exists(dmp)) dfs.delete(dmp, true): Unit
         IndexCommit.cloneSnapshot(spark, memberDir(colDir, mem), dm,
           Some(g))
@@ -266,69 +199,29 @@ object CollectionCommit {
     * a commit, never before — post-commit GC can only orphan, not
     * corrupt. */
   def gc(spark: SparkSession, colDir: String, keepGens: Int = 1,
-         graceMs: Long = 0L): Unit = {
-    require(keepGens >= 1, s"keepGens must be >= 1, got $keepGens")
-    val (fs, p) = fsOf(spark, colDir)
-    if (!fs.exists(p)) return
-    val all = listGens(fs, p).sorted.reverse
-    if (all.isEmpty) {
-      // a cloneSnapshot/first-commit killed before its flip strands a
-      // claim in a directory with NO manifest; gc is the documented
-      // recovery path, so it must clear aged claims here too — an
-      // early return would leave every retry failing at claim
-      // creation until an operator hand-deletes the marker
-      clearAgedClaims(fs, p, graceMs)
-      return
-    }
-    val cutoff = System.currentTimeMillis() - graceMs
-    // `graceMs` is the reader lease at THIS layer too, not only the
-    // member layer's: a collection reader pins a COLLECTION manifest,
-    // so a generation stays retained until it has been superseded for
-    // at least graceMs (measured from its successor manifest's mtime
-    // — the instant it stopped being current), regardless of
-    // keepGens. Without this, an aggressive keepGens trim would
-    // delete the very manifest a long-running reader resolved while
-    // the member gens it pins survive — the lease would protect the
-    // legs but not the snapshot naming them.
-    val retainedGens = all.zipWithIndex.filter { case (_, i) =>
-      i < keepGens || (graceMs > 0 &&
-        fs.getFileStatus(new Path(p, manifestName(all(i - 1))))
-          .getModificationTime >= cutoff)
-    }.map(_._1)
-    val retained = retainedGens.map(parse(fs, p, _, colDir))
-    val retainedMembers = retained.flatMap(_.members.keys).toSet
-    retainedMembers.foreach { member =>
-      val mDir = memberDir(colDir, member)
-      val floor = retained.flatMap(_.members.get(member)).min
-      IndexCommit.currentManifest(spark, mDir).foreach { cur =>
-        // keep every member gen >= the oldest pinned one; the member
-        // layer counts retention from its newest gen downward
-        val span = (cur.gen - floor + 1).max(1L).min(Int.MaxValue.toLong)
-        IndexCommit.gcUnreferenced(spark, mDir, span.toInt, graceMs)
+         graceMs: Long = 0L): Unit =
+    log.gc(spark, colDir, keepGens, graceMs) { (retained, cutoff) =>
+      val retainedMembers = retained.flatMap(_.members.keys).toSet
+      retainedMembers.foreach { member =>
+        val mDir = memberDir(colDir, member)
+        val floor = retained.flatMap(_.members.get(member)).min
+        IndexCommit.currentManifest(spark, mDir).foreach { cur =>
+          // keep every member gen >= the oldest pinned one; the member
+          // layer counts retention from its newest gen downward
+          val span = (cur.gen - floor + 1).max(1L).min(Int.MaxValue.toLong)
+          IndexCommit.gcUnreferenced(spark, mDir, span.toInt, graceMs)
+        }
       }
+      // a member directory dropped from EVERY retained collection
+      // manifest is unreachable by any reader this layer serves —
+      // without this it (and all its generations) leaks disk forever.
+      // The collection dir OWNS its subdirectories (the member
+      // contract), so an unpinned subdirectory is garbage. Aged-only,
+      // like claims: a fresh dir may be a NEW member a live committer
+      // is mid-staging (not yet pinned by any manifest) — an
+      // out-of-contract concurrent gc must not destroy it, and staging
+      // keeps the dir's mtime current.
+      st => st.isDirectory && !retainedMembers.contains(st.getPath.getName) &&
+        st.getModificationTime < cutoff
     }
-    fs.listStatus(p).foreach { st =>
-      val n = st.getPath.getName
-      val dead = n match {
-        case ManifestRe(g) => !retainedGens.contains(g.toLong)
-        // stranded claims only once aged past graceMs — a younger one
-        // may belong to a LIVE committer (an out-of-contract
-        // concurrent GC must not reopen the interleave race)
-        case ClaimRe(_) => st.getModificationTime < cutoff
-        // a member directory dropped from EVERY retained collection
-        // manifest is unreachable by any reader this layer serves —
-        // without this it (and all its generations) leaks disk
-        // forever. The collection dir OWNS its subdirectories (the
-        // member contract), so an unpinned subdirectory is garbage.
-        // Aged-only, like claims: a fresh dir may be a NEW member a
-        // live committer is mid-staging (not yet pinned by any
-        // manifest) — an out-of-contract concurrent gc must not
-        // destroy it, and staging keeps the dir's mtime current.
-        case _ if st.isDirectory =>
-          !retainedMembers.contains(n) && st.getModificationTime < cutoff
-        case _ => n.startsWith("._collection_")
-      }
-      if (dead) fs.delete(st.getPath, true): Unit
-    }
-  }
 }

@@ -44,7 +44,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * hard process kill mid-commit strands one, and [[gcUnreferenced]]
   * clears stranded claims (GC must not run concurrently with a
   * commit — the same single-writer discipline). Readers need no
-  * coordination at all.
+  * coordination at all. The claim, the flip and GC's retention rule
+  * are the [[ManifestLog]] core this layer shares with
+  * [[CollectionCommit]].
   *
   * Garbage: segments dereferenced by a newer manifest (compaction
   * inputs, superseded df/stats stagings) and old manifest files are
@@ -78,6 +80,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * (geometry ∝ data) applied to layout.
   */
 object IndexCommit {
+  import ManifestLog.fsOf
 
   /** The current state of an index directory: manifest generation,
     * per logical table the segment dirs (relative names) composing it,
@@ -88,8 +91,6 @@ object IndexCommit {
   final case class Manifest(gen: Long, tables: Map[String, Seq[String]],
                             files: Map[String, (Long, Long)] = Map.empty)
 
-  private val ManifestRe = "_manifest_g(\\d+)".r
-  private val ClaimRe = "_claim_g(\\d+)".r
   private val SegmentRe = "(.+)-g(\\d+)".r
   private val HeaderV1 = "graft-index-manifest-v1"
   private val Header = "graft-index-manifest-v2"
@@ -108,32 +109,15 @@ object IndexCommit {
       r
     }
 
-  private def fsOf(spark: SparkSession, dir: String): (FileSystem, Path) = {
-    val p = new Path(dir)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
+  private val log = new ManifestLog("_manifest_g", "_claim_g",
+    Set(Header, HeaderV1), "", "gcUnreferenced the directory")(parseManifest)
 
-  private def manifestName(gen: Long): String = f"_manifest_g$gen%012d"
-  private def claimName(gen: Long): String = f"_claim_g$gen%012d"
-
-  private def listGens(fs: FileSystem, p: Path): Array[Long] =
-    fs.listStatus(p).map(_.getPath.getName)
-      .collect { case ManifestRe(g) => g.toLong }
-
-  private def parseManifest(fs: FileSystem, p: Path, gen: Long,
+  private def parseManifest(gen: Long, lines: Seq[String],
                             dir: String): Manifest = {
-    val in = fs.open(new Path(p, manifestName(gen)))
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.linesIterator.toSeq
-    require(lines.headOption.exists(h => h == Header || h == HeaderV1),
-      s"unrecognized manifest header in $dir: ${lines.headOption}")
     // v2 appends `#f\t<rel>\t<len>\t<crc32c>` stamp lines; unknown
     // `#`-prefixed lines are reserved and skipped so a v2 reader stays
     // forward-tolerant
-    val (meta, tableLines) =
-      lines.drop(1).filter(_.nonEmpty).partition(_.startsWith("#"))
+    val (meta, tableLines) = lines.partition(_.startsWith("#"))
     val tables = tableLines.map { line =>
       val i = line.indexOf('=')
       require(i > 0, s"malformed manifest line in $dir: $line")
@@ -151,26 +135,19 @@ object IndexCommit {
 
   /** Highest-generation manifest in `dir`, or None for an empty /
     * pre-manifest directory. */
-  def currentManifest(spark: SparkSession, dir: String): Option[Manifest] = {
-    val (fs, p) = fsOf(spark, dir)
-    if (!fs.exists(p)) return None
-    val gens = listGens(fs, p)
-    if (gens.isEmpty) None else Some(parseManifest(fs, p, gens.max, dir))
-  }
+  def currentManifest(spark: SparkSession, dir: String): Option[Manifest] =
+    log.current(spark, dir)
 
   /** The manifest at a SPECIFIC generation — TIME TRAVEL: every commit
     * is immutable, so as long as retention ([[gcUnreferenced]]'s
     * `keepGens`) hasn't collected it, any prior index state serves
     * bit-identically to when it was current. Loud error when the
     * generation was never committed or has been GC'd. */
-  def manifestAt(spark: SparkSession, dir: String, gen: Long): Manifest = {
-    val (fs, p) = fsOf(spark, dir)
-    require(fs.exists(new Path(p, manifestName(gen))),
+  def manifestAt(spark: SparkSession, dir: String, gen: Long): Manifest =
+    log.at(spark, dir, gen,
       s"index at $dir has no manifest g$gen (never committed, or GC'd " +
         "past retention — raise keepGens on gcUnreferenced to keep " +
         "time-travel windows)")
-    parseManifest(fs, p, gen, dir)
-  }
 
   /** The manifest a read pinned at `atGen` resolves: that generation
     * ([[manifestAt]]) when given, else the current one — a loud error
@@ -196,10 +173,16 @@ object IndexCommit {
     * and parses the manifest once. */
   private[operators] def readTableOf(spark: SparkSession, dir: String,
                                      m: Manifest, table: String): DataFrame =
-    readSegments(spark, m.tables.getOrElse(table,
-        sys.error(s"index at $dir g${m.gen} has no table '$table' " +
-          s"(manifest carries ${m.tables.keys.toSeq.sorted})"))
-      .map(s => s"$dir/$s"))
+    readSegments(spark, tablePathsOf(dir, m, table))
+
+  /** Absolute paths of the segments `m` lists for `table` — a loud
+    * error naming the tables `m` carries when it has no such table. */
+  private[operators] def tablePathsOf(dir: String, m: Manifest,
+                                      table: String): Seq[String] =
+    m.tables.getOrElse(table,
+        sys.error(s"index at $dir has no table '$table' " +
+          s"(manifest g${m.gen} carries ${m.tables.keys.toSeq.sorted})"))
+      .map(s => s"$dir/$s")
 
   /** The union of the segment dirs at `paths`, each opened by
     * [[openSegment]]. */
@@ -268,7 +251,9 @@ object IndexCommit {
     * with `mode("overwrite")`) and returns the FULL table→segments map
     * the new manifest should carry (carrying forward untouched tables'
     * prior segment lists verbatim). Only after `stage` returns is the
-    * marker flipped. A `stage` that throws commits nothing.
+    * marker flipped. A `stage` that throws commits nothing. The claim,
+    * the flip and their error texts are the shared [[ManifestLog]]
+    * protocol.
     *
     * Every physical file under a NEWLY staged segment is stamped with
     * its (length, CRC32C) in the manifest before the flip — the
@@ -277,45 +262,28 @@ object IndexCommit {
     * byte keeps the length). Stamping is COMMIT-SIZED work, not
     * index-sized: carried-forward segments keep their prior stamps
     * verbatim (their bytes are immutable by the protocol), only the
-    * increment is hashed, and the hashing is a distributed job over
-    * the new files (one task per ~[[CloneBytesPerTask]], same packing
-    * as promotion copies) — never a driver byte loop.
-    * `precomputedFiles` lets a stage that already streamed the bytes
-    * (the clone's copy tasks) supply stamps it computed in flight
-    * instead of paying a second read. */
-  def commit(spark: SparkSession, dir: String,
-             precomputedFiles: () => Map[String, (Long, Long)] =
-               () => Map.empty)(
+    * increment is hashed, and the hashing is ONE distributed job over
+    * all the new files, listed after `stage` returns (one task per
+    * ~[[CloneBytesPerTask]], same packing as promotion copies) —
+    * never a driver byte loop. */
+  def commit(spark: SparkSession, dir: String)(
+      stage: (Long, Option[Manifest]) => Map[String, Seq[String]]): Unit =
+    commitStamped(spark, dir, () => Map.empty)(stage)
+
+  /** [[commit]], where `precomputedFiles` supplies stamps the stage
+    * already took while streaming the bytes (the clone's copy tasks),
+    * so their segments are not listed and read a second time. */
+  private def commitStamped(spark: SparkSession, dir: String,
+      precomputedFiles: () => Map[String, (Long, Long)])(
       stage: (Long, Option[Manifest]) => Map[String, Seq[String]]): Unit = {
     val cur = currentManifest(spark, dir)
     val gen = cur.map(_.gen).getOrElse(0L) + 1
-    val (fs, p) = fsOf(spark, dir)
-    if (!fs.exists(p)) fs.mkdirs(p): Unit
-    // claim the generation FIRST (atomic create-fails-if-exists): two
-    // committers racing the same gen — a single-writer contract
-    // violation — now fail loudly at the claim instead of silently
-    // interleaving staged segments and manifests
-    val claim = new Path(p, claimName(gen))
-    val claimed =
-      try { fs.create(claim, false).close(); true }
-      catch { case _: java.io.IOException => false }
-    if (!claimed) {
-      if (fs.exists(new Path(p, manifestName(gen)))) sys.error(
-        s"commit to $dir lost the race: generation $gen was committed " +
-          "by a concurrent writer (single-writer contract violated)")
-      else sys.error(
-        s"commit to $dir: ${claimName(gen)} is already held — a " +
-          "concurrent committer is mid-flight (single-writer contract " +
-          "violated) or a prior attempt was killed before its flip; a " +
-          "sole writer recovering from a kill should gcUnreferenced " +
-          "the directory to clear stranded claims, then retry")
-    }
-    try {
+    log.commit(spark, dir, gen) { (fs, p) =>
       val tables = timed(s"commit:stage g$gen")(stage(gen, cur))
       require(tables.nonEmpty, s"commit to $dir staged no tables")
       // file stamps: carry forward immutable retained segments' stamps,
-      // take the stage's in-flight stamps where offered, hash the rest
-      // of the newly staged files in one distributed job
+      // take the precomputed ones, hash the rest of the newly staged
+      // files in one distributed job
       val segSet = tables.values.flatten.toSet
       val prevSegs =
         cur.map(_.tables.values.flatten.toSet).getOrElse(Set.empty)
@@ -325,8 +293,6 @@ object IndexCommit {
           i > 0 && segSet.contains(rel.substring(0, i))
         }
       val provided = precomputedFiles()
-      // a segment the stage already stamped (a [[SegmentStamper]]
-      // listed and hashed it in flight) is not listed a second time
       val stamped = provided.keySet.map(rel => rel.substring(0, rel.indexOf('/')))
       val toHash = timed(s"commit:list-toHash g$gen")(
         (segSet -- prevSegs -- stamped).toSeq.sorted
@@ -338,51 +304,26 @@ object IndexCommit {
           require(!rel.contains('\t'), s"bad file name: $rel")
           s"#f\t$rel\t$len\t$crc"
       }
-      val body = ((Header +: tables.toSeq.sortBy(_._1).map { case (t, segs) =>
+      ((Header +: tables.toSeq.sortBy(_._1).map { case (t, segs) =>
         require(!t.contains('=') && !t.contains(','), s"bad table name: $t")
         segs.foreach(s => require(!s.contains(','), s"bad segment name: $s"))
         s"$t=${segs.mkString(",")}"
       }) ++ stampLines).mkString("", "\n", "\n")
-      val tmp = new Path(p, s"._manifest_g$gen.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-      val fin = new Path(p, manifestName(gen))
-      // belt over the claim's braces: a committer that claimed through
-      // the winner's claim-release gap still refuses to replace a
-      // committed manifest (atomic on HDFS where rename-to-existing
-      // fails; best-effort check on local filesystems)
-      require(!fs.exists(fin),
-        s"commit to $dir lost the race: generation $gen was committed " +
-          "by a concurrent writer (single-writer contract violated)")
-      timed(s"commit:flip g$gen")(require(fs.rename(tmp, fin),
-        s"manifest flip failed: $tmp -> $fin (concurrent writer?)"))
-    } finally fs.delete(claim, false): Unit
+    }
   }
 
   /** Canonical segment dir (absolute) for `table` staged at `gen`. */
   def segmentPath(dir: String, table: String, gen: Long): String =
     s"$dir/$table-g$gen"
 
-  /** IN-FLIGHT commit stamps: a staging branch calls [[stampSegment]]
-    * right after its own files land, so the (length, CRC32C) hashing
-    * of one staged segment overlaps the sibling branches' still-running
-    * writes (guide §2.6) instead of forming a standalone serial
-    * checksum job after every write finished — [[commit]] then finds
-    * nothing left to hash (`precomputedFiles` supplies these stamps).
-    * Thread-safe; Par branches call it concurrently. */
-  final class SegmentStamper(spark: SparkSession, dir: String) {
-    private val (fs, p) = fsOf(spark, dir)
-    private val acc =
-      new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-    def stampSegment(seg: String): Unit =
-      timed(s"stampSegment $seg")(
-        checksumFiles(spark, listSegmentFiles(fs, p, seg))
-          .foreach { case (k, v) => acc.put(k, v): Unit })
-    def stamps(): Map[String, (Long, Long)] = {
-      import scala.jdk.CollectionConverters._
-      acc.asScala.toMap
-    }
-  }
+  /** The segment names of `n` deltas of `table` staged in one cycle at
+    * `gen`, in order: a single delta keeps the sequential chain's
+    * `<table>-g<gen>`; several need the disambiguating
+    * `<table>-d<i>-g<gen>`. */
+  private[operators] def deltaSegments(table: String, n: Int,
+                                       gen: Long): Seq[String] =
+    if (n == 1) Seq(s"$table-g$gen")
+    else (0 until n).map(i => s"$table-d$i-g$gen")
 
   /** THE DELTA PATH: every append and every delete of the LSH, IVF,
     * PQ, IVFPQ, MRL and dedup indexes goes through this one body — N
@@ -394,17 +335,16 @@ object IndexCommit {
     * checksum job, manifest flip, GC listing) per append/delete (guide
     * §1.2/§2.6): a nightly
     * cycle of two appends and a takedown paid that chain three times.
-    * Here it is paid once, every staged write overlaps ([[Par]]), and
-    * stamps are hashed in flight ([[SegmentStamper]]).
+    * Here it is paid once and every staged write overlaps ([[Par]]).
     *
     * RESULT-PRESERVING by construction: the staged segment SET is the
-    * sequential chain's, segment for segment — one `<table>-d<i>-g<gen>`
-    * per increment, or `<table>-g<gen>` when the cycle stages a single
-    * delta of that table (same per-table segment counts, so health
-    * cards' segment-debt numbers are unchanged), and the takedown's
-    * tombstone delta is `tombstones-g<gen>`. Only the number of
-    * manifest generations differs; no declared query reads generation
-    * numbers (entries resolve pins from the manifests they commit).
+    * sequential chain's, segment for segment ([[deltaSegments]] names
+    * each table's increments, so per-table segment counts, and with
+    * them the health cards' segment-debt numbers, are unchanged), and
+    * the takedown's tombstone delta is `tombstones-g<gen>`. Only the
+    * number of manifest generations differs; no declared query reads
+    * generation numbers (entries resolve pins from the manifests they
+    * commit).
     *
     * `increments` are the appended frames (their `keyCol` column is
     * gated against the prior tombstones — the re-ingest contract,
@@ -421,8 +361,7 @@ object IndexCommit {
                    retainGens: Int = 1): Unit = {
     require(segments.nonEmpty || deleteIds.nonEmpty,
       s"$op: nothing to apply")
-    val st = new SegmentStamper(spark, dir)
-    commit(spark, dir, () => st.stamps()) { (gen, cur) =>
+    commit(spark, dir) { (gen, cur) =>
       val prev = cur.getOrElse(sys.error(
         s"$op: no committed index at $dir — build it first"))
       if (increments.nonEmpty)
@@ -432,43 +371,23 @@ object IndexCommit {
       val delLeg = deleteIds.map { ids =>
         val newIds = ids.select(ids.col(ids.columns.head).cast("long")
           .as(keyCol)).distinct()
-        val fresh =
-          if (prev.tables.contains("tombstones"))
-            newIds.join(readTableOf(spark, dir, prev, "tombstones"),
-              Seq(keyCol), "left_anti")
-          else newIds
-        (newIds, fresh)
+        (newIds, maskTombstonesOf(spark, dir, prev, newIds, keyCol))
       }
-      // per-table index so each table's deltas keep their order and a
-      // single delta of a table keeps the sequential `<table>-g<gen>`
-      // name (multiple same-gen deltas need the disambiguating infix)
-      val counts = segments.groupBy(_._1).map { case (t, s) => t -> s.size }
-      val idx = scala.collection.mutable.Map[String, Int]()
-      val named = segments.map { case (table, write) =>
-        val i = idx.getOrElse(table, 0)
-        idx(table) = i + 1
-        val seg = if (counts(table) == 1) s"$table-g$gen"
-                  else s"$table-d$i-g$gen"
-        (table, seg, write)
+      val byTable = segments.groupBy(_._1).map { case (t, ws) =>
+        t -> deltaSegments(t, ws.size, gen).zip(ws.map(_._2))
       }
-      val writes: Seq[() => Unit] =
-        named.map { case (_, seg, write) => () => {
-          write(s"$dir/$seg")
-          st.stampSegment(seg)
-        }} ++ delLeg.toSeq.map { case (newIds, fresh) => () => {
-          fresh.repartition(deltaWidth(newIds))
-            .write.mode("overwrite")
-            .parquet(segmentPath(dir, "tombstones", gen))
-          st.stampSegment(s"tombstones-g$gen")
-        }}
-      Par.all(writes)
-      val appended = named.groupBy(_._1).map { case (t, segs) =>
-        t -> (prev.tables(t) ++ segs.map(_._2))
-      }
-      prev.tables ++ appended ++
-        delLeg.map(_ => "tombstones" ->
-          (prev.tables.getOrElse("tombstones", Nil) :+
-            s"tombstones-g$gen")).toMap
+      Par.all(byTable.values.flatten.toSeq.map { case (seg, write) =>
+        () => write(s"$dir/$seg")
+      } ++ delLeg.toSeq.map { case (newIds, fresh) => () =>
+        fresh.repartition(deltaWidth(newIds))
+          .write.mode("overwrite")
+          .parquet(segmentPath(dir, "tombstones", gen))
+      })
+      prev.tables ++ byTable.map { case (t, sw) =>
+        t -> (prev.tables(t) ++ sw.map(_._1))
+      } ++ delLeg.map(_ => "tombstones" ->
+        (prev.tables.getOrElse("tombstones", Nil) :+
+          s"tombstones-g$gen")).toMap
     }
     gcUnreferenced(spark, dir, retainGens)
   }
@@ -477,13 +396,8 @@ object IndexCommit {
     * directory with no manifest falls back to the bare `dir/table`
     * layout (pre-manifest indexes stay readable). */
   def tablePaths(spark: SparkSession, dir: String, table: String): Seq[String] =
-    currentManifest(spark, dir) match {
-      case Some(m) => m.tables.getOrElse(table,
-        sys.error(s"index at $dir has no table '$table' " +
-          s"(manifest g${m.gen} carries ${m.tables.keys.toSeq.sorted})"))
-        .map(s => s"$dir/$s")
-      case None => Seq(s"$dir/$table")
-    }
+    currentManifest(spark, dir).fold(Seq(s"$dir/$table"))(
+      tablePathsOf(dir, _, table))
 
   /** Read a logical index table — the union of its manifest segments.
     * Each segment is scanned against its OWN `basePath` (Spark's
@@ -528,7 +442,7 @@ object IndexCommit {
     val m = manifestFor(spark, src, atGen, "cloneSnapshot")
     val (sfs, sp) = fsOf(spark, src)
     var copied: Map[String, (Long, Long)] = Map.empty
-    commit(spark, dest, () => copied) { (gen, cur) =>
+    commitStamped(spark, dest, () => copied) { (gen, cur) =>
       require(cur.isEmpty,
         s"cloneSnapshot: destination $dest already holds a committed " +
           "index (gen " + cur.map(_.gen).getOrElse(0L) + ") — clones " +
@@ -880,57 +794,12 @@ object IndexCommit {
     * single-JVM recover-after-kill path. */
   def gcUnreferenced(spark: SparkSession, dir: String,
                      keepGens: Int = 1, graceMs: Long = 0L): Unit =
-    timed(s"gcUnreferenced $dir")(gcUnreferencedImpl(spark, dir, keepGens, graceMs))
-
-  private def gcUnreferencedImpl(spark: SparkSession, dir: String,
-                     keepGens: Int, graceMs: Long): Unit = {
-    require(keepGens >= 1, s"keepGens must be >= 1, got $keepGens")
-    val (fs, p) = fsOf(spark, dir)
-    if (!fs.exists(p)) return
-    val all = listGens(fs, p).sorted.reverse
-    if (all.isEmpty) {
-      // a first commit (or a member clone) killed before its flip
-      // strands a claim in a directory with NO manifest; gc is the
-      // documented recovery path, so clear aged claims here too
-      // instead of early-returning past them — otherwise every retry
-      // fails at claim creation until the marker is hand-deleted
-      val cutoff0 = System.currentTimeMillis() - graceMs
-      fs.listStatus(p).foreach { st =>
-        st.getPath.getName match {
-          case ClaimRe(_) if st.getModificationTime < cutoff0 =>
-            fs.delete(st.getPath, false): Unit
-          case _ =>
-        }
-      }
-      return
-    }
-    val cutoff = System.currentTimeMillis() - graceMs
-    val gens = all.zipWithIndex.filter { case (_, i) =>
-      i < keepGens || (graceMs > 0 &&
-        // supersession time of gen i = mtime of its successor's
-        // manifest (the commit that dereferenced it)
-        fs.getFileStatus(new Path(p, manifestName(all(i - 1))))
-          .getModificationTime >= cutoff)
-    }.map(_._1)
-    val live = gens.flatMap { g =>
-      parseManifest(fs, p, g, dir).tables.values.flatten.toSeq :+
-        manifestName(g)
-    }.toSet
-    fs.listStatus(p).foreach { st =>
-      val n = st.getPath.getName
-      val ours = n match {
-        case ManifestRe(_) => true
-        // a claim is stranded (killed committer) only once it has
-        // aged past graceMs; a younger one may be a LIVE commit's —
-        // sparing it keeps an out-of-contract concurrent GC from
-        // reopening the interleave race the claims close
-        case ClaimRe(_) => st.getModificationTime < cutoff
-        case SegmentRe(_, _) if st.isDirectory => true
-        case _ => n.startsWith("._manifest_")
-      }
-      if (ours && !live.contains(n)) fs.delete(st.getPath, true): Unit
-    }
-  }
+    timed(s"gcUnreferenced $dir")(
+      log.gc(spark, dir, keepGens, graceMs) { (retained, _) =>
+        val live = retained.flatMap(_.tables.values.flatten).toSet
+        st => st.isDirectory && SegmentRe.matches(st.getPath.getName) &&
+          !live.contains(st.getPath.getName)
+      })
 
   /** Merge `ids` into the index's `tombstones` table in one commit —
     * the generic deletion primitive every family's delete wraps, the

@@ -428,8 +428,7 @@ object VectorSearch {
                     dim: Int = 64, retainGens: Int = 1): Unit = {
     val spark = vectors.sparkSession
     import spark.implicits._
-    val st = new IndexCommit.SegmentStamper(spark, dir)
-    IndexCommit.commit(spark, dir, () => st.stamps()) { (gen, _) =>
+    IndexCommit.commit(spark, dir) { (gen, _) =>
       // hash-cluster rows by bucket before the partitioned write: each
       // bucket's rows land in exactly one task, so the write creates
       // one file per bucket IN PARALLEL across tasks — without this
@@ -437,18 +436,13 @@ object VectorSearch {
       // serially (measured: the file-create sequence, not the hashing,
       // dominated the roundtrip at sf0.1); the width is size-derived
       // ([[IndexCommit.writeWidth]]), no fixed 16-writer ceiling.
-      // The two staged tables overlap, and each branch stamps its own
-      // files in flight — no standalone checksum job trails the commit.
-      Par.both({
+      // The two staged tables overlap.
+      Par.both(
         IndexCommit.timed(s"lsh:bucket-write g$gen")(lshWriteBuckets(
-          vectors, bits, dim, IndexCommit.segmentPath(dir, "buckets", gen)))
-        st.stampSegment(s"buckets-g$gen")
-      }, {
+          vectors, bits, dim, IndexCommit.segmentPath(dir, "buckets", gen))),
         Seq((bits, dim)).toDF("bits", "dim")
           .coalesce(1).write.mode("overwrite")
-          .parquet(IndexCommit.segmentPath(dir, "meta", gen))
-        st.stampSegment(s"meta-g$gen")
-      })
+          .parquet(IndexCommit.segmentPath(dir, "meta", gen)))
       Map("buckets" -> Seq(s"buckets-g$gen"), "meta" -> Seq(s"meta-g$gen"))
     }
     IndexCommit.gcUnreferenced(spark, dir, retainGens)
@@ -1079,25 +1073,20 @@ object VectorSearch {
     val spark = vectors.sparkSession
     import spark.implicits._
     val (assigned, centroids) = ivfIndex(vectors, cellCol, dim, refine)
-    val st = new IndexCommit.SegmentStamper(spark, dir)
-    IndexCommit.commit(spark, dir, () => st.stamps()) { (gen, _) =>
+    IndexCommit.commit(spark, dir) { (gen, _) =>
       // parallel per-cell file creation (see lshWriteIndex), width
       // size-derived from the source table; the two staged tables
-      // overlap and stamp their own files in flight
-      Par.both({
+      // overlap
+      Par.both(
         IndexCommit.clusterForPartitionedWrite(
             assigned.toDF("cell", "vec_id", "embedding"),
             IndexCommit.partitionedWriteWidth(vectors), "cell",
             centroids.size.toLong, "vec_id")
           .write.mode("overwrite").partitionBy("cell")
-          .parquet(IndexCommit.segmentPath(dir, "cells", gen))
-        st.stampSegment(s"cells-g$gen")
-      }, {
+          .parquet(IndexCommit.segmentPath(dir, "cells", gen)),
         spark.createDataset(centroids.toSeq).toDF("cell", "centroid")
           .coalesce(1).write.mode("overwrite")
-          .parquet(IndexCommit.segmentPath(dir, "centroids", gen))
-        st.stampSegment(s"centroids-g$gen")
-      })
+          .parquet(IndexCommit.segmentPath(dir, "centroids", gen)))
       Map("cells" -> Seq(s"cells-g$gen"),
         "centroids" -> Seq(s"centroids-g$gen"))
     }
@@ -1199,21 +1188,17 @@ object VectorSearch {
   def compactIndexTable(spark: org.apache.spark.sql.SparkSession,
                         dir: String, table: String,
                         partCol: String, retainGens: Int = 1): Unit = {
-    val live = IndexCommit.readTable(spark, dir, table)
     IndexCommit.commit(spark, dir) { (gen, cur) =>
       val prev = cur.getOrElse(sys.error(
         s"compactIndexTable: no committed index at $dir"))
+      val live = IndexCommit.readTableOf(spark, dir, prev, table)
       // materialize pending deletes ([[deleteVectors]]): the
       // rewrite drops tombstoned rows and the tombstones table itself
-      val rows =
-        if (prev.tables.contains("tombstones"))
-          live.join(IndexCommit.readTable(spark, dir, "tombstones"),
-            Seq("vec_id"), "left_anti")
-        else live
-      IndexCommit.clusterForPartitionedWrite(rows,
+      IndexCommit.clusterForPartitionedWrite(
+          IndexCommit.maskTombstonesOf(spark, dir, prev, live, "vec_id"),
           IndexCommit.partitionedWriteWidth(live), partCol,
           IndexCommit.partitionValueCount(spark,
-            IndexCommit.tablePaths(spark, dir, table), table), "vec_id")
+            IndexCommit.tablePathsOf(dir, prev, table), table), "vec_id")
         .write.mode("overwrite").partitionBy(partCol)
         .parquet(IndexCommit.segmentPath(dir, table, gen))
       (prev.tables - "tombstones").updated(table, Seq(s"$table-g$gen"))
@@ -1287,34 +1272,32 @@ object VectorSearch {
                             table: String, partCol: Option[String],
                             retainGens: Int = 1): Unit = {
     require(sources.nonEmpty, "mergeStatelessIndexes: no source shards")
-    val metas = sources.map(src =>
-      IndexCommit.readTable(spark, src, "meta").head())
+    val shards = sources.map(src =>
+      src -> IndexCommit.manifestFor(spark, src, None, "mergeStatelessIndexes"))
+    val metaTables = shards.map { case (src, m) =>
+      IndexCommit.readTableOf(spark, src, m, "meta") }
+    val metas = metaTables.map(_.head())
     require(metas.distinct.size == 1,
       s"mergeStatelessIndexes: shard geometries differ: $metas — " +
         "shards must be built with the same meta parameters")
-    val rows = sources.map { src =>
-      val m = IndexCommit.currentManifest(spark, src).getOrElse(
-        sys.error(s"mergeStatelessIndexes: no committed index at $src"))
-      val raw = IndexCommit.readTable(spark, src, table)
-      if (m.tables.contains("tombstones"))
-        raw.join(IndexCommit.readTable(spark, src, "tombstones"),
-          Seq("vec_id"), "left_anti")
-      else raw
+    val rows = shards.map { case (src, m) =>
+      IndexCommit.maskTombstonesOf(spark, src, m,
+        IndexCommit.readTableOf(spark, src, m, table), "vec_id")
     }.reduce(_ unionByName _)
     IndexCommit.commit(spark, dest) { (gen, _) =>
       val w = partCol match {
         case Some(c) => IndexCommit.clusterForPartitionedWrite(rows,
             IndexCommit.partitionedWriteWidth(rows), c,
             IndexCommit.partitionValueCount(spark,
-              sources.flatMap(IndexCommit.tablePaths(spark, _, table)),
-              table), "vec_id")
+              shards.flatMap { case (src, m) =>
+                IndexCommit.tablePathsOf(src, m, table) }, table), "vec_id")
           .write.mode("overwrite").partitionBy(c)
         case None => rows
           .repartition(IndexCommit.writeWidth(rows))
           .write.mode("overwrite")
       }
       w.parquet(IndexCommit.segmentPath(dest, table, gen))
-      IndexCommit.readTable(spark, sources.head, "meta")
+      metaTables.head
         .coalesce(1).write.mode("overwrite")
         .parquet(IndexCommit.segmentPath(dest, "meta", gen))
       Map(table -> Seq(s"$table-g$gen"), "meta" -> Seq(s"meta-g$gen"))

@@ -45,8 +45,10 @@ object ScaleUp {
     val dst = args.lift(1).getOrElse("/root/repo/.scratch/sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val unit = args.lift(3).map(_.toLong).getOrElse(1000000000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = graft.Tuning(SparkSession.builder()).master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val env = Env(spark, src)

@@ -181,6 +181,70 @@ class DeltaCycleSpec extends SparkSpec {
     }
   }
 
+  /** Every visible file under every segment of `dir`'s current
+    * manifest carries a (length, CRC32C) stamp — walked on disk, not
+    * through the commit's own listing — and re-hashing them verifies. */
+  private def assertStamped(dir: String, what: String): Unit = {
+    val m = IndexCommit.currentManifest(spark, dir).get
+    def files(f: java.io.File, rel: String): Seq[String] =
+      if (!f.isDirectory) Seq(rel)
+      else f.listFiles().toSeq.filterNot(_.getName.startsWith("."))
+        .flatMap(c => files(c, s"$rel/${c.getName}"))
+    val onDisk = m.tables.values.flatten.toSeq.distinct
+      .flatMap(seg => files(new java.io.File(dir, seg), seg))
+    assert(onDisk.exists(_.endsWith(".parquet")) &&
+      onDisk.forall(m.files.contains),
+      s"$what: unstamped ${onDisk.filterNot(m.files.contains)}")
+    val card = IndexCommit.checksumCard(spark, dir, m).collect()
+    assert(card.forall(_.getBoolean(3)), s"$what: ${card.mkString("; ")}")
+  }
+
+  test("every commit kind stamps every file it stages") {
+    val bm25Family = Family("bm25", "postings", "doc_id", docs,
+      Bm25.writeIndex(_, "doc_id", "text", _),
+      Bm25.appendIndex(spark, _, _, "doc_id", "text"),
+      Bm25.deleteDocs(spark, _, _),
+      Bm25.applyDeltas(spark, _, _, "doc_id", "text", _),
+      Bm25.fsck(spark, _))
+    val dirs = scala.collection.mutable.LinkedHashMap[String, String]()
+    def dir(name: String): String =
+      dirs.getOrElseUpdate(name, tmpDir(s"graft_stamp_$name"))
+    try {
+      // each family's build, append and delete
+      (vectorFamilies ++ Seq(dedupFamily, bm25Family)).foreach { f =>
+        val key = col(f.keyCol)
+        f.build(f.data.filter(key % 2 === 0), dir(f.name))
+        assertStamped(dir(f.name), s"${f.name} build")
+        f.append(dir(f.name), f.data.filter(key % 2 === 1))
+        assertStamped(dir(f.name), s"${f.name} append")
+        f.delete(dir(f.name), f.data.filter(key % 5 === 2).select(key))
+        assertStamped(dir(f.name), s"${f.name} delete")
+      }
+      VectorSearch.pqWriteIndex(vecs, dir("pq"))
+      assertStamped(dir("pq"), "pq build")
+      // compactions
+      VectorSearch.compactIndexTable(spark, dir("ivf"), "cells", "cell")
+      assertStamped(dir("ivf"), "compactIndexTable")
+      Bm25.compactIndex(spark, dir("bm25"))
+      assertStamped(dir("bm25"), "Bm25.compactIndex")
+      // both merges, each against a second shard with disjoint ids
+      Bm25.writeIndex(docs.select(($"doc_id" + 100).as("doc_id"), $"text"),
+        "doc_id", "text", dir("bm25_shard"))
+      Bm25.mergeIndexes(spark, dir("bm25_merged"),
+        Seq(dir("bm25"), dir("bm25_shard")))
+      assertStamped(dir("bm25_merged"), "Bm25.mergeIndexes")
+      VectorSearch.lshWriteIndex(
+        vecs.select(($"vec_id" + 100).as("vec_id"), $"label", $"embedding"),
+        dir("lsh_shard"))
+      VectorSearch.mergeStatelessIndexes(spark, dir("lsh_merged"),
+        Seq(dir("lsh"), dir("lsh_shard")), "buckets", Some("bkt"))
+      assertStamped(dir("lsh_merged"), "mergeStatelessIndexes")
+      // a clone carries its copy-time stamps
+      IndexCommit.cloneSnapshot(spark, dir("ivfPq"), dir("ivfPq_clone"))
+      assertStamped(dir("ivfPq_clone"), "cloneSnapshot")
+    } finally dirs.values.foreach(rmRf)
+  }
+
   test("ivfPq delta path sub-splits hot coarse cells (coarse cells < nCells)") {
     // `vecs` has 3 coarse cells (label = vec_id % 3) under the default
     // 16-entry codebook: the local[4] write width 4 exceeds the cell
