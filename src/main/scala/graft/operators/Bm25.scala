@@ -601,9 +601,9 @@ object Bm25 {
     val m = IndexCommit.manifestFor(spark, dir, atGen, "fsck")
     def table(t: String) = IndexCommit.readTableOf(spark, dir, m, t)
     // the postings union feeds the stats recount, the df recount AND
-    // the orphan check, each its own scalar-subtree job — pin it once
-    // (lazy localCheckpoint) so the audit reads the multi-segment
-    // union from disk ONCE instead of once per invariant
+    // the orphan check, three aggregate subtrees under the card's one
+    // projection — pin it once so the audit reads the multi-segment
+    // union from disk ONCE instead of once per subtree
     val postings = table("postings").localCheckpoint(eager = true)
     val live =
       if (m.tables.contains("tombstones"))
@@ -636,15 +636,15 @@ object Bm25 {
             Seq("doc_id"), "left_anti")
           .agg(count(lit(1)).cast("long").as("orphaned"))
       else spark.range(1).select(col("id").cast("long").as("orphaned"))
-    val scalars = Seq(docAgg, stats, dfCmp, orphans)
+    val (rotAgg, rotChecks) = IndexCommit.checksumScalars(spark, dir, m)
+    val scalars = Seq(docAgg, stats, dfCmp, orphans, rotAgg)
       .foldLeft(spark.range(1).toDF("_one"))(PlanHints.withScalars)
     IndexCommit.checkRows(scalars, Seq(
         ("stats_n_docs", col("exp_n_docs"), col("act_n_docs")),
         ("stats_sum_dl", col("exp_sum_dl"), col("act_sum_dl")),
         ("df_terms", col("exp_terms"), col("act_terms")),
         ("df_mismatch_terms", lit(0L), col("mismatch_terms")),
-        ("tombstones_orphaned", lit(0L), col("orphaned"))))
-      .unionByName(IndexCommit.checksumCard(spark, dir, m))
+        ("tombstones_orphaned", lit(0L), col("orphaned"))) ++ rotChecks)
   }
 
   /** SERVE-COST card — the capacity-planning view of a query

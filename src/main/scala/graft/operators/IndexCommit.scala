@@ -582,10 +582,21 @@ object IndexCommit {
     *
     * The re-hash is a distributed job over the stamped file list
     * (driver work is listing names; tasks packed largest-first by
-    * payload), composed into the lazy card via the constant-key
-    * scalar join like every sibling aggregate. */
+    * payload). The family fscks fold [[checksumScalars]] into their own
+    * scalar row instead of appending this card, so one projection
+    * emits all their rows and every stamped file is re-hashed once. */
   def checksumCard(spark: SparkSession, dir: String,
                    m: Manifest): DataFrame = {
+    val (agg, checks) = checksumScalars(spark, dir, m)
+    checkRows(PlanHints.withScalars(spark.range(1).toDF("_one"), agg),
+      checks)
+  }
+
+  /** [[checksumCard]]'s one-row aggregate (`miss_n`, `len_mm`,
+    * `crc_mm`) and its four (name, expected, actual) checks over it —
+    * the form a family fsck folds into its own scalar row. */
+  private[operators] def checksumScalars(spark: SparkSession, dir: String,
+      m: Manifest): (DataFrame, Seq[(String, Column, Column)]) = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, sum}
     import spark.implicits._
     val (fs, p) = fsOf(spark, dir)
@@ -637,7 +648,7 @@ object IndexCommit {
             coalesce(sum(col("l")), lit(0L)).cast("long").as("len_mm"),
             coalesce(sum(col("c")), lit(0L)).cast("long").as("crc_mm"))
       }
-    checkRows(PlanHints.withScalars(spark.range(1).toDF("_one"), mismAgg),
+    (mismAgg,
       Seq(("segment_checksum_mismatches", lit(0L), col("crc_mm")),
         ("segment_files_missing", lit(0L), col("miss_n")),
         ("segment_files_unstamped", lit(0L), lit(unstamped)),
@@ -646,16 +657,23 @@ object IndexCommit {
 
   /** The fsck cards' (check, expected, actual, ok) rows over the one
     * row of `scalars`: one row per (name, expected, actual) check, in
-    * the order given. */
+    * the order given, all emitted by ONE projection (`inline` over an
+    * array of row structs). A union of one `select` per check would
+    * give each branch its own column-pruned copy of the aggregate
+    * subtrees under `scalars`; exchange reuse only matches identical
+    * subtrees, so every branch would re-run the aggregates (and an
+    * opaque kernel such as the [[checksumCard]] re-hash) once per
+    * check. Here each aggregate appears once in the plan and runs
+    * once. */
   private[operators] def checkRows(scalars: DataFrame,
       checks: Seq[(String, Column, Column)]): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    checks.map { case (name, expected, actual) =>
-      scalars.select(lit(name).as("check"),
+    import org.apache.spark.sql.functions.{array, inline, lit, struct}
+    scalars.select(inline(array(checks.map { case (name, expected, actual) =>
+      struct(lit(name).as("check"),
         expected.cast("long").as("expected"),
         actual.cast("long").as("actual"),
         (expected === actual).as("ok"))
-    }.reduce(_ unionByName _)
+    }: _*)))
   }
 
   /** Payload target per clone-copy task — one task per ~this many

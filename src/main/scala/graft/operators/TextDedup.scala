@@ -421,9 +421,9 @@ object TextDedup {
     val meta = table("meta").head()
     val (k, bands) =
       (meta.getAs[Int]("k"), meta.getAs[Int]("bands"))
-    // both unions feed several invariant aggregates each (own scalar-
-    // subtree jobs) — pin once so the segment union is read from disk
-    // once per table, not once per invariant
+    // both unions feed several invariant aggregates each (own
+    // aggregate subtrees) — pin once so the segment union is read from
+    // disk once per table, not once per subtree
     val bandsT = table("bands").select(col("doc_id"),
       col("band").cast("int").as("band"), col("key"),
       col("n_sh").cast("int").as("n_sh"))
@@ -465,7 +465,8 @@ object TextDedup {
     val trioAgg = IndexCommit.tombstoneAuditAgg(spark,
       bandsT.select(col("doc_id")),
       if (hasTomb) Some(table("tombstones")) else None, "doc_id")
-    val scalars = Seq(cmpAgg, perDocAgg, dupShAgg, trioAgg)
+    val (rotAgg, rotChecks) = IndexCommit.checksumScalars(spark, dir, m)
+    val scalars = Seq(cmpAgg, perDocAgg, dupShAgg, trioAgg, rotAgg)
       .foldLeft(spark.range(1).toDF("_one"))(PlanHints.withScalars)
     IndexCommit.checkRows(scalars, Seq(
         ("band_count_violations", lit(0L), col("band_count_bad")),
@@ -474,8 +475,7 @@ object TextDedup {
         ("duplicate_shingle_rows", lit(0L), col("dup_sh")),
         ("live_docs", col("phys_docs") - col("masked"), col("live_re")),
         ("n_sh_mismatches", lit(0L), col("nsh_mm")),
-        ("tombstones_orphaned", lit(0L), col("orphaned"))))
-      .unionByName(IndexCommit.checksumCard(spark, dir, m))
+        ("tombstones_orphaned", lit(0L), col("orphaned"))) ++ rotChecks)
   }
 
   /** Serve an increment against the persisted dedup index — the

@@ -1555,8 +1555,8 @@ object VectorSearch {
   /** The skeleton every vector-family fsck shares. It resolves the
     * manifest, pins the family's row table (`rowCols` of `rowsTable`)
     * once — the union feeds every invariant aggregate, each its own
-    * scalar-subtree job, so the many-small-file segment union is read
-    * from disk ONCE instead of once per invariant (guide §2.4/§5) —
+    * aggregate subtree, so the many-small-file segment union is read
+    * from disk ONCE instead of once per subtree (guide §2.4/§5) —
     * and adds the invariants all four families share:
     *
     *  - `duplicate_vec_rows`: physical rows − distinct vec_ids
@@ -1573,10 +1573,12 @@ object VectorSearch {
     * with the row/id counts into ONE pass), that aggregate's extra
     * columns, its other scalar aggregates and its (name, expected,
     * actual) checks.
-    * Every aggregate composes into ONE lazy plan via the constant-key
-    * scalar join (the mask trio is one fused job,
-    * [[IndexCommit.tombstoneAuditAgg]]); the rows come sorted by check
-    * name, then the shared [[IndexCommit.checksumCard]] rows. */
+    * Every aggregate, the bit-rot re-hash
+    * ([[IndexCommit.checksumScalars]]) included, folds into ONE scalar
+    * row via the constant-key scalar join (the mask trio is one fused
+    * job, [[IndexCommit.tombstoneAuditAgg]]), and one projection
+    * ([[IndexCommit.checkRows]]) emits every row: sorted by check name,
+    * then the shared [[IndexCommit.checksumCard]] rows. */
   private def vectorFsck(spark: org.apache.spark.sql.SparkSession,
       dir: String, atGen: Option[Long], op: String, rowsTable: String,
       rowCols: Seq[Column])(
@@ -1594,13 +1596,14 @@ object VectorSearch {
       rows.select(col("vec_id")),
       if (m.tables.contains("tombstones")) Some(table("tombstones"))
       else None, "vec_id")
-    val scalars = (rowAgg +: trioAgg +: aggs)
+    val (rotAgg, rotChecks) = IndexCommit.checksumScalars(spark, dir, m)
+    val scalars = (rowAgg +: trioAgg +: aggs :+ rotAgg)
       .foldLeft(spark.range(1).toDF("_one"))(PlanHints.withScalars)
     IndexCommit.checkRows(scalars, (checks ++ Seq(
         ("duplicate_vec_rows", lit(0L), col("phys_rows") - col("phys_ids")),
         ("live_vecs", col("phys_rows") - col("masked"), col("live_re")),
-        ("tombstones_orphaned", lit(0L), col("orphaned")))).sortBy(_._1))
-      .unionByName(IndexCommit.checksumCard(spark, dir, m))
+        ("tombstones_orphaned", lit(0L), col("orphaned")))).sortBy(_._1)
+      ++ rotChecks)
   }
 
   /** FSCK for the IVFPQ family — the structural/meta algebra of the

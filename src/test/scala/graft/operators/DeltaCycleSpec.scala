@@ -199,13 +199,72 @@ class DeltaCycleSpec extends SparkSpec {
     assert(card.forall(_.getBoolean(3)), s"$what: ${card.mkString("; ")}")
   }
 
+  private val bm25Family = Family("bm25", "postings", "doc_id", docs,
+    Bm25.writeIndex(_, "doc_id", "text", _),
+    Bm25.appendIndex(spark, _, _, "doc_id", "text"),
+    Bm25.deleteDocs(spark, _, _),
+    Bm25.applyDeltas(spark, _, _, "doc_id", "text", _),
+    Bm25.fsck(spark, _))
+
+  private val rotChecks = Seq("segment_checksum_mismatches",
+    "segment_files_missing", "segment_files_unstamped",
+    "segment_length_mismatches")
+  /** Each family fsck card's own check names in row order; the four
+    * [[rotChecks]] rows follow them. */
+  private val fsckChecks = Map(
+    "bm25" -> Seq("stats_n_docs", "stats_sum_dl", "df_terms",
+      "df_mismatch_terms", "tombstones_orphaned"),
+    "lsh" -> Seq("bucket_mismatches", "duplicate_vec_rows", "live_vecs",
+      "norm_mismatches", "tombstones_orphaned", "zero_norm_rows"),
+    "ivf" -> Seq("append_assignment_mismatches", "cells_without_centroid",
+      "centroid_duplicate_cells", "duplicate_vec_rows", "live_vecs",
+      "tombstones_orphaned", "zero_norm_rows"),
+    "ivfPq" -> Seq("cells_without_centroid", "code_range_violations",
+      "code_width_violations", "codebook_duplicate_entries",
+      "codebook_subspaces", "duplicate_vec_rows", "live_vecs",
+      "tombstones_orphaned"),
+    "mrl" -> Seq("duplicate_vec_rows", "live_vecs",
+      "prefix_width_violations", "tombstones_orphaned"),
+    "dedup" -> Seq("band_count_violations", "band_key_mismatches",
+      "band_shingle_unmatched", "duplicate_shingle_rows", "live_docs",
+      "n_sh_mismatches", "tombstones_orphaned"))
+
+  test("every fsck card keeps its schema and row order, all-ok when " +
+       "fresh, from one projection") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan, Project}
+    import org.apache.spark.sql.types._
+    def belowProjects(p: LogicalPlan): LogicalPlan = p match {
+      case Project(_, child) => belowProjects(child)
+      case other => other
+    }
+    (vectorFamilies ++ Seq(dedupFamily, bm25Family)).foreach { f =>
+      val dir = tmpDir(s"graft_card_${f.name}")
+      try {
+        f.build(f.data, dir)
+        val card = f.fsck(dir)
+        // BM25's stats columns are nullable, and so are its card's
+        // expected, actual and ok columns
+        val nullable = f.name == "bm25"
+        assert(card.schema == StructType(Seq(
+          StructField("check", StringType, nullable = false),
+          StructField("expected", LongType, nullable),
+          StructField("actual", LongType, nullable),
+          StructField("ok", BooleanType, nullable))), f.name)
+        val rows = card.collect()
+        assert(rows.map(_.getString(0)).toSeq ==
+          fsckChecks(f.name) ++ rotChecks, f.name)
+        assert(rows.forall(_.getBoolean(3)), s"${f.name}: ${rows.mkString("; ")}")
+        // every row comes from one Generate over the scalar row, not a
+        // union of one branch per check
+        val plan = card.queryExecution.optimizedPlan
+        assert(belowProjects(plan).isInstanceOf[Generate] &&
+          plan.collect { case g: Generate => g }.size == 1,
+          s"${f.name}: ${plan.treeString}")
+      } finally rmRf(dir)
+    }
+  }
+
   test("every commit kind stamps every file it stages") {
-    val bm25Family = Family("bm25", "postings", "doc_id", docs,
-      Bm25.writeIndex(_, "doc_id", "text", _),
-      Bm25.appendIndex(spark, _, _, "doc_id", "text"),
-      Bm25.deleteDocs(spark, _, _),
-      Bm25.applyDeltas(spark, _, _, "doc_id", "text", _),
-      Bm25.fsck(spark, _))
     val dirs = scala.collection.mutable.LinkedHashMap[String, String]()
     def dir(name: String): String =
       dirs.getOrElseUpdate(name, tmpDir(s"graft_stamp_$name"))

@@ -440,7 +440,7 @@ class IndexCommitSpec extends SparkSpec {
       assert(IndexCommit.manifestAt(spark, dir, 1L).tables("t") ==
         Seq("t-g1"))
       // without the grace (the single-JVM default) the segment goes
-      assert(IndexCommit.gcUnreferenced(spark, dir, keepGens = 1) == ())
+      IndexCommit.gcUnreferenced(spark, dir, keepGens = 1)
       assert(!new java.io.File(dir, "t-g1").exists())
     } finally rmRf(dir)
   }
@@ -944,22 +944,27 @@ class IndexCommitSpec extends SparkSpec {
     } finally { rmRf(bm25Dir); rmRf(ivfPqDir); rmRf(bareDir) }
   }
 
-  /** The names of the `_manifest_g*` files opened while `body` runs,
-    * recorded by [[ManifestOpenRecorder]] installed as this session's
-    * `file://` filesystem. */
-  private def manifestOpensDuring(body: => Unit): Seq[String] = {
+  /** The paths of the files opened while `body` runs, recorded by
+    * [[OpenRecorder]] installed as this session's `file://`
+    * filesystem. */
+  private def opensDuring(body: => Unit): Seq[org.apache.hadoop.fs.Path] = {
     val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
     val saved = keys.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set("fs.file.impl", classOf[ManifestOpenRecorder].getName)
+    spark.conf.set("fs.file.impl", classOf[OpenRecorder].getName)
     spark.conf.set("fs.file.impl.disable.cache", "true")
-    ManifestOpenRecorder.opened.clear()
+    OpenRecorder.opened.clear()
     try body
     finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
-    ManifestOpenRecorder.opened.toArray(Array.empty[String]).toSeq
+    OpenRecorder.opened.toArray(Array.empty[org.apache.hadoop.fs.Path])
+      .toSeq
   }
+
+  /** The names of the `_manifest_g*` files opened while `body` runs. */
+  private def manifestOpensDuring(body: => Unit): Seq[String] =
+    opensDuring(body).map(_.getName).filter(_.startsWith("_manifest_g"))
 
   test("a vector serve reads every table at ONE manifest generation") {
     val queries = vecs.filter($"vec_id" <= 3L)
@@ -992,19 +997,82 @@ class IndexCommitSpec extends SparkSpec {
       } finally rmRf(dir)
     }
   }
+
+  test("a card evaluates its inputs once: checkRows is one projection " +
+       "of the scalar row") {
+    import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
+    val rowsRead = spark.sparkContext.longAccumulator("card-source-rows")
+    val source = spark.sparkContext.parallelize(1L to 100L, 4)
+      .map { v => rowsRead.add(1L); v }.toDF("v")
+    val scalars = PlanHints.withScalars(spark.range(1).toDF("_one"),
+      source.agg(sum(col("v")).as("s"), count(lit(1)).as("n"),
+        max(col("v")).as("hi"), min(col("v")).as("lo")))
+    val card = IndexCommit.checkRows(scalars, Seq(
+      ("sum", lit(5050L), col("s")), ("count", lit(100L), col("n")),
+      ("max", lit(100L), col("hi")), ("min", lit(1L), col("lo"))))
+      .collect().map(r => (r.getString(0), r.getLong(2), r.getBoolean(3)))
+    assert(card.toSeq == Seq(("sum", 5050L, true), ("count", 100L, true),
+      ("max", 100L, true), ("min", 1L, true)))
+    assert(rowsRead.value == 100L,
+      s"the source was read ${rowsRead.value / 100.0} times, not once")
+  }
+
+  test("checksumCard opens each stamped file exactly once") {
+    val dir = tmpDir("graft_rot_once")
+    try {
+      Bm25.writeIndex(docs.filter($"doc_id" <= 2), "doc_id", "text", dir)
+      Bm25.appendIndex(spark, dir, docs.filter($"doc_id" > 2),
+        "doc_id", "text")
+      val m = IndexCommit.currentManifest(spark, dir).get
+      var card = Seq.empty[Boolean]
+      val opened = opensDuring {
+        card = IndexCommit.checksumCard(spark, dir, m).collect()
+          .map(_.getBoolean(3)).toSeq
+      }
+      assert(card.size == 4 && card.forall(identity))
+      val stamped = m.files.keySet.map(r => new java.io.File(dir, r).getPath)
+      val counts = opened.map(_.toUri.getPath).groupBy(identity)
+        .map { case (p, ps) => p -> ps.size }
+      assert(stamped.nonEmpty && stamped.forall(counts.get(_).contains(1)),
+        s"opens per stamped file: ${stamped.toSeq.sorted.map(p =>
+          p -> counts.getOrElse(p, 0))}")
+    } finally rmRf(dir)
+  }
+
+  test("fsck cards start a bounded number of Spark jobs (BM25, IVFPQ, " +
+       "with a tombstone)") {
+    val bm25Dir = tmpDir("graft_fsck_jobs_bm25")
+    val ivfPqDir = tmpDir("graft_fsck_jobs_ivfpq")
+    try {
+      Bm25.writeIndex(docs, "doc_id", "text", bm25Dir)
+      Bm25.deleteDocs(spark, bm25Dir, Seq(2L).toDF("doc_id"))
+      VectorSearch.ivfPqWriteIndex(vecs, ivfPqDir)
+      VectorSearch.deleteVectors(spark, ivfPqDir, Seq(5L).toDF("vec_id"))
+      // one projection per card: 18 jobs each (a union of one branch
+      // per check started 34 for BM25 and 40 for IVFPQ)
+      for ((name, fsck) <- Seq(
+             "bm25" -> (() => Bm25.fsck(spark, bm25Dir)),
+             "ivfPq" -> (() => VectorSearch.ivfPqFsck(spark, ivfPqDir)))) {
+        val (rows, jobs) = jobsStartedBy(fsck().collect())
+        assert(rows.nonEmpty && rows.forall(_.getBoolean(3)),
+          s"$name: ${rows.mkString("; ")}")
+        assert(jobs <= 18, s"$name fsck started $jobs Spark jobs")
+      }
+    } finally { rmRf(bm25Dir); rmRf(ivfPqDir) }
+  }
 }
 
-/** `file://` filesystem that records the name of every `_manifest_g*`
-  * file it opens. */
-class ManifestOpenRecorder extends org.apache.hadoop.fs.LocalFileSystem {
+/** `file://` filesystem that records the path of every file it
+  * opens. */
+class OpenRecorder extends org.apache.hadoop.fs.LocalFileSystem {
   override def open(f: org.apache.hadoop.fs.Path,
                     bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
-    if (f.getName.startsWith("_manifest_g"))
-      ManifestOpenRecorder.opened.add(f.getName): Unit
+    OpenRecorder.opened.add(f): Unit
     super.open(f, bufferSize)
   }
 }
 
-object ManifestOpenRecorder {
-  val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+object OpenRecorder {
+  val opened =
+    new java.util.concurrent.ConcurrentLinkedQueue[org.apache.hadoop.fs.Path]()
 }
