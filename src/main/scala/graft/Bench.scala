@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. A failing query reports `-1` (never a fake
@@ -7,26 +7,33 @@ import org.apache.spark.sql.SparkSession
   * are visible in BENCH_r{N}.json rather than silently "passing".
   */
 object Bench {
+  /** Warm the session once (scan metadata, codegen caches, JIT) so the
+    * alphabetically-first query doesn't absorb startup cost — measured
+    * ~4s of warmup otherwise attributed to whichever query runs first.
+    * Env sets the nanosAsLong conf events.parquet needs. Warmup
+    * failures (missing table) must NOT abort the bench — the affected
+    * queries will report their own errors. */
+  def warm(spark: SparkSession, sfDir: String): Unit =
+    try {
+      val warmEnv = Env(spark, sfDir)
+      Tables.names.foreach(t =>
+        try warmEnv.table(t).count()
+        catch { case _: Throwable => () })
+    } catch { case _: Throwable => () }
+
+  /** Evaluate `df` through a NOOP-format write, not count().
+    * count() lets the optimizer delete real work — unused-side outer
+    * joins (join elimination), final sorts, and every projected column
+    * the count doesn't need — so a query could bench "fast" while its
+    * actual result was never produced. The noop sink evaluates every
+    * output row in full (no IO), which is the honest "produce the
+    * result" cost a user would pay. */
+  def noopWrite(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = Tuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The registry shares kernels (Env scans, shingle/gram CTEs,
-      // quantized folds) whose generated code is byte-identical across
-      // queries — but 181 queries × ~4 codegen stages each blows the
-      // default 100-entry janino cache, so shared fragments recompile.
-      // Sized to hold the whole registry's distinct fragments.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    // ERROR, not WARN: the driver captures a bounded stdout window and
-    // sbt echoes every forked-JVM log line into it — streaming-query
-    // WARN chatter was crowding the JSON line out of the capture
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tuning.session()
 
     def esc(s: String): String = s.flatMap {
       case '"'  => "\\\""
@@ -35,47 +42,21 @@ object Bench {
       case c => c.toString
     }
 
-    // Warm the session once (scan metadata, codegen caches, JIT) so the
-    // alphabetically-first query doesn't absorb startup cost — measured
-    // ~4s of warmup otherwise attributed to whichever query runs first.
-    // Env sets the nanosAsLong conf events.parquet needs. Warmup
-    // failures (missing table) must NOT abort the bench — the affected
-    // queries will report their own errors.
-    try {
-      val warmEnv = Env(spark, sfDir)
-      Tables.names.foreach(t =>
-        try warmEnv.table(t).count()
-        catch { case _: Throwable => () })
-    } catch { case _: Throwable => () }
+    warm(spark, sfDir)
 
-    // Action: a NOOP-format write, not count(). count() lets the
-    // optimizer delete real work — unused-side outer joins (join
-    // elimination), final sorts, and every projected column the count
-    // doesn't need — so a query could bench "fast" while its actual
-    // result was never produced. The noop sink evaluates every output
-    // row in full (no IO), which is the honest "produce the result"
-    // cost a user would pay.
-    def runOnce(name: String,
-                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+    def runOnce(fn: (SparkSession, String) => DataFrame)
         : (Double, Option[String]) = {
       val t0 = System.nanoTime()
       val err: Option[String] =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
+        try { noopWrite(fn(spark, sfDir)); None }
         catch { case e: Throwable =>
           Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
         }
       val sec = (System.nanoTime() - t0) / 1e9
-      // Per-query hygiene, OUTSIDE the timed window: queries that
-      // lazily localCheckpoint shared subplans leave their blocks in
-      // the block manager until the ContextCleaner's next GC-driven
-      // sweep — across 187 queries × 2 passes those dead blocks
-      // crowd the storage pool and slow later queries' real work.
-      // Each registry entry is independent, so dropping all persisted
-      // RDDs and cached plans between queries frees exactly the
-      // leaked state and nothing a later query needs.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.sharedState.cacheManager.clearCache()
+      // Per-query hygiene, OUTSIDE the timed window: across 187
+      // queries × 2 passes leaked checkpoint blocks crowd the storage
+      // pool and slow later queries' real work.
+      Tuning.reset(spark)
       (if (err.isEmpty) sec else -1.0, err)
     }
 
@@ -128,7 +109,7 @@ object Bench {
       val sents = scala.collection.mutable.ArrayBuffer[(Int, Double)]()
       sents += ((0, sentinel()))
       val res = sorted.zipWithIndex.map { case ((name, fn), i) =>
-        val (sec, err) = runOnce(name, fn); pacedGc()
+        val (sec, err) = runOnce(fn); pacedGc()
         if ((i + 1) % sentinelEvery == 0 && i + 1 < sorted.size)
           sents += ((i + 1, sentinel()))
         (name, sec, err)

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Session-level engine tuning shared by every main (Bench, Verify,
-  * profiling tools) so measured and verified runs execute identically.
+  * the dev tools), the test suite and perfbench, so measured, verified
+  * and tested runs execute identically.
   * Each setting is scale-justified, not a local[32] fit — see
   * OPTIMIZATION_r18.md for the measurements:
   *
@@ -42,6 +43,12 @@ import org.apache.spark.sql.SparkSession
   *    per-path listing latency is object-store-sized AND path counts
   *    are thousands. 1024 keeps the distributed path for genuinely
   *    huge partitioned tables.
+  *
+  *  - UI status-store retention 50 (default 1000 jobs, stages and SQL
+  *    executions): the listener store is kept even with the UI off, so
+  *    the driver otherwise keeps every execution's plan graph and
+  *    metrics live. Nothing reads the store; profilers and tracers are
+  *    their own listeners.
   */
 object Tuning {
   def apply(b: SparkSession.Builder): SparkSession.Builder = b
@@ -51,4 +58,42 @@ object Tuning {
       "2")
     .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
       "1024")
+    .config("spark.ui.retainedJobs", "50")
+    .config("spark.ui.retainedStages", "50")
+    .config("spark.sql.ui.retainedExecutions", "50")
+
+  /** `SPARK_GRAFT_CPUS`, defaulting to the host's processor count. */
+  private def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The one session every main and the test suite run on: [[apply]],
+    * `local[cpus]` with as many shuffle partitions, UTC, UI off, and
+    * log level ERROR, so a main's own output is not buried in Spark's.
+    * The codegen cache holds 2000 entries (default 100): the registry
+    * shares kernels (Env scans, shingle/gram CTEs, quantized folds)
+    * whose generated code is byte-identical across queries, but ~285
+    * entries × ~4 codegen stages each overflow the default cache, so
+    * shared fragments recompile. */
+  def session(cpus: Int = defaultCpus): SparkSession = {
+    val spark = apply(SparkSession.builder())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
+  /** Between-entry hygiene: registry entries are independent, so the
+    * blocks earlier entries pinned (lazily localCheckpointed shared
+    * subplans, fsck pins) and the plans they cached are dead state a
+    * long run would otherwise accumulate in the block manager until the
+    * ContextCleaner's next GC-driven sweep. */
+  def reset(spark: SparkSession): Unit = {
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    spark.sharedState.cacheManager.clearCache()
+  }
 }

@@ -37,9 +37,9 @@ import org.apache.spark.sql.functions._
   * logged LOUDLY — one warning per hot bucket, emitted where the
   * broadcast relation materializes — so a capture that hit the guard
   * says so in its log rather than silently changing shape.
-  * [[hotBuckets]] is the same occupancy scan as a standalone audit
-  * (used by `tools/LshBandStats` for the measured-occupancy tables in
-  * SCALING.md).
+  * [[hotBuckets]] is the same occupancy scan as a standalone audit;
+  * SCALING.md "Retired measurement tools" records the measured
+  * occupancy of both LSH bandings.
   */
 object BandJoin {
 

@@ -95,20 +95,6 @@ object IndexCommit {
   private val HeaderV1 = "graft-index-manifest-v1"
   private val Header = "graft-index-manifest-v2"
 
-  /** Opt-in step timing for the commit path (dev profiling only):
-    * -Dgraft.phase.debug=true prints per-step wall times. */
-  private val phaseDebug =
-    sys.env.get("GRAFT_PHASE_DEBUG").contains("1") ||
-      java.lang.Boolean.getBoolean("graft.phase.debug")
-  private[operators] def timed[A](label: String)(body: => A): A =
-    if (!phaseDebug) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"[step] $label%-34s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      r
-    }
-
   private val log = new ManifestLog("_manifest_g", "_claim_g",
     Set(Header, HeaderV1), "", "gcUnreferenced the directory")(parseManifest)
 
@@ -279,7 +265,7 @@ object IndexCommit {
     val cur = currentManifest(spark, dir)
     val gen = cur.map(_.gen).getOrElse(0L) + 1
     log.commit(spark, dir, gen) { (fs, p) =>
-      val tables = timed(s"commit:stage g$gen")(stage(gen, cur))
+      val tables = stage(gen, cur)
       require(tables.nonEmpty, s"commit to $dir staged no tables")
       // file stamps: carry forward immutable retained segments' stamps,
       // take the precomputed ones, hash the rest of the newly staged
@@ -294,11 +280,9 @@ object IndexCommit {
         }
       val provided = precomputedFiles()
       val stamped = provided.keySet.map(rel => rel.substring(0, rel.indexOf('/')))
-      val toHash = timed(s"commit:list-toHash g$gen")(
-        (segSet -- prevSegs -- stamped).toSeq.sorted
-          .flatMap(seg => listSegmentFiles(fs, p, seg)))
-      val fileMap = carried ++ provided ++
-        timed(s"commit:checksum g$gen")(checksumFiles(spark, toHash))
+      val toHash = (segSet -- prevSegs -- stamped).toSeq.sorted
+        .flatMap(seg => listSegmentFiles(fs, p, seg))
+      val fileMap = carried ++ provided ++ checksumFiles(spark, toHash)
       val stampLines = fileMap.toSeq.sortBy(_._1).map {
         case (rel, (len, crc)) =>
           require(!rel.contains('\t'), s"bad file name: $rel")
@@ -812,12 +796,11 @@ object IndexCommit {
     * single-JVM recover-after-kill path. */
   def gcUnreferenced(spark: SparkSession, dir: String,
                      keepGens: Int = 1, graceMs: Long = 0L): Unit =
-    timed(s"gcUnreferenced $dir")(
-      log.gc(spark, dir, keepGens, graceMs) { (retained, _) =>
-        val live = retained.flatMap(_.tables.values.flatten).toSet
-        st => st.isDirectory && SegmentRe.matches(st.getPath.getName) &&
-          !live.contains(st.getPath.getName)
-      })
+    log.gc(spark, dir, keepGens, graceMs) { (retained, _) =>
+      val live = retained.flatMap(_.tables.values.flatten).toSet
+      st => st.isDirectory && SegmentRe.matches(st.getPath.getName) &&
+        !live.contains(st.getPath.getName)
+    }
 
   /** Merge `ids` into the index's `tombstones` table in one commit —
     * the generic deletion primitive every family's delete wraps, the

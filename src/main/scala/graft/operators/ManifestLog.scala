@@ -112,8 +112,8 @@ private[operators] final class ManifestLog[M](stem: String,
       // committed manifest (atomic on HDFS where rename-to-existing
       // fails; best-effort check on local filesystems)
       require(!fs.exists(fin), lostRace)
-      IndexCommit.timed(s"commit:flip g$gen")(require(fs.rename(tmp, fin),
-        s"${layer}manifest flip failed: $tmp -> $fin (concurrent writer?)"))
+      require(fs.rename(tmp, fin),
+        s"${layer}manifest flip failed: $tmp -> $fin (concurrent writer?)")
     } finally fs.delete(claim, false): Unit
   }
 

@@ -678,15 +678,6 @@ object TextDedup {
     }
   }
 
-  /** Public view of the MinHash band-key table (doc_id, band, key,
-    * n_sh) the candidate join shuffles on — `tools/LshBandStats`
-    * audits its bucket occupancy for the SCALING.md skew evidence. */
-  def bandKeys(docs: DataFrame, idCol: String, textCol: String,
-               n: Int = 3, k: Int = 64, bands: Int = 16): DataFrame =
-    bandKeysKernel(
-      docs.select(col(idCol).as("doc_id"), col(textCol).as("text")),
-      n, k, bands)
-
   private def bandKeysKernel(docs: DataFrame, n: Int, k: Int,
                              bands: Int): DataFrame = {
     val spark = docs.sparkSession

@@ -438,8 +438,8 @@ object VectorSearch {
       // ([[IndexCommit.writeWidth]]), no fixed 16-writer ceiling.
       // The two staged tables overlap.
       Par.both(
-        IndexCommit.timed(s"lsh:bucket-write g$gen")(lshWriteBuckets(
-          vectors, bits, dim, IndexCommit.segmentPath(dir, "buckets", gen))),
+        lshWriteBuckets(vectors, bits, dim,
+          IndexCommit.segmentPath(dir, "buckets", gen)),
         Seq((bits, dim)).toDF("bits", "dim")
           .coalesce(1).write.mode("overwrite")
           .parquet(IndexCommit.segmentPath(dir, "meta", gen)))
@@ -1865,28 +1865,13 @@ object VectorSearch {
     topKWindow(scored, k)
   }
 
-  /** Embedding near-dup with an LSH prefilter — the scale path the
-    * exact [[cosineThresholdPairs]] documents: `tables` independent
-    * `bits`-bit hyperplane signatures (same md5-seeded planes as
-    * [[lshTopK]], so an exact SQL oracle can replay them); a pair is a
-    * CANDIDATE when it collides in ANY table (banded OR-construction,
-    * the minhash-band shape), then the exact cosine verifies.
-    * PRECISION is exact — the verify kills every false candidate, so
-    * every emitted pair is a true ≥-threshold pair with its exact
-    * rounded cosine. RECALL is probabilistic: P(found) =
-    * 1 − (1 − p^bits)^tables with p = 1 − θ/π, rising toward 1 for
-    * pairs well above the threshold; calibrated against the exact scan
-    * in VectorSearchSpec. Scan fraction vs the n² kernel is the
-    * expected bucket-collision mass — at the defaults ~2-3% on the
-    * test embeddings.
-    */
   /** The banded OR-construction signature table behind
     * [[cosineThresholdPairsLsh]]: one (bkey, vec_id) row per (table,
     * vector), bkey = table · 2^bits + that table's `bits`-bit
-    * hyperplane bucket. Public so `tools/LshBandStats` audits the
-    * same bucket occupancy the candidate join will shuffle on. */
-  def lshBandKeys(vectors: DataFrame, dim: Int = 64, bits: Int = 8,
-                  tables: Int = 8): DataFrame = {
+    * hyperplane bucket; SCALING.md "Retired measurement tools" records
+    * its measured bucket occupancy. */
+  private def lshBandKeys(vectors: DataFrame, dim: Int = 64,
+                          bits: Int = 8, tables: Int = 8): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
     val tablePlanes = hyperplanes(bits * tables, dim).map(_.toArray)
@@ -1903,6 +1888,21 @@ object VectorSearch {
       }.toDF("bkey", "vec_id")
   }
 
+  /** Embedding near-dup with an LSH prefilter — the scale path the
+    * exact [[cosineThresholdPairs]] documents: `tables` independent
+    * `bits`-bit hyperplane signatures (same md5-seeded planes as
+    * [[lshTopK]], so an exact SQL oracle can replay them); a pair is a
+    * CANDIDATE when it collides in ANY table (banded OR-construction,
+    * the minhash-band shape), then the exact cosine verifies.
+    * PRECISION is exact — the verify kills every false candidate, so
+    * every emitted pair is a true ≥-threshold pair with its exact
+    * rounded cosine. RECALL is probabilistic: P(found) =
+    * 1 − (1 − p^bits)^tables with p = 1 − θ/π, rising toward 1 for
+    * pairs well above the threshold; calibrated against the exact scan
+    * in VectorSearchSpec. Scan fraction vs the n² kernel is the
+    * expected bucket-collision mass — at the defaults ~2-3% on the
+    * test embeddings.
+    */
   def cosineThresholdPairsLsh(vectors: DataFrame, threshold: Double,
                               dim: Int = 64, bits: Int = 8,
                               tables: Int = 8): DataFrame = {

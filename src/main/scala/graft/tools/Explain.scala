@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.{Env, SparkEntry}
-import org.apache.spark.sql.SparkSession
+import graft.SparkEntry
 
 /** Dev tool: print the formatted physical plan for one or more
   * registered queries (plan audits per the 100 TB posture).
@@ -10,14 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = graft.Tuning(SparkSession.builder()).master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Tuning.session()
     val qs = SparkEntry.queries
     args.drop(1).foreach { name =>
       println(s"===== $name =====")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: plan audit over every registered query — flags physical
   * operators that don't survive scale (cartesian products, nested-loop
@@ -11,14 +10,7 @@ import org.apache.spark.sql.SparkSession
 object ExplainAll {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = graft.Tuning(SparkSession.builder()).master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Tuning.session()
     // Dense-scan joins that are INTENTIONAL (pinned in
     // OperatorPlanShapeSpec): the chunk-blocked brute scans
     // (VectorSearch.scanChunks — inherently |Q|·|V| work sharded via one

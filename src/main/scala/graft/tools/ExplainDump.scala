@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for named registered queries to files —
   * the plan-evidence capture for optimization rounds (one
@@ -13,14 +12,7 @@ import org.apache.spark.sql.SparkSession
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1); val tag = args(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = graft.Tuning(SparkSession.builder()).master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Tuning.session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val qs = SparkEntry.queries
     args.drop(3).foreach { name =>
@@ -34,9 +26,7 @@ object ExplainDump {
       } catch { case e: Throwable =>
         System.err.println(s"[explain] $name FAILED: ${e.getMessage}")
       }
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.sharedState.cacheManager.clearCache()
+      graft.Tuning.reset(spark)
     }
     spark.stop()
   }

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.Env
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: synthesize an ~sf1 (×10) or ~sf10 (×100) dataset from
@@ -45,12 +45,7 @@ object ScaleUp {
     val dst = args.lift(1).getOrElse("/root/repo/.scratch/sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val unit = args.lift(3).map(_.toLong).getOrElse(1000000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = graft.Tuning(SparkSession.builder()).master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tuning.session()
     val env = Env(spark, src)
 
     def replicate(df: DataFrame)(remap: (DataFrame, Long) => DataFrame)

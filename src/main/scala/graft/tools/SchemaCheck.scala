@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.{Env, Tables}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Start-of-round testdata preflight: asserts the physical schema of
@@ -104,11 +103,7 @@ object SchemaCheck {
       if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
         "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Tuning.session()
     var bad = false
     dirs.foreach { d =>
       val drift = check(Env(spark, d))

@@ -4,16 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for DataFrame tests — one JVM-wide session
-  * (Spark startup is ~5s; per-suite sessions would dominate test time).
+  * (Spark startup is ~5s; per-suite sessions would dominate test time),
+  * built by [[Tuning.session]] like every main, so the suite runs the
+  * engine that ships.
   */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Tuning.session(4)
 }
 
 trait SparkSpec extends AnyFunSuite {
