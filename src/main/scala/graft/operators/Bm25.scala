@@ -170,36 +170,32 @@ object Bm25 {
     // term extraction runs once for postings AND df
     val dfWidth = IndexCommit.writeWidth(tfPlan.groupBy(col("term"))
       .agg(count(lit(1)).as("df")))
-    // EAGER: both parallel branches below read the materialized blocks
-    // instead of racing to compute a lazy checkpoint twice
+    // EAGER: the overlapped staged writes below read the materialized
+    // blocks instead of racing to compute a lazy checkpoint twice
     val tfAll = tfPlan.localCheckpoint(eager = true)
-    IndexCommit.commit(spark, dir) { (gen, _) =>
-      // the three staged tables are independent targets — overlap
-      // their writes (guide §2.6); the corpus term extraction already
-      // ran once into tfAll above
-      Par.all(Seq[() => Unit](
-        () => tfAll.select(col("term"), col("doc_id"), col("dl"), col("tf"))
-          .repartition(IndexCommit.writeWidth(docs), col("term"))
-          .sortWithinPartitions(col("term"))
-          .write.mode("overwrite")
-          .parquet(IndexCommit.segmentPath(dir, "postings", gen)),
-        // df is vocab-sized, not corpus-sized, but a web corpus's vocab
-        // is 10⁸–10⁹ terms — size-derived width and a term sort (row-
-        // group pruning for the serve-time term filter), never one file
-        () => tfAll.groupBy(col("term"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .repartition(dfWidth, col("term"))
-          .sortWithinPartitions(col("term"))
-          .write.mode("overwrite")
-          .parquet(IndexCommit.segmentPath(dir, "df", gen)),
-        () => base.agg(count(lit(1)).as("n_docs"),
-            sum(col("dl").cast("long")).as("sum_dl"))
-          .coalesce(1).write.mode("overwrite") // genuinely one row
-          .parquet(IndexCommit.segmentPath(dir, "stats", gen))))
-      Seq("postings", "df", "stats").map(t => t -> Seq(s"$t-g$gen")).toMap
-    }
-    IndexCommit.gcUnreferenced(spark, dir)
+    IndexCommit.build(spark, dir, retainGens = 1)(
+      "postings" -> termSorted(postingsOf(tfAll), IndexCommit.writeWidth(docs)),
+      // df is vocab-sized, not corpus-sized, but a web corpus's vocab
+      // is 10⁸–10⁹ terms — size-derived width and a term sort, never
+      // one file
+      "df" -> termSorted(tfAll.groupBy(col("term"))
+        .agg(countDistinct(col("doc_id")).as("df")), dfWidth),
+      "stats" -> IndexCommit.oneFile(base.agg(count(lit(1)).as("n_docs"),
+        sum(col("dl").cast("long")).as("sum_dl"))))
   }
+
+  /** The (term, doc_id, dl, tf) postings rows of a tf relation. */
+  private def postingsOf(tf: DataFrame): DataFrame =
+    tf.select(col("term"), col("doc_id"), col("dl"), col("tf"))
+
+  /** The one writer of BM25's term-sorted tables (postings and df
+    * segments): `df` hash-clustered by term across `width` writers and
+    * sorted by term within each file, so a serve-time term filter
+    * prunes parquet row groups by their term min/max stats. */
+  private def termSorted(df: DataFrame, width: Int): String => Unit =
+    dest => df.repartition(width, col("term"))
+      .sortWithinPartitions(col("term"))
+      .write.mode("overwrite").parquet(dest)
 
   /** ONE-COMMIT NIGHTLY CYCLE — N disjoint-id appends plus an optional
     * takedown applied as a SINGLE atomic generation; the one delta path
@@ -258,8 +254,7 @@ object Bm25 {
             "doc_id")
           .localCheckpoint(eager = true)
         val post = (IndexCommit.readTableOf(spark, dir, prev, "postings") +:
-          tfIncs.map(_.select(col("term"), col("doc_id"), col("dl"),
-            col("tf")))).reduce(_ unionByName _)
+          tfIncs.map(postingsOf)).reduce(_ unionByName _)
         val delRows = post.join(fresh, Seq("doc_id"))
           .localCheckpoint(eager = true)
         (newIds, fresh, delRows)
@@ -269,18 +264,11 @@ object Bm25 {
       val incWrites: Seq[() => Unit] =
         tfIncs.zipWithIndex.flatMap { case (tfInc, i) =>
           Seq[() => Unit](
-            () => tfInc.select(col("term"), col("doc_id"), col("dl"),
-                col("tf"))
-              .repartition(postWidths(i), col("term"))
-              .sortWithinPartitions(col("term"))
-              .write.mode("overwrite")
-              .parquet(s"$dir/${postSegs(i)}"),
-            () => tfInc.groupBy(col("term"))
-              .agg(countDistinct(col("doc_id")).as("df"))
-              .repartition(dfWidths(i), col("term"))
-              .sortWithinPartitions(col("term"))
-              .write.mode("overwrite")
-              .parquet(s"$dir/${incDfSegs(i)}"))
+            () => termSorted(postingsOf(tfInc), postWidths(i))(
+              s"$dir/${postSegs(i)}"),
+            () => termSorted(tfInc.groupBy(col("term"))
+                .agg(countDistinct(col("doc_id")).as("df")), dfWidths(i))(
+              s"$dir/${incDfSegs(i)}"))
         }
       // the takedown's NEGATIVE df delta — delete-sized write volume
       // no matter the vocabulary size ([[foldDf]] nets it out at read)
@@ -288,12 +276,10 @@ object Bm25 {
       val delWrites: Seq[() => Unit] = delLeg.toSeq.flatMap {
         case (newIds, fresh, delRows) =>
           Seq[() => Unit](
-            () => delRows.groupBy(col("term"))
-              .agg((-countDistinct(col("doc_id"))).as("df"))
-              .repartition(IndexCommit.deltaWidth(newIds), col("term"))
-              .sortWithinPartitions(col("term"))
-              .write.mode("overwrite")
-              .parquet(IndexCommit.segmentPath(dir, dfX, gen)),
+            () => termSorted(delRows.groupBy(col("term"))
+                .agg((-countDistinct(col("doc_id"))).as("df")),
+              IndexCommit.deltaWidth(newIds))(
+              IndexCommit.segmentPath(dir, dfX, gen)),
             () => fresh.repartition(IndexCommit.deltaWidth(newIds))
               .write.mode("overwrite")
               .parquet(IndexCommit.segmentPath(dir, "tombstones", gen)))
@@ -320,8 +306,8 @@ object Bm25 {
                 (col("sum_dl") - col("ddl")).as("sum_dl"))
           case None => merged
         }
-        finalStats.coalesce(1).write.mode("overwrite")
-          .parquet(IndexCommit.segmentPath(dir, "stats", gen))
+        IndexCommit.oneFile(finalStats)(
+          IndexCommit.segmentPath(dir, "stats", gen))
       }
       Par.all(incWrites ++ delWrites :+ statsWrite)
       val dfSegs = incDfSegs ++ delLeg.map(_ => s"$dfX-g$gen").toSeq
@@ -404,34 +390,17 @@ object Bm25 {
     * generations readable ([[IndexCommit.manifestAt]]) through the
     * compaction, matching the append/delete paths. */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
-                   dir: String, retainGens: Int = 1): Unit = {
-    IndexCommit.commit(spark, dir) { (gen, cur) =>
-      val prev = cur.getOrElse(sys.error(
-        s"compactIndex: no committed index at $dir"))
+                   dir: String, retainGens: Int = 1): Unit =
+    IndexCommit.compact(spark, dir, "compactIndex", retainGens) { prev =>
       val postings = IndexCommit.readTableOf(spark, dir, prev, "postings")
       val dfRaw = IndexCommit.readTableOf(spark, dir, prev, "df")
       // materialize pending deletes: the rewrite drops tombstoned rows
-      // and the tombstones table itself — the mask becomes physical
-      val live =
-        IndexCommit.maskTombstonesOf(spark, dir, prev, postings, "doc_id")
-      // two independent staged tables — overlap the rewrites
-      Par.all(Seq[() => Unit](
-        () => live
-          .repartition(IndexCommit.writeWidth(postings), col("term"))
-          .sortWithinPartitions(col("term"))
-          .write.mode("overwrite")
-          .parquet(IndexCommit.segmentPath(dir, "postings", gen)),
-        () => foldDf(dfRaw)
-          .repartition(IndexCommit.writeWidth(dfRaw), col("term"))
-          .sortWithinPartitions(col("term"))
-          .write.mode("overwrite")
-          .parquet(IndexCommit.segmentPath(dir, "df", gen))))
-      (prev.tables - "tombstones")
-        .updated("postings", Seq(s"postings-g$gen"))
-        .updated("df", Seq(s"df-g$gen"))
+      // (the compaction drops the tombstones table itself)
+      Seq("postings" -> termSorted(
+          IndexCommit.maskTombstonesOf(spark, dir, prev, postings, "doc_id"),
+          IndexCommit.writeWidth(postings)),
+        "df" -> termSorted(foldDf(dfRaw), IndexCommit.writeWidth(dfRaw)))
     }
-    IndexCommit.gcUnreferenced(spark, dir, retainGens)
-  }
 
   /** MERGE shard indexes into one — the SHARD-PARALLEL build shape a
     * 100 TB corpus needs: no single job builds the whole index; K
@@ -466,24 +435,10 @@ object Bm25 {
       .reduce(_ unionByName _)
       .agg(sum(col("n_docs")).as("n_docs"),
         sum(col("sum_dl")).as("sum_dl"))
-    IndexCommit.commit(spark, dest) { (gen, _) =>
-      // three independent staged tables — overlap the writes
-      Par.all(Seq[() => Unit](
-        () => postings
-          .repartition(IndexCommit.writeWidth(postings), col("term"))
-          .sortWithinPartitions(col("term"))
-          .write.mode("overwrite")
-          .parquet(IndexCommit.segmentPath(dest, "postings", gen)),
-        () => foldDf(dfAll)
-          .repartition(IndexCommit.writeWidth(dfAll), col("term"))
-          .sortWithinPartitions(col("term"))
-          .write.mode("overwrite")
-          .parquet(IndexCommit.segmentPath(dest, "df", gen)),
-        () => stats.coalesce(1).write.mode("overwrite")
-          .parquet(IndexCommit.segmentPath(dest, "stats", gen))))
-      Seq("postings", "df", "stats").map(t => t -> Seq(s"$t-g$gen")).toMap
-    }
-    IndexCommit.gcUnreferenced(spark, dest, retainGens)
+    IndexCommit.build(spark, dest, retainGens)(
+      "postings" -> termSorted(postings, IndexCommit.writeWidth(postings)),
+      "df" -> termSorted(foldDf(dfAll), IndexCommit.writeWidth(dfAll)),
+      "stats" -> IndexCommit.oneFile(stats))
   }
 
   /** Serve BM25 top-k from a persisted inverted index (see

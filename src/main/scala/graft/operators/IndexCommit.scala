@@ -59,16 +59,30 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * the "single key" is the manifest file, and the thing it versions is
   * a multi-table columnar index.
   *
-  * == Delta path ==
+  * == Staging ==
   *
-  * Every append and every delete of a persisted index is a delta
-  * cycle through ONE body, [[commitDeltas]]: an append is the
-  * one-increment cycle, a delete ([[appendTombstones]]) the
-  * delete-only one, and the families' `xAppendIndex`/`xApplyDeltas`
-  * only supply their encode. BM25, whose df/stats aggregates are
-  * re-merged rather than appended, has the one cycle of its own
-  * (`Bm25.applyDeltas`, which its append and delete delegate to).
-  * Only builds, compaction, merge and clone call [[commit]] besides.
+  * This layer alone stages segments: a family hands it
+  * `(table, write(dest))` pairs, and the layer names each segment
+  * (`<table>-g<gen>`, [[deltaSegments]] for deltas), runs every write
+  * of one commit concurrently ([[Par]]), builds the manifest map,
+  * flips it and runs GC. There are three bodies:
+  *
+  *  - [[build]]: a full build or merge — the listed tables, one
+  *    segment each, are the whole new index;
+  *  - [[compact]]: the listed tables are replaced by one segment each,
+  *    `tombstones` is dropped and every other table carried forward;
+  *  - [[commitDeltas]], the delta path: every append and every delete
+  *    is one cycle through it — an append is the one-increment cycle, a
+  *    delete ([[appendTombstones]]) the delete-only one. A family's
+  *    `xAppendIndex`/`xApplyDeltas` supplies only its encode, a
+  *    function of the base manifest the cycle extends, so frozen
+  *    geometry, centroids and codebooks are read from the very
+  *    generation the commit extends, resolved once.
+  *
+  * BM25, whose df/stats aggregates are re-merged rather than appended,
+  * keeps one [[commit]] body of its own (`Bm25.applyDeltas`, which its
+  * append and delete delegate to); [[cloneSnapshot]] stages byte
+  * copies through the same claim/stamp/flip core.
   *
   * == Write width ==
   *
@@ -300,6 +314,50 @@ object IndexCommit {
   def segmentPath(dir: String, table: String, gen: Long): String =
     s"$dir/$table-g$gen"
 
+  /** THE BUILD BODY of every full build and shard merge: stage each
+    * `(table, write)` into `segmentPath(dir, table, gen)`, all writes
+    * overlapped, commit `table -> Seq(<table>-g<gen>)` for exactly the
+    * listed tables (a rebuild supersedes every prior table, tombstones
+    * included), then GC to `retainGens`. A write that throws commits
+    * nothing: the prior index keeps serving, and a retry re-stages the
+    * same generation over the failed attempt's orphans. */
+  private[operators] def build(spark: SparkSession, dir: String,
+      retainGens: Int)(tables: (String, String => Unit)*): Unit =
+    stageTables(spark, dir, retainGens)(_ => (Map.empty, tables))
+
+  /** THE COMPACTION BODY: `tables(prev)` lists the tables to rewrite,
+    * each into one new segment; `tombstones` is dropped (the rewrites
+    * materialize the mask) and every other table of `prev` is carried
+    * forward verbatim. */
+  private[operators] def compact(spark: SparkSession, dir: String,
+      op: String, retainGens: Int)(
+      tables: Manifest => Seq[(String, String => Unit)]): Unit =
+    stageTables(spark, dir, retainGens) { cur =>
+      val prev = cur.getOrElse(sys.error(s"$op: no committed index at $dir"))
+      (prev.tables - "tombstones", tables(prev))
+    }
+
+  /** The one staging body [[build]] and [[compact]] share: `plan`
+    * gets the base manifest and returns the carried-forward tables and
+    * the `(table, write)` pairs to stage, one segment each. */
+  private def stageTables(spark: SparkSession, dir: String,
+      retainGens: Int)(plan: Option[Manifest] =>
+        (Map[String, Seq[String]], Seq[(String, String => Unit)])): Unit = {
+    commit(spark, dir) { (gen, cur) =>
+      val (carried, tables) = plan(cur)
+      Par.all(tables.map { case (t, write) =>
+        () => write(segmentPath(dir, t, gen)) })
+      carried ++ tables.map { case (t, _) => t -> deltaSegments(t, 1, gen) }
+    }
+    gcUnreferenced(spark, dir, retainGens)
+  }
+
+  /** The one writer of a driver-sized one-file table (`meta`,
+    * `centroids`, `codebooks`, `stats`): `df` as a single parquet file
+    * at the staged segment. */
+  private[operators] def oneFile(df: DataFrame): String => Unit =
+    dest => df.coalesce(1).write.mode("overwrite").parquet(dest)
+
   /** The segment names of `n` deltas of `table` staged in one cycle at
     * `gen`, in order: a single delta keeps the sequential chain's
     * `<table>-g<gen>`; several need the disambiguating
@@ -332,26 +390,35 @@ object IndexCommit {
     *
     * `increments` are the appended frames (their `keyCol` column is
     * gated against the prior tombstones — the re-ingest contract,
-    * [[requireDisjointFromTombstones]]); `segments` carries (table,
-    * write(destPath)) per staged increment segment — increments of one
-    * table keep their sequence order. The takedown is ordered AFTER
-    * the appends, like the sequential chain: `deleteIds` (first
-    * column, cast to long) are anti-joined against PRIOR tombstones
-    * only (idempotent re-delete). */
+    * [[requireDisjointFromTombstones]]). `encode(prev)(increment)`
+    * gives one increment's (table, write(destPath)) pairs; it is called
+    * inside the commit with the base manifest `prev` the new
+    * generation extends (and not at all for a delete-only cycle), so a
+    * family reads its frozen artifacts from `prev` with
+    * [[readTableOf]] — the increment is encoded against exactly the
+    * generation it extends, and the cycle resolves the manifest once.
+    * Increments of one table keep their sequence order. The takedown
+    * is ordered AFTER the appends, like the sequential chain:
+    * `deleteIds` (first column, cast to long) are anti-joined against
+    * PRIOR tombstones only (idempotent re-delete). */
   def commitDeltas(spark: SparkSession, dir: String, op: String,
                    keyCol: String, increments: Seq[DataFrame],
-                   segments: Seq[(String, String => Unit)],
+                   encode: Manifest => DataFrame => Seq[(String, String => Unit)],
                    deleteIds: Option[DataFrame],
                    retainGens: Int = 1): Unit = {
-    require(segments.nonEmpty || deleteIds.nonEmpty,
+    require(increments.nonEmpty || deleteIds.nonEmpty,
       s"$op: nothing to apply")
     commit(spark, dir) { (gen, cur) =>
       val prev = cur.getOrElse(sys.error(
         s"$op: no committed index at $dir — build it first"))
-      if (increments.nonEmpty)
-        requireDisjointFromTombstones(spark, dir, prev,
-          increments.map(_.select(keyCol)).reduce(_ unionByName _),
-          keyCol, op)
+      val segments =
+        if (increments.isEmpty) Nil
+        else {
+          requireDisjointFromTombstones(spark, dir, prev,
+            increments.map(_.select(keyCol)).reduce(_ unionByName _),
+            keyCol, op)
+          increments.flatMap(encode(prev))
+        }
       val delLeg = deleteIds.map { ids =>
         val newIds = ids.select(ids.col(ids.columns.head).cast("long")
           .as(keyCol)).distinct()
@@ -814,7 +881,7 @@ object IndexCommit {
     * drops the table. */
   def appendTombstones(spark: SparkSession, dir: String, ids: DataFrame,
                        keyCol: String, retainGens: Int = 1): Unit =
-    commitDeltas(spark, dir, "appendTombstones", keyCol, Nil, Nil,
+    commitDeltas(spark, dir, "appendTombstones", keyCol, Nil, _ => _ => Nil,
       Some(ids), retainGens)
 
   /** Enforce, inside an APPEND commit, that the increment's ids are
@@ -914,17 +981,8 @@ object IndexCommit {
     * decoded bytes, so actual files land below the target after
     * parquet encoding — the conservative side of the trade. */
   def writeWidth(sizeHint: DataFrame,
-                 targetBytesPerFile: Long = 128L << 20): Int = {
-    val spark = sizeHint.sparkSession
-    val floor =
-      math.max(1, math.min(spark.sparkContext.defaultParallelism, 16))
-    val est = sizeHint.queryExecution.optimizedPlan.stats.sizeInBytes
-    require(est < BigInt(Long.MaxValue) / 4,
-      "writeWidth: size estimate is the unknown-stats sentinel — pass a " +
-        "scan-backed sizeHint, not a checkpointed/RDD-backed frame")
-    val byBytes = (est + targetBytesPerFile - 1) / targetBytesPerFile
-    math.max(floor, byBytes.min(BigInt(MaxWidth)).toInt)
-  }
+                 targetBytesPerFile: Long = 128L << 20): Int =
+    widthOf(sizeHint, targetBytesPerFile, unknownIsFloor = false)
 
   /** Cluster `df` for a `partitionBy(partCol)` write with a WRITER
     * SUB-SPLIT for hot partitions (guide §2.5 skew / §6): repartition
@@ -990,15 +1048,6 @@ object IndexCommit {
       math.max(writeWidth(sizeHint, targetBytesPerFile), par))
   }
 
-  /** [[partitionedWriteWidth]] with [[deltaWidth]]'s tolerance for
-    * checkpoint-backed size hints (increment-sized deltas). */
-  def partitionedDeltaWidth(sizeHint: DataFrame,
-                            targetBytesPerFile: Long = 128L << 20): Int = {
-    val par = sizeHint.sparkSession.sparkContext.defaultParallelism
-    math.min(MaxWidth,
-      math.max(deltaWidth(sizeHint, targetBytesPerFile), par))
-  }
-
   /** [[writeWidth]] for DELTA segments (per-append df deltas, per-
     * delete tombstone batches) whose natural size hint may be
     * checkpoint- or join-backed and so carry the unknown-stats
@@ -1006,13 +1055,24 @@ object IndexCommit {
     * unknown estimate falls back to the parallel floor instead of the
     * loud error the full-table writes keep. */
   def deltaWidth(sizeHint: DataFrame,
-                 targetBytesPerFile: Long = 128L << 20): Int = {
-    val spark = sizeHint.sparkSession
-    val floor =
-      math.max(1, math.min(spark.sparkContext.defaultParallelism, 16))
+                 targetBytesPerFile: Long = 128L << 20): Int =
+    widthOf(sizeHint, targetBytesPerFile, unknownIsFloor = true)
+
+  /** The one body of [[writeWidth]] and [[deltaWidth]]: ⌈estimate /
+    * target⌉ between the parallel floor and [[MaxWidth]]. They differ
+    * only on the unknown-stats sentinel, which `unknownIsFloor` maps
+    * to the floor and otherwise rejects loudly. */
+  private def widthOf(sizeHint: DataFrame, targetBytesPerFile: Long,
+                      unknownIsFloor: Boolean): Int = {
+    val floor = math.max(1,
+      math.min(sizeHint.sparkSession.sparkContext.defaultParallelism, 16))
     val est = sizeHint.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est >= BigInt(Long.MaxValue) / 4) floor
-    else {
+    if (est >= BigInt(Long.MaxValue) / 4) {
+      require(unknownIsFloor,
+        "writeWidth: size estimate is the unknown-stats sentinel — pass a " +
+          "scan-backed sizeHint, not a checkpointed/RDD-backed frame")
+      floor
+    } else {
       val byBytes = (est + targetBytesPerFile - 1) / targetBytesPerFile
       math.max(floor, byBytes.min(BigInt(MaxWidth)).toInt)
     }

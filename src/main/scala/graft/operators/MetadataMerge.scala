@@ -95,14 +95,6 @@ object MetadataMerge {
                col("s.identifier").as("subjectId"))
       .agg(sum(col("s.weight")).as("weight"))
 
-  /** A4 (measurements flavor) — same additivity per quantity. */
-  def additiveMeasurements(metadata: Dataset[Metadata]): DataFrame =
-    metadata.toDF()
-      .select(col("primaryIdentifier.identifier").as("identifier"),
-              explode(col("measurements")).as("m"))
-      .groupBy(col("identifier"), col("m.quantity").as("quantity"))
-      .agg(sum(col("m.value")).as("value"))
-
   /** M4 — multi-OWI consolidation (ref `oclc/classify.py:97-128`,
     * `1125-1179`): several records per primary identifier fold into
     * one — contributors FIRST-wins in encounter order (`ord`),

@@ -82,15 +82,6 @@ object TextDedup {
       .withColumn("flagged", col("dup_frac") >= 0.5)
   }
 
-  /** MinHash signature: k independent min-hashes of the shingle set.
-    * h_i(S) = min over s∈S of xxhash64(s, i) — one array expression,
-    * no explode, no UDF. (Array form — see [[minhashSignatures]] for
-    * the faster exploded-aggregation form used by the pair pipeline.)
-    */
-  def minhashSignature(shingleCol: Column, k: Int = 64): Column =
-    array((0 until k).map(i =>
-      array_min(transform(shingleCol, s => xxhash64(s, lit(i))))): _*)
-
   /** Signature table (doc_id, sig: array<long>) via explode + grouped
     * min aggregation: each shingle row computes k hashes columnarly
     * (map-side partial min, one shuffle of k·partitions rows) instead
@@ -314,28 +305,25 @@ object TextDedup {
     import spark.implicits._
     val named = docs.select(col(idCol).as("doc_id"),
       col(textCol).as("text"))
-    IndexCommit.commit(spark, dir) { (gen, _) =>
-      bandKeysKernel(named, n, k, bands)
-        .repartition(IndexCommit.writeWidth(docs), col("key"))
-        .write.mode("overwrite")
-        .parquet(IndexCommit.segmentPath(dir, "bands", gen))
-      shingleHashSets(named, n)
-        .repartition(IndexCommit.writeWidth(docs), col("doc_id"))
-        .write.mode("overwrite")
-        .parquet(IndexCommit.segmentPath(dir, "shingles", gen))
-      Seq((n, k, bands)).toDF("n", "k", "bands")
-        .coalesce(1).write.mode("overwrite") // genuinely one row
-        .parquet(IndexCommit.segmentPath(dir, "meta", gen))
-      Seq("bands", "shingles", "meta")
-        .map(t => t -> Seq(s"$t-g$gen")).toMap
-    }
-    IndexCommit.gcUnreferenced(spark, dir, retainGens)
+    IndexCommit.build(spark, dir, retainGens)(
+      "bands" -> dedupWrite(bandKeysKernel(named, n, k, bands), "key",
+        IndexCommit.writeWidth(docs)),
+      "shingles" -> dedupWrite(shingleHashSets(named, n), "doc_id",
+        IndexCommit.writeWidth(docs)),
+      "meta" -> IndexCommit.oneFile(Seq((n, k, bands)).toDF("n", "k", "bands")))
   }
 
-  private def dedupIndexGeometry(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String): (Int, Int, Int) = {
-    val meta = IndexCommit.readTable(spark, dir, "meta").head()
+  /** The dedup index's row-table write: `rows` hash-clustered on
+    * `key` across `width` writers. */
+  private def dedupWrite(rows: DataFrame, key: String,
+                         width: Int): String => Unit =
+    dest => rows.repartition(width, col(key)).write.mode("overwrite")
+      .parquet(dest)
+
+  /** The frozen (n, k, bands) geometry manifest `m` carries. */
+  private def dedupIndexGeometry(spark: org.apache.spark.sql.SparkSession,
+      dir: String, m: IndexCommit.Manifest): (Int, Int, Int) = {
+    val meta = IndexCommit.readTableOf(spark, dir, m, "meta").head()
     (meta.getAs[Int]("n"), meta.getAs[Int]("k"), meta.getAs[Int]("bands"))
   }
 
@@ -363,21 +351,16 @@ object TextDedup {
                        idCol: String, textCol: String,
                        deleteIds: Option[DataFrame] = None,
                        retainGens: Int = 1): Unit = {
-    val (n, k, bands) = dedupIndexGeometry(spark, dir)
     val named = increments.map(inc => inc.select(col(idCol).as("doc_id"),
       col(textCol).as("text")))
     IndexCommit.commitDeltas(spark, dir, "dedupApplyDeltas", "doc_id",
-      named, named.flatMap { inc => Seq(
-        "bands" -> ((dest: String) =>
-          bandKeysKernel(inc, n, k, bands)
-            .repartition(IndexCommit.deltaWidth(inc), col("key"))
-            .write.mode("overwrite")
-            .parquet(dest)),
-        "shingles" -> ((dest: String) =>
-          shingleHashSets(inc, n)
-            .repartition(IndexCommit.deltaWidth(inc), col("doc_id"))
-            .write.mode("overwrite")
-            .parquet(dest)))
+      named, { prev =>
+        val (n, k, bands) = dedupIndexGeometry(spark, dir, prev)
+        inc => Seq(
+          "bands" -> dedupWrite(bandKeysKernel(inc, n, k, bands), "key",
+            IndexCommit.deltaWidth(inc)),
+          "shingles" -> dedupWrite(shingleHashSets(inc, n), "doc_id",
+            IndexCommit.deltaWidth(inc)))
       },
       deleteIds, retainGens)
   }
@@ -417,7 +400,7 @@ object TextDedup {
                 atGen: Option[Long] = None): DataFrame = {
     import spark.implicits._
     val m = IndexCommit.manifestFor(spark, dir, atGen, "dedupFsck")
-    def table(t: String) = IndexCommit.readTableAt(spark, dir, t, m.gen)
+    def table(t: String) = IndexCommit.readTableOf(spark, dir, m, t)
     val meta = table("meta").head()
     val (k, bands) =
       (meta.getAs[Int]("k"), meta.getAs[Int]("bands"))
@@ -488,13 +471,13 @@ object TextDedup {
                           dir: String, increment: DataFrame,
                           idCol: String, textCol: String,
                           threshold: Double = 0.5): DataFrame = {
-    val (n, k, bands) = dedupIndexGeometry(spark, dir)
+    val man = IndexCommit.manifestFor(spark, dir, None, "nearDupAgainstIndex")
+    val (n, k, bands) = dedupIndexGeometry(spark, dir, man)
     val named = increment.select(col(idCol).as("doc_id"),
       col(textCol).as("text"))
     val bandI = bandKeysKernel(named, n, k, bands)
       .localCheckpoint(eager = false)
     val shI = shingleHashSets(named, n).localCheckpoint(eager = false)
-    val man = IndexCommit.manifestFor(spark, dir, None, "nearDupAgainstIndex")
     def served(t: String) = IndexCommit.maskTombstonesOf(spark, dir, man,
       IndexCommit.readTableOf(spark, dir, man, t), "doc_id")
     val cands = bandI.as("a")

@@ -428,37 +428,28 @@ object VectorSearch {
                     dim: Int = 64, retainGens: Int = 1): Unit = {
     val spark = vectors.sparkSession
     import spark.implicits._
-    IndexCommit.commit(spark, dir) { (gen, _) =>
-      // hash-cluster rows by bucket before the partitioned write: each
-      // bucket's rows land in exactly one task, so the write creates
-      // one file per bucket IN PARALLEL across tasks — without this
-      // the single upstream scan task wrote all 2^bits bucket files
-      // serially (measured: the file-create sequence, not the hashing,
-      // dominated the roundtrip at sf0.1); the width is size-derived
-      // ([[IndexCommit.writeWidth]]), no fixed 16-writer ceiling.
-      // The two staged tables overlap.
-      Par.both(
-        lshWriteBuckets(vectors, bits, dim,
-          IndexCommit.segmentPath(dir, "buckets", gen)),
-        Seq((bits, dim)).toDF("bits", "dim")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(IndexCommit.segmentPath(dir, "meta", gen)))
-      Map("buckets" -> Seq(s"buckets-g$gen"), "meta" -> Seq(s"meta-g$gen"))
-    }
-    IndexCommit.gcUnreferenced(spark, dir, retainGens)
+    IndexCommit.build(spark, dir, retainGens)(
+      "buckets" -> writePartitioned(lshVectorBuckets(vectors, bits, dim),
+        vectors, "bkt", 1L << bits),
+      "meta" -> IndexCommit.oneFile(Seq((bits, dim)).toDF("bits", "dim")))
   }
 
-  /** The LSH bucket-table write of the build and the delta path:
-    * `vectors` hash-clustered by bucket (one parallel file per bucket,
-    * size-derived width) into the partitioned segment at `dest`. */
-  private def lshWriteBuckets(vectors: DataFrame, bits: Int, dim: Int,
-                              dest: String): Unit =
-    IndexCommit.clusterForPartitionedWrite(
-        lshVectorBuckets(vectors, bits, dim),
-        IndexCommit.partitionedWriteWidth(vectors), "bkt",
-        1L << bits, "vec_id")
-      .write.mode("overwrite").partitionBy("bkt")
-      .parquet(dest)
+  /** The one partitioned vector-row write of the build, delta,
+    * compaction and merge paths: `rows` hash-clustered on `partCol`
+    * before the `partitionBy(partCol)` write, so each partition value's
+    * rows land in one task (sub-split past `nPartValues`,
+    * [[IndexCommit.clusterForPartitionedWrite]]) and the files are
+    * created IN PARALLEL across tasks — without it the single upstream
+    * scan task wrote every bucket/cell file serially (measured: the
+    * file-create sequence, not the hashing, dominated the LSH roundtrip
+    * at sf0.1). The width is derived from `sizeHint`
+    * ([[IndexCommit.partitionedWriteWidth]]), no fixed writer ceiling. */
+  private def writePartitioned(rows: DataFrame, sizeHint: DataFrame,
+      partCol: String, nPartValues: Long): String => Unit =
+    dest => IndexCommit.clusterForPartitionedWrite(rows,
+        IndexCommit.partitionedWriteWidth(sizeHint), partCol, nPartValues,
+        "vec_id")
+      .write.mode("overwrite").partitionBy(partCol).parquet(dest)
 
   /** ONE-COMMIT append(+takedown) cycle for the LSH family — the
     * sequential [[lshAppendIndex]]+[[deleteVectors]] chain's segments
@@ -468,14 +459,14 @@ object VectorSearch {
   def lshApplyDeltas(spark: org.apache.spark.sql.SparkSession,
                      dir: String, increments: Seq[DataFrame],
                      deleteIds: Option[DataFrame] = None,
-                     retainGens: Int = 1): Unit = {
-    val meta = IndexCommit.readTable(spark, dir, "meta").head()
-    val (bits, dim) = (meta.getInt(0), meta.getInt(1))
+                     retainGens: Int = 1): Unit =
     IndexCommit.commitDeltas(spark, dir, "lshApplyDeltas", "vec_id",
-      increments, increments.map(inc => "buckets" ->
-        ((dest: String) => lshWriteBuckets(inc, bits, dim, dest))),
-      deleteIds, retainGens)
-  }
+      increments, { prev =>
+        val meta = IndexCommit.readTableOf(spark, dir, prev, "meta").head()
+        val (bits, dim) = (meta.getInt(0), meta.getInt(1))
+        inc => Seq("buckets" -> writePartitioned(
+          lshVectorBuckets(inc, bits, dim), inc, "bkt", 1L << bits))
+      }, deleteIds, retainGens)
 
   /** Serve top-k from a persisted LSH index (see [[lshWriteIndex]]).
     * The only driver read is the one-row geometry; the bucket table
@@ -1073,24 +1064,11 @@ object VectorSearch {
     val spark = vectors.sparkSession
     import spark.implicits._
     val (assigned, centroids) = ivfIndex(vectors, cellCol, dim, refine)
-    IndexCommit.commit(spark, dir) { (gen, _) =>
-      // parallel per-cell file creation (see lshWriteIndex), width
-      // size-derived from the source table; the two staged tables
-      // overlap
-      Par.both(
-        IndexCommit.clusterForPartitionedWrite(
-            assigned.toDF("cell", "vec_id", "embedding"),
-            IndexCommit.partitionedWriteWidth(vectors), "cell",
-            centroids.size.toLong, "vec_id")
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(IndexCommit.segmentPath(dir, "cells", gen)),
-        spark.createDataset(centroids.toSeq).toDF("cell", "centroid")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(IndexCommit.segmentPath(dir, "centroids", gen)))
-      Map("cells" -> Seq(s"cells-g$gen"),
-        "centroids" -> Seq(s"centroids-g$gen"))
-    }
-    IndexCommit.gcUnreferenced(spark, dir, retainGens)
+    IndexCommit.build(spark, dir, retainGens)(
+      "cells" -> writePartitioned(assigned.toDF("cell", "vec_id", "embedding"),
+        vectors, "cell", centroids.size.toLong),
+      "centroids" -> IndexCommit.oneFile(
+        spark.createDataset(centroids.toSeq).toDF("cell", "centroid")))
   }
 
   /** ONE-COMMIT append(+takedown) cycle for the IVF family — the
@@ -1105,30 +1083,27 @@ object VectorSearch {
                      deleteIds: Option[DataFrame] = None, dim: Int = 64,
                      retainGens: Int = 1): Unit = {
     import spark.implicits._
-    val centroids = IndexCommit.readTable(spark, dir, "centroids")
-      .as[(Int, Array[Double])].collect().sortBy(_._1)
-    val bcC = spark.sparkContext.broadcast(centroids)
-    def assign(increment: DataFrame): DataFrame =
-      increment.select(col("vec_id"), col("embedding"))
-        .filter(col("embedding").isNotNull)
-        .as[(Long, Array[Float])]
-        .mapPartitions { it =>
-          val nearest = ivfNearest(bcC.value, dim)
-          it.flatMap { case (vid, e) =>
-            val ne = normK(e, dim)
-            if (ne == 0.0) Iterator.empty // cosine undefined: unservable
-            else Iterator.single((nearest(e, ne), vid, e))
-          }
-        }
-        .toDF("cell", "vec_id", "embedding")
     IndexCommit.commitDeltas(spark, dir, "ivfApplyDeltas", "vec_id",
-      increments, increments.map(inc => "cells" -> ((dest: String) =>
-        IndexCommit.clusterForPartitionedWrite(assign(inc),
-            IndexCommit.partitionedWriteWidth(inc), "cell",
-            centroids.length.toLong, "vec_id")
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(dest))),
-      deleteIds, retainGens)
+      increments, { prev =>
+        val centroids = loadCentroids(
+          IndexCommit.readTableOf(spark, dir, prev, "centroids"))
+        val bcC = spark.sparkContext.broadcast(centroids)
+        def assign(inc: DataFrame): DataFrame =
+          inc.select(col("vec_id"), col("embedding"))
+            .filter(col("embedding").isNotNull)
+            .as[(Long, Array[Float])]
+            .mapPartitions { it =>
+              val nearest = ivfNearest(bcC.value, dim)
+              it.flatMap { case (vid, e) =>
+                val ne = normK(e, dim)
+                if (ne == 0.0) Iterator.empty // cosine undefined: unservable
+                else Iterator.single((nearest(e, ne), vid, e))
+              }
+            }
+            .toDF("cell", "vec_id", "embedding")
+        inc => Seq("cells" -> writePartitioned(assign(inc), inc, "cell",
+          centroids.length.toLong))
+      }, deleteIds, retainGens)
   }
 
   /** APPEND an increment to a persisted IVF index without rebuilding —
@@ -1187,24 +1162,16 @@ object VectorSearch {
     * uncompacted oracle. */
   def compactIndexTable(spark: org.apache.spark.sql.SparkSession,
                         dir: String, table: String,
-                        partCol: String, retainGens: Int = 1): Unit = {
-    IndexCommit.commit(spark, dir) { (gen, cur) =>
-      val prev = cur.getOrElse(sys.error(
-        s"compactIndexTable: no committed index at $dir"))
+                        partCol: String, retainGens: Int = 1): Unit =
+    IndexCommit.compact(spark, dir, "compactIndexTable", retainGens) { prev =>
       val live = IndexCommit.readTableOf(spark, dir, prev, table)
-      // materialize pending deletes ([[deleteVectors]]): the
-      // rewrite drops tombstoned rows and the tombstones table itself
-      IndexCommit.clusterForPartitionedWrite(
-          IndexCommit.maskTombstonesOf(spark, dir, prev, live, "vec_id"),
-          IndexCommit.partitionedWriteWidth(live), partCol,
-          IndexCommit.partitionValueCount(spark,
-            IndexCommit.tablePathsOf(dir, prev, table), table), "vec_id")
-        .write.mode("overwrite").partitionBy(partCol)
-        .parquet(IndexCommit.segmentPath(dir, table, gen))
-      (prev.tables - "tombstones").updated(table, Seq(s"$table-g$gen"))
+      // materialize pending deletes ([[deleteVectors]]): the rewrite
+      // drops tombstoned rows (the compaction drops the table itself)
+      Seq(table -> writePartitioned(
+        IndexCommit.maskTombstonesOf(spark, dir, prev, live, "vec_id"),
+        live, partCol, IndexCommit.partitionValueCount(spark,
+          IndexCommit.tablePathsOf(dir, prev, table), table)))
     }
-    IndexCommit.gcUnreferenced(spark, dir, retainGens)
-  }
 
   /** INDEX HEALTH card for a persisted vector index —
     * [[Bm25.healthCard]]'s twin, covering what the drift-focused
@@ -1218,7 +1185,9 @@ object VectorSearch {
     * masked fraction > `maxMaskedFrac` — the signal acted on with
     * [[compactIndexTable]], after which the re-run card is quiet.
     * `rowsTable` is the family's vector-row table ("cells" for IVF,
-    * "buckets" for LSH, "codes" for PQ/IVFPQ, "prefixes" for MRL). */
+    * "buckets" for LSH, "codes" for PQ/IVFPQ, "prefix" for MRL). The
+    * card resolves the manifest once and reads every table through it,
+    * so a commit landing mid-card cannot mix two generations. */
   def healthCard(spark: org.apache.spark.sql.SparkSession, dir: String,
                  rowsTable: String, maxSegments: Int = 8,
                  maxMaskedFrac: Double = 0.1): DataFrame = {
@@ -1231,12 +1200,12 @@ object VectorSearch {
     val maxSeg = m.tables.values.map(_.size).max
     val masked =
       if (m.tables.contains("tombstones"))
-        IndexCommit.readTable(spark, dir, "tombstones")
+        IndexCommit.readTableOf(spark, dir, m, "tombstones")
           .agg(count(lit(1)).cast("long").as("masked_vecs"))
       else // range(1)'s id IS the zero (a literal would fold the
            // constant-key scalar join into a nested-loop cross join)
         spark.range(1).select(col("id").as("masked_vecs"))
-    val total = IndexCommit.readTable(spark, dir, rowsTable)
+    val total = IndexCommit.readTableOf(spark, dir, m, rowsTable)
       .agg(count(lit(1)).cast("long").as("_total_rows"))
     val perTable = IndexCommit.segmentDebt(spark, dir, m)
     PlanHints.withScalars(PlanHints.withScalars(perTable, masked), total)
@@ -1284,25 +1253,15 @@ object VectorSearch {
       IndexCommit.maskTombstonesOf(spark, src, m,
         IndexCommit.readTableOf(spark, src, m, table), "vec_id")
     }.reduce(_ unionByName _)
-    IndexCommit.commit(spark, dest) { (gen, _) =>
-      val w = partCol match {
-        case Some(c) => IndexCommit.clusterForPartitionedWrite(rows,
-            IndexCommit.partitionedWriteWidth(rows), c,
-            IndexCommit.partitionValueCount(spark,
-              shards.flatMap { case (src, m) =>
-                IndexCommit.tablePathsOf(src, m, table) }, table), "vec_id")
-          .write.mode("overwrite").partitionBy(c)
-        case None => rows
-          .repartition(IndexCommit.writeWidth(rows))
-          .write.mode("overwrite")
-      }
-      w.parquet(IndexCommit.segmentPath(dest, table, gen))
-      metaTables.head
-        .coalesce(1).write.mode("overwrite")
-        .parquet(IndexCommit.segmentPath(dest, "meta", gen))
-      Map(table -> Seq(s"$table-g$gen"), "meta" -> Seq(s"meta-g$gen"))
+    val write: String => Unit = partCol match {
+      case Some(c) => writePartitioned(rows, rows, c,
+        IndexCommit.partitionValueCount(spark, shards.flatMap {
+          case (src, m) => IndexCommit.tablePathsOf(src, m, table) }, table))
+      case None => dest => rows.repartition(IndexCommit.writeWidth(rows))
+        .write.mode("overwrite").parquet(dest)
     }
-    IndexCommit.gcUnreferenced(spark, dest, retainGens)
+    IndexCommit.build(spark, dest, retainGens)(
+      table -> write, "meta" -> IndexCommit.oneFile(metaTables.head))
   }
 
   /** RETRAIN-DECISION card over a persisted IVF index — the feedback
@@ -1331,8 +1290,10 @@ object VectorSearch {
                      nProbe: Int = 3, dim: Int = 64,
                      skewMax: Double = 1.5, recallFloor: Double = 0.9)
       : DataFrame = {
-    val rows = IndexCommit.maskTombstones(spark, dir,
-      IndexCommit.readTable(spark, dir, "cells")
+    // one manifest for the occupancy, the truth AND the served leg
+    val m = IndexCommit.manifestFor(spark, dir, None, "ivfRetrainCard")
+    val rows = IndexCommit.maskTombstonesOf(spark, dir, m,
+      IndexCommit.readTableOf(spark, dir, m, "cells")
         .select(col("cell").cast("int").as("cell"), col("vec_id"),
           col("embedding")), "vec_id")
     val occ = rows.groupBy(col("cell")).agg(count(lit(1)).as("n"))
@@ -1341,7 +1302,7 @@ object VectorSearch {
     val truth = bruteForceTopK(rows.select(col("vec_id"), col("embedding")),
         queries, k, dim)
       .select(col("qid"), col("vec_id"))
-    val served = ivfServe(spark, dir, queries, k, nProbe, dim)
+    val served = ivfServe(spark, dir, queries, k, nProbe, dim, Some(m.gen))
       .select(col("qid"), col("vec_id"))
     val hits = truth.join(served, Seq("qid", "vec_id"), "left_semi")
       .agg(count(lit(1)).as("n_hit"))
@@ -1360,6 +1321,14 @@ object VectorSearch {
           .as("rebuild_recommended"))
   }
 
+  /** The one centroid loader: a `centroids` table as (cell, centroid)
+    * pairs in cell order — cell-count-sized by construction, the
+    * bounded collect every IVF/IVFPQ serve, card and delta makes. */
+  private def loadCentroids(centroids: DataFrame): Array[(Int, Array[Double])] = {
+    import centroids.sparkSession.implicits._
+    centroids.as[(Int, Array[Double])].collect().sortBy(_._1)
+  }
+
   /** Serve top-k from a persisted index directory (see
     * [[ivfWriteIndex]]). The centroid artifact is collected — it is
     * cell-count-sized by construction, never corpus-sized — and the
@@ -1376,8 +1345,7 @@ object VectorSearch {
     // to when it was current
     val m = IndexCommit.manifestFor(spark, dir, atGen, "ivfServe")
     def table(t: String) = IndexCommit.readTableOf(spark, dir, m, t)
-    val centroids = table("centroids")
-      .as[(Int, Array[Double])].collect().sortBy(_._1)
+    val centroids = loadCentroids(table("centroids"))
     val raw = table("cells")
       .select(col("cell").cast("int").as("cell"), col("vec_id"),
               col("embedding"))
@@ -1405,8 +1373,7 @@ object VectorSearch {
     import spark.implicits._
     val m = IndexCommit.manifestFor(spark, dir, atGen, "ivfServeCostCard")
     def table(t: String) = IndexCommit.readTableOf(spark, dir, m, t)
-    val centroids = table("centroids")
-      .as[(Int, Array[Double])].collect().sortBy(_._1)
+    val centroids = loadCentroids(table("centroids"))
     val raw = table("cells")
       .select(col("cell").cast("int").as("cell"), col("vec_id"))
     val phys = raw.groupBy(col("cell"))
@@ -1520,8 +1487,7 @@ object VectorSearch {
         if (appendSegs.isEmpty)
           spark.range(1).select(col("id").as("mismatches"))
         else {
-          val bcC = spark.sparkContext.broadcast(
-            centroids.as[(Int, Array[Double])].collect().sortBy(_._1))
+          val bcC = spark.sparkContext.broadcast(loadCentroids(centroids))
           IndexCommit.readSegments(spark, appendSegs.map(s => s"$dir/$s"))
             .select(col("cell").cast("int").as("cell"), col("vec_id"),
               col("embedding"))
@@ -1758,8 +1724,7 @@ object VectorSearch {
     import spark.implicits._
     val m = IndexCommit.manifestFor(spark, dir, atGen, "ivfChosenProbe")
     def table(t: String) = IndexCommit.readTableOf(spark, dir, m, t)
-    val centroids = table("centroids")
-      .as[(Int, Array[Double])].collect().sortBy(_._1)
+    val centroids = loadCentroids(table("centroids"))
     val raw = table("cells")
       .select(col("cell").cast("int").as("cell"), col("vec_id"),
               col("embedding"))
@@ -2366,21 +2331,12 @@ object VectorSearch {
       .as[(Long, Array[Float])]
     val cb = pqTrainCodebook(vs, m, nCells, sub)
     val bc = spark.sparkContext.broadcast(cb)
-    IndexCommit.commit(spark, dir) { (gen, _) =>
-      pqEncode(vectors, bc, m, nCells, dim).write.mode("overwrite")
-        .parquet(IndexCommit.segmentPath(dir, "codes", gen))
-      val rows = for {
-        j <- 0 until m; c <- 0 until nCells; if cb(j)(c) != null
-      } yield (j, c, cb(j)(c).toSeq)
-      spark.createDataset(rows).toDF("subspace", "cell", "centroid")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(IndexCommit.segmentPath(dir, "codebooks", gen))
-      Seq((m, nCells, dim)).toDF("m", "ncells", "dim")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(IndexCommit.segmentPath(dir, "meta", gen))
-      Seq("codes", "codebooks", "meta").map(t => t -> Seq(s"$t-g$gen")).toMap
-    }
-    IndexCommit.gcUnreferenced(spark, dir, retainGens)
+    IndexCommit.build(spark, dir, retainGens)(
+      "codes" -> (pqEncode(vectors, bc, m, nCells, dim).write
+        .mode("overwrite").parquet(_: String)),
+      "codebooks" -> IndexCommit.oneFile(codebookRows(spark, cb)),
+      "meta" -> IndexCommit.oneFile(
+        Seq((m, nCells, dim)).toDF("m", "ncells", "dim")))
   }
 
   /** Serve top-k from a persisted PQ index (see [[pqWriteIndex]]): the
@@ -2419,6 +2375,17 @@ object VectorSearch {
     out
   }
 
+  /** [[readPqCodebooks]]' inverse: one (subspace, cell, centroid) row
+    * per trained cell of `cb` — the `codebooks` table of the PQ and
+    * IVFPQ builds. */
+  private def codebookRows(spark: org.apache.spark.sql.SparkSession,
+                           cb: Array[Array[Array[Double]]]): DataFrame = {
+    import spark.implicits._
+    (for {
+      j <- cb.indices; c <- cb(j).indices; if cb(j)(c) != null
+    } yield (j, c, cb(j)(c).toSeq)).toDF("subspace", "cell", "centroid")
+  }
+
   /** APPEND an increment to a persisted PQ index without retraining —
     * the [[ivfAppendIndex]] discipline for the code table: codebooks
     * are the FROZEN artifact, increment vectors are encoded with the
@@ -2432,17 +2399,18 @@ object VectorSearch {
     * over the increment; the append writes only the increment's code
     * rows — a one-increment [[IndexCommit.commitDeltas]] cycle. */
   def pqAppendIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                    increment: DataFrame, retainGens: Int = 1): Unit = {
-    val meta = IndexCommit.readTable(spark, dir, "meta").head()
-    val (m, nCells, dim) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-    val bc = spark.sparkContext.broadcast(readPqCodebooks(
-      IndexCommit.readTable(spark, dir, "codebooks"), m, nCells))
+                    increment: DataFrame, retainGens: Int = 1): Unit =
     IndexCommit.commitDeltas(spark, dir, "pqAppendIndex", "vec_id",
-      Seq(increment), Seq("codes" -> ((dest: String) =>
-        pqEncode(increment, bc, m, nCells, dim).write.mode("overwrite")
-          .parquet(dest))),
-      None, retainGens)
-  }
+      Seq(increment), { prev =>
+        def table(t: String) = IndexCommit.readTableOf(spark, dir, prev, t)
+        val meta = table("meta").head()
+        val (m, nCells, dim) =
+          (meta.getInt(0), meta.getInt(1), meta.getInt(2))
+        val bc = spark.sparkContext.broadcast(
+          readPqCodebooks(table("codebooks"), m, nCells))
+        inc => Seq("codes" -> (pqEncode(inc, bc, m, nCells, dim).write
+          .mode("overwrite").parquet(_: String)))
+      }, None, retainGens)
 
   /** The PQ code rows (vec_id, codes) of `vectors` under the codebook
     * `bc` — the one encode of the build and the append: the
@@ -2764,36 +2732,21 @@ object VectorSearch {
     require(m * sub == dim, s"ivfPqWriteIndex: m=$m must divide dim=$dim")
     val (resid, centroids, _, bcCb) =
       ivfPqBuild(vectors, cellCol, m, nCells, dim, sub)
-    val cb = bcCb.value
-    IndexCommit.commit(spark, dir) { (gen, _) =>
-      resid.filter(_._4).mapPartitions { it =>
-          val cbv = bcCb.value
-          it.map { case (vid, cell, r, _) =>
-            (cell, vid, pqAssignKD(cbv, r, m, nCells, sub))
-          }
+    val codes = resid.filter(_._4).mapPartitions { it =>
+        val cbv = bcCb.value
+        it.map { case (vid, cell, r, _) =>
+          (cell, vid, pqAssignKD(cbv, r, m, nCells, sub))
         }
-        .toDF("cell", "vec_id", "codes")
-        .transform(IndexCommit.clusterForPartitionedWrite(_,
-          IndexCommit.partitionedWriteWidth(vectors), "cell",
-          centroids.size.toLong, "vec_id"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(IndexCommit.segmentPath(dir, "codes", gen))
-      spark.createDataset(centroids.toSeq).toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(IndexCommit.segmentPath(dir, "centroids", gen))
-      val rows = for {
-        j <- 0 until m; c <- 0 until nCells; if cb(j)(c) != null
-      } yield (j, c, cb(j)(c).toSeq)
-      spark.createDataset(rows).toDF("subspace", "cell", "centroid")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(IndexCommit.segmentPath(dir, "codebooks", gen))
-      Seq((m, nCells, dim)).toDF("m", "ncells", "dim")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(IndexCommit.segmentPath(dir, "meta", gen))
-      Seq("codes", "centroids", "codebooks", "meta")
-        .map(t => t -> Seq(s"$t-g$gen")).toMap
-    }
-    IndexCommit.gcUnreferenced(spark, dir, retainGens)
+      }
+      .toDF("cell", "vec_id", "codes")
+    IndexCommit.build(spark, dir, retainGens)(
+      "codes" -> writePartitioned(codes, vectors, "cell",
+        centroids.size.toLong),
+      "centroids" -> IndexCommit.oneFile(
+        spark.createDataset(centroids.toSeq).toDF("cell", "centroid")),
+      "codebooks" -> IndexCommit.oneFile(codebookRows(spark, bcCb.value)),
+      "meta" -> IndexCommit.oneFile(
+        Seq((m, nCells, dim)).toDF("m", "ncells", "dim")))
   }
 
   /** Serve IVFPQ top-k from a persisted index directory (see
@@ -2813,8 +2766,7 @@ object VectorSearch {
     val (m, nCells, dim) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
     val sub = dim / m
     val candCut = math.min(k.toLong * candMult, Int.MaxValue).toInt
-    val centroids = table("centroids")
-      .as[(Int, Array[Double])].collect().sortBy(_._1)
+    val centroids = loadCentroids(table("centroids"))
     val bcCent = spark.sparkContext.broadcast(centroids.toMap)
     val bcCb = spark.sparkContext.broadcast(
       readPqCodebooks(table("codebooks"), m, nCells))
@@ -2848,15 +2800,11 @@ object VectorSearch {
                     dim: Int = 64, retainGens: Int = 1): Unit = {
     val spark = vectors.sparkSession
     import spark.implicits._
-    IndexCommit.commit(spark, dir) { (gen, _) =>
-      mrlPrefixes(vectors, prefixDim).write.mode("overwrite")
-        .parquet(IndexCommit.segmentPath(dir, "prefix", gen))
-      Seq((prefixDim, dim)).toDF("prefix_dim", "dim")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(IndexCommit.segmentPath(dir, "meta", gen))
-      Map("prefix" -> Seq(s"prefix-g$gen"), "meta" -> Seq(s"meta-g$gen"))
-    }
-    IndexCommit.gcUnreferenced(spark, dir, retainGens)
+    IndexCommit.build(spark, dir, retainGens)(
+      "prefix" -> (mrlPrefixes(vectors, prefixDim).write.mode("overwrite")
+        .parquet(_: String)),
+      "meta" -> IndexCommit.oneFile(
+        Seq((prefixDim, dim)).toDF("prefix_dim", "dim")))
   }
 
   /** APPEND an increment to a persisted MRL prefix table — the last
@@ -2878,13 +2826,14 @@ object VectorSearch {
   def mrlApplyDeltas(spark: org.apache.spark.sql.SparkSession,
                      dir: String, increments: Seq[DataFrame],
                      deleteIds: Option[DataFrame] = None,
-                     retainGens: Int = 1): Unit = {
-    val prefixDim = IndexCommit.readTable(spark, dir, "meta").head().getInt(0)
+                     retainGens: Int = 1): Unit =
     IndexCommit.commitDeltas(spark, dir, "mrlApplyDeltas", "vec_id",
-      increments, increments.map(inc => "prefix" -> ((dest: String) =>
-        mrlPrefixes(inc, prefixDim).write.mode("overwrite").parquet(dest))),
-      deleteIds, retainGens)
-  }
+      increments, { prev =>
+        val prefixDim =
+          IndexCommit.readTableOf(spark, dir, prev, "meta").head().getInt(0)
+        inc => Seq("prefix" -> (mrlPrefixes(inc, prefixDim).write
+          .mode("overwrite").parquet(_: String)))
+      }, deleteIds, retainGens)
 
   /** The (vec_id, prefix) rows of `vectors` — the stateless MRL
     * "quantizer" of the build and the delta path: the first
@@ -2951,41 +2900,39 @@ object VectorSearch {
                        cellCol: String = "label",
                        retainGens: Int = 1): Unit = {
     import spark.implicits._
-    val meta = IndexCommit.readTable(spark, dir, "meta").head()
-    val (m, nCells, dim) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-    val sub = dim / m
-    val centroids = IndexCommit.readTable(spark, dir, "centroids")
-      .as[(Int, Array[Double])].collect().toMap
-    val bcCent = spark.sparkContext.broadcast(centroids)
-    val bcCb = spark.sparkContext.broadcast(readPqCodebooks(
-      IndexCommit.readTable(spark, dir, "codebooks"), m, nCells))
-    def encode(increment: DataFrame): DataFrame = increment
-      .select(col(cellCol).cast("int").as("cell"), col("vec_id"),
-        col("embedding"))
-      .filter(col("embedding").isNotNull)
-      .as[(Int, Long, Array[Float])]
-      .mapPartitions { it =>
-        val cents = bcCent.value
-        val cbv = bcCb.value
-        it.flatMap { case (cell, vid, e) =>
-          if (normK(e, dim) == 0) None // excluded from the served set
-          else cents.get(cell).map { c =>
-            val r = new Array[Double](dim)
-            var i = 0
-            while (i < dim) { r(i) = e(i).toDouble - c(i); i += 1 }
-            (cell, vid, pqAssignKD(cbv, r, m, nCells, sub))
-          }
-        }
-      }
-      .toDF("cell", "vec_id", "codes")
     IndexCommit.commitDeltas(spark, dir, "ivfPqApplyDeltas", "vec_id",
-      increments, increments.map(inc => "codes" -> ((dest: String) =>
-        IndexCommit.clusterForPartitionedWrite(encode(inc),
-            IndexCommit.partitionedWriteWidth(inc), "cell",
-            centroids.size.toLong, "vec_id")
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(dest))),
-      deleteIds, retainGens)
+      increments, { prev =>
+        def table(t: String) = IndexCommit.readTableOf(spark, dir, prev, t)
+        val meta = table("meta").head()
+        val (m, nCells, dim) =
+          (meta.getInt(0), meta.getInt(1), meta.getInt(2))
+        val sub = dim / m
+        val centroids = loadCentroids(table("centroids")).toMap
+        val bcCent = spark.sparkContext.broadcast(centroids)
+        val bcCb = spark.sparkContext.broadcast(
+          readPqCodebooks(table("codebooks"), m, nCells))
+        def encode(inc: DataFrame): DataFrame = inc
+          .select(col(cellCol).cast("int").as("cell"), col("vec_id"),
+            col("embedding"))
+          .filter(col("embedding").isNotNull)
+          .as[(Int, Long, Array[Float])]
+          .mapPartitions { it =>
+            val cents = bcCent.value
+            val cbv = bcCb.value
+            it.flatMap { case (cell, vid, e) =>
+              if (normK(e, dim) == 0) None // excluded from the served set
+              else cents.get(cell).map { c =>
+                val r = new Array[Double](dim)
+                var i = 0
+                while (i < dim) { r(i) = e(i).toDouble - c(i); i += 1 }
+                (cell, vid, pqAssignKD(cbv, r, m, nCells, sub))
+              }
+            }
+          }
+          .toDF("cell", "vec_id", "codes")
+        inc => Seq("codes" -> writePartitioned(encode(inc), inc, "cell",
+          centroids.size.toLong))
+      }, deleteIds, retainGens)
   }
 
   /** All vector pairs with cosine ≥ threshold — embedding near-dup.

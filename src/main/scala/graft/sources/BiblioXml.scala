@@ -15,33 +15,10 @@ object BiblioXml {
 
   // ---- OCLC Classify (ref oclc/classify.py:68-94, 253-341) ----
 
-  /** Response code from a Classify document (`//response/@code`). */
-  def classifyResponseCode(xml: Column): Column =
-    xpath_int(xml, lit("string(//*[local-name()='response']/@code)"))
-
-  /** Work identifiers from a multi-work response: each `<work>`'s owi
-    * attribute (ref `oclc/classify.py:81-94`). Returns an array. */
-  def classifyOwis(xml: Column): Column =
-    xpath(xml, lit("//*[local-name()='work']/@owi"))
-
-  /** Title/author of the single-work response header. */
-  def classifyTitle(xml: Column): Column =
-    xpath_string(xml, lit("string(//*[local-name()='work']/@title)"))
-  def classifyAuthor(xml: Column): Column =
-    xpath_string(xml, lit("string(//*[local-name()='work']/@author)"))
-
-  /** Most-popular DDC / LCC headings (ref `oclc/classify.py:271-341`:
-    * `ddc/mostPopular@sfa`, `lcc/mostPopular@sfa`). */
-  def classifyDdc(xml: Column): Column =
-    xpath_string(xml, lit("string(//*[local-name()='ddc']/*[local-name()='mostPopular']/@sfa)"))
-  def classifyLcc(xml: Column): Column =
-    xpath_string(xml, lit("string(//*[local-name()='lcc']/*[local-name()='mostPopular']/@sfa)"))
-
   /** Parse a Classify snapshot table (key, xml) into work rows:
     * one row per OWI with the shared title/author/ddc/lcc. ONE document
-    * parse per row (`XmlKernels.classifyDocs`) — the per-field xpath
-    * expressions above re-parse the doc once per call (6× here) and are
-    * kept for ad-hoc single-field extraction only. */
+    * parse per row (`XmlKernels.classifyDocs`), not one xpath
+    * expression per field, each of which would re-parse the document. */
   def parseClassify(snapshot: DataFrame, keyCol: String, xmlCol: String): DataFrame =
     XmlKernels.classifyDocs(snapshot, keyCol, xmlCol)
       .select(col("key"), col("response_code"), col("title"), col("author"),
@@ -59,12 +36,6 @@ object BiblioXml {
   /** Cluster VIAF id (`//viafID`). */
   def viafId(xml: Column): Column =
     xpath_string(xml, lit("//*[local-name()='viafID']/text()"))
-
-  /** All sort names from MARC21 100$a datafields in a cluster (ref
-    * `viaf.py:584-604` sort_names_for_cluster). */
-  def viafSortNames(xml: Column): Column =
-    xpath(xml, lit(
-      "//*[local-name()='datafield'][@dtype='MARC21'][@tag='100']/*[local-name()='subfield'][@code='a']/text()"))
 
   /** Work titles attached to the cluster (ref `viaf.py:630-634`). */
   def viafTitles(xml: Column): Column =

@@ -13,29 +13,14 @@ import org.apache.spark.sql.functions._
   */
 object HtmlScrape {
 
-  /** Page title: `<span class="PageHeader2">...</span>`. */
-  def pageHeader(html: Column): Column =
-    xpath_string(html, lit("//span[@class='PageHeader2']/text()"))
-
-  /** All review texts: `<td class="text">...</td>` cells (the
-    * reference's table walk, ref `content_cafe.py:308-346`). */
-  def reviewTexts(html: Column): Column =
-    xpath(html, lit("//td[@class='text']/text()"))
-
-  /** Regexp fallback for non-well-formed pages: first match of the
-    * PageHeader2 span body. */
-  def pageHeaderRegex(html: Column): Column =
-    regexp_extract(html,
-      """<span class="PageHeader2">([^<]*)</span>""", 1)
-
   /** Bad-title sentinel filter (ref `content_cafe.py:129-131`: the
     * service serves placeholder pages for unknown ISBNs). */
   val BadTitles: Seq[String] = Seq("Unknown", "", "N/A")
 
   /** Title + review rows per page. ONE scanner pass per document
     * (`XmlKernels.scrapedPages` — tag-soup tolerant, like the
-    * reference's BeautifulSoup walk); the xpath expressions above
-    * re-parse the DOM per call and are kept for ad-hoc extraction. */
+    * reference's BeautifulSoup walk), not one xpath expression per
+    * field, each of which would re-parse the DOM. */
   def scrapeReviews(snapshot: DataFrame, keyCol: String,
                     htmlCol: String): DataFrame =
     XmlKernels.scrapedPages(snapshot, keyCol, htmlCol)

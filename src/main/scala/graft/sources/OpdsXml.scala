@@ -5,32 +5,14 @@ import org.apache.spark.sql.functions._
 
 /** S9/S10 — OPDS/Atom feed parse and generation (ref
   * `controller.py:566-597` feedparser input, `controller.py:474-503`
-  * AcquisitionFeed output), plus the xpath building blocks shared with
-  * the VIAF/Classify XML extractors (F13). Parsing uses Spark's
-  * built-in `xpath_*` SQL functions — codegen'd, no external XML
-  * library.
+  * AcquisitionFeed output). Parsing is one pull-parse pass per
+  * document ([[XmlKernels]]) — no external XML library.
   */
 object OpdsXml {
 
-  /** Extract one entry's scalar fields from an Atom `<entry>` document
-    * column. Namespace-agnostic via local-name() so default-namespaced
-    * Atom parses the same as bare XML.
-    */
-  def entryId(xml: Column): Column =
-    expr_xpath(xml, "//*[local-name()='entry']/*[local-name()='id']/text()")
-  def entryTitle(xml: Column): Column =
-    expr_xpath(xml, "//*[local-name()='entry']/*[local-name()='title']/text()")
-  def entryAuthor(xml: Column): Column =
-    expr_xpath(xml,
-      "//*[local-name()='entry']/*[local-name()='author']/*[local-name()='name']/text()")
-
-  private def expr_xpath(xml: Column, path: String): Column =
-    xpath_string(xml, lit(path))
-
   /** Parse a DataFrame of single-entry OPDS documents into rows — one
     * StAX pass per document (see [[XmlKernels.opdsEntryScalars]]; the
-    * per-column xpath form re-parsed each document three times). The
-    * xpath accessors above remain the one-off/ad-hoc API.
+    * per-column xpath form re-parsed each document three times).
     */
   def parseEntries(df: DataFrame, xmlCol: String): DataFrame =
     XmlKernels.opdsEntryScalars(df, xmlCol)
@@ -61,13 +43,4 @@ object OpdsXml {
       lit("</id><title>"), xmlEscape(col(titleCol)),
       lit("</title><author><name>"), xmlEscape(col(authorCol)),
       lit("</name></author></entry>")).as("entry_xml"))
-
-  /** Opensearch totals for a feed page (ref `controller.py:491-503`):
-    * the page plus a broadcast total — computed once, not per row. */
-  def feedPage(entries: DataFrame, orderCol: String, pageSize: Int): DataFrame = {
-    val total = entries.agg(count(lit(1)).as("total_results"))
-    graft.operators.PlanHints.withScalars(entries, total)
-      .orderBy(col(orderCol))
-      .limit(pageSize)
-  }
 }

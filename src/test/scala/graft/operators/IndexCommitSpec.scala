@@ -570,6 +570,51 @@ class IndexCommitSpec extends SparkSpec {
     } finally rmRf(dir)
   }
 
+  test("a failed LSH rebuild over a live index commits nothing; a " +
+       "clean retry converges and GC leaves no orphan segment") {
+    val emb = vecs.select($"vec_id", $"embedding")
+    val qs = emb.filter($"vec_id" % 10 === 0)
+      .select($"vec_id".as("qid"), $"embedding".as("qe"))
+    val dir = tmpDir("graft_crash_rebuild")
+    val clean = tmpDir("graft_crash_rebuild_clean")
+    def serve(d: String = dir) = VectorSearch.lshServe(spark, d, qs, 4)
+      .orderBy("qid", "rank").collect().toSeq
+    try {
+      VectorSearch.lshWriteIndex(emb.filter($"vec_id" % 7 =!= 0), dir)
+      val gen = IndexCommit.currentManifest(spark, dir).get.gen
+      val before = serve()
+      // the bucket write fails on the executors; the overlapped meta
+      // write (driver-sized, no poisoned input) succeeds
+      val poisoned = emb.as[(Long, Array[Float])]
+        .map { _: (Long, Array[Float]) =>
+          throw new IllegalStateException("injected executor crash")
+          (0L, Array.empty[Float]): (Long, Array[Float])
+        }
+        .toDF("vec_id", "embedding")
+      val crash = intercept[Throwable](
+        VectorSearch.lshWriteIndex(poisoned, dir))
+      assert(Iterator.iterate(crash)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("injected")),
+        crash.toString)
+      assert(new java.io.File(
+        IndexCommit.segmentPath(dir, "meta", gen + 1)).isDirectory,
+        "the overlapped meta write should have staged its segment")
+      assert(IndexCommit.currentManifest(spark, dir).get.gen == gen)
+      assert(serve() == before)
+      // a clean retry re-stages the same generation over the orphans
+      VectorSearch.lshWriteIndex(emb, dir)
+      val m = IndexCommit.currentManifest(spark, dir).get
+      assert(m.gen == gen + 1)
+      // the retried index serves what a never-crashed build serves
+      VectorSearch.lshWriteIndex(emb, clean)
+      assert(serve() == serve(clean))
+      val live = m.tables.values.flatten.toSet
+      val onDisk = new java.io.File(dir).listFiles().map(_.getName)
+        .filter(n => n.matches(".+-g\\d+")).toSet
+      assert(onDisk == live, s"on disk $onDisk, referenced $live")
+    } finally { rmRf(dir); rmRf(clean) }
+  }
+
   test("cloneSnapshot: byte-copied promotion is independent, " +
        "time-travels, and stays collision-free under later commits") {
     val src = tmpDir("graft_clone_src")
@@ -969,31 +1014,52 @@ class IndexCommitSpec extends SparkSpec {
   test("a vector serve reads every table at ONE manifest generation") {
     val queries = vecs.filter($"vec_id" <= 3L)
       .select($"vec_id".as("qid"), $"embedding".as("qe"))
-    val serves: Seq[(String, String => Unit, String => DataFrame)] = Seq(
-      ("lsh", VectorSearch.lshWriteIndex(vecs, _),
-        VectorSearch.lshServe(spark, _, queries, 3)),
-      ("pq", VectorSearch.pqWriteIndex(vecs, _),
-        VectorSearch.pqServe(spark, _, vecs, queries, 3)),
-      ("ivfPq", VectorSearch.ivfPqWriteIndex(vecs, _),
-        VectorSearch.ivfPqServe(spark, _, vecs, queries, 3)),
-      ("mrl", VectorSearch.mrlWriteIndex(vecs, _),
-        VectorSearch.mrlServe(spark, _, vecs, queries, 3)),
-      ("ivf", VectorSearch.ivfWriteIndex(vecs, _),
-        VectorSearch.ivfServe(spark, _, queries, 3)))
-    for ((name, build, serve) <- serves) {
+    val base = vecs.filter($"vec_id" <= 36L)
+    val inc = vecs.filter($"vec_id" > 36L)
+    // (name, build, serve, one-increment append, health-card rows table)
+    val families: Seq[(String, String => Unit, String => DataFrame,
+        String => Unit, String)] = Seq(
+      ("lsh", VectorSearch.lshWriteIndex(base, _),
+        VectorSearch.lshServe(spark, _, queries, 3),
+        VectorSearch.lshAppendIndex(spark, _, inc), "buckets"),
+      ("pq", VectorSearch.pqWriteIndex(base, _),
+        VectorSearch.pqServe(spark, _, vecs, queries, 3),
+        VectorSearch.pqAppendIndex(spark, _, inc), "codes"),
+      ("ivfPq", VectorSearch.ivfPqWriteIndex(base, _),
+        VectorSearch.ivfPqServe(spark, _, vecs, queries, 3),
+        VectorSearch.ivfPqAppendIndex(spark, _, inc), "codes"),
+      ("mrl", VectorSearch.mrlWriteIndex(base, _),
+        VectorSearch.mrlServe(spark, _, vecs, queries, 3),
+        VectorSearch.mrlAppendIndex(spark, _, inc), "prefix"),
+      ("ivf", VectorSearch.ivfWriteIndex(base, _),
+        VectorSearch.ivfServe(spark, _, queries, 3),
+        VectorSearch.ivfAppendIndex(spark, _, inc), "cells"))
+    for ((name, build, serve, append, rowsTable) <- families) {
       val dir = tmpDir(s"graft_pin_$name")
+      def manifestName = f"_manifest_g${
+        IndexCommit.currentManifest(spark, dir).get.gen}%012d"
       try {
         build(dir)
         // a tombstone table makes the serve read its mask too
         VectorSearch.deleteVectors(spark, dir, Seq(5L).toDF("vec_id"))
-        val gen = IndexCommit.currentManifest(spark, dir).get.gen
+        // the append encodes against the generation it extends,
+        // resolved once: its geometry/centroid/codebook reads and the
+        // commit share one open of the base manifest
+        val prev = manifestName
+        val appendOpens = manifestOpensDuring(append(dir))
+        assert(appendOpens.count(_ == prev) == 1,
+          s"$name append opened $appendOpens")
+        val cur = manifestName
         var served = Seq.empty[Long]
         val opened = manifestOpensDuring {
           served = serve(dir).select($"vec_id").as[Long].collect().toSeq
         }
-        assert(opened == Seq(f"_manifest_g$gen%012d"),
-          s"$name serve opened $opened")
+        assert(opened == Seq(cur), s"$name serve opened $opened")
         assert(served.nonEmpty && !served.contains(5L), s"$name: $served")
+        val cardOpens = manifestOpensDuring {
+          VectorSearch.healthCard(spark, dir, rowsTable).collect(): Unit
+        }
+        assert(cardOpens == Seq(cur), s"$name health card opened $cardOpens")
       } finally rmRf(dir)
     }
   }
